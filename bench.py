@@ -20,7 +20,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from ubeardw_databricks_lakehouse_spark.core.session import get_spark, ship_package
+from ubeardw_databricks_lakehouse_spark.core.session import (
+    checkpoint_scope,
+    get_spark,
+    ship_package,
+)
 from ubeardw_databricks_lakehouse_spark.plans.registry import QUERIES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -162,25 +166,10 @@ def main() -> None:
     # comparison signal (single reps carry a documented ±10-13% spread;
     # see the SCALING.md recheck protocol). The driver's per-round run
     # stays single-rep for wall-clock budget; medians are for analysis.
-    reps = max(1, int(os.environ.get("BENCH_REPS", "1")))
     timings: dict[str, float] = {}
     for name in headline:
-        q = by_name[name]
-        samples = []
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            materialize(q.fn(spark, SF_DIR))
-            samples.append(time.perf_counter() - t0)
-        samples.sort()
-        mid = len(samples) // 2
-        med = (
-            samples[mid]
-            if len(samples) % 2
-            else (samples[mid - 1] + samples[mid]) / 2
-        )
-        timings[name] = round(med, 3)
-        if reps > 1:  # per-entry [min, max] — within-run noise evidence
-            _SPREAD[name] = [round(samples[0], 3), round(samples[-1], 3)]
+        fn = by_name[name].fn
+        timings[name] = _time_entry(name, lambda: fn(spark, SF_DIR))
 
     # end-to-end medallion pipeline throughput: synth CDC (2k trips,
     # ~13k events) -> bronze -> silver -> full gold star schema
@@ -200,23 +189,12 @@ def main() -> None:
         q_training_export,
     )
 
+    # the checkpointed status frame is O(corpus ids) — tiny
     status = q_curated_corpus(spark, SF_DIR).localCheckpoint(eager=True)
-    samples = []
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        materialize(q_training_export(spark, SF_DIR, status=status))
-        samples.append(time.perf_counter() - t0)
-    samples.sort()
-    mid = len(samples) // 2
-    timings["q_training_export_amortized"] = round(
-        samples[mid]
-        if len(samples) % 2
-        else (samples[mid - 1] + samples[mid]) / 2,
-        3,
-    )  # the checkpointed status frame is O(corpus ids) — tiny
-    if reps > 1:
-        _SPREAD["q_training_export_amortized"] = [
-            round(samples[0], 3), round(samples[-1], 3)]
+    timings["q_training_export_amortized"] = _time_entry(
+        "q_training_export_amortized",
+        lambda: q_training_export(spark, SF_DIR, status=status),
+    )
 
     # incremental near-dup amortization (the r12 registry addition):
     # the LSH band index is the warehouse's stored state — built off
@@ -237,25 +215,10 @@ def main() -> None:
     nd_index = lsh_band_index(
         minhash_signatures(nd_base, n_hashes=8, shingle_n=2)
     ).localCheckpoint(eager=True)
-    samples = []
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        pairs_nd, _bands_nd = neardup_upsert(
-            nd_index, nd_delta, nd_base, threshold=0.5
-        )
-        materialize(pairs_nd)
-        samples.append(time.perf_counter() - t0)
-    samples.sort()
-    mid = len(samples) // 2
-    timings["q_neardup_upsert_amortized"] = round(
-        samples[mid]
-        if len(samples) % 2
-        else (samples[mid - 1] + samples[mid]) / 2,
-        3,
+    timings["q_neardup_upsert_amortized"] = _time_entry(
+        "q_neardup_upsert_amortized",
+        lambda: neardup_upsert(nd_index, nd_delta, nd_base, threshold=0.5)[0],
     )
-    if reps > 1:
-        _SPREAD["q_neardup_upsert_amortized"] = [
-            round(samples[0], 3), round(samples[-1], 3)]
 
     # t-digest merge-reuse amortization (r10 verdict #6): a warehouse
     # stores per-source digest rows once; every later rollup re-clusters
@@ -282,21 +245,7 @@ def main() -> None:
         ("q_tdigest_rollup_rebuild",
          lambda: tdigest_quantiles(tdigest_build(docs, "n_chars", delta=100.0), qs)),
     ):
-        samples = []
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            materialize(frame())
-            samples.append(time.perf_counter() - t0)
-        samples.sort()
-        mid = len(samples) // 2
-        timings[entry] = round(
-            samples[mid]
-            if len(samples) % 2
-            else (samples[mid - 1] + samples[mid]) / 2,
-            3,
-        )
-        if reps > 1:
-            _SPREAD[entry] = [round(samples[0], 3), round(samples[-1], 3)]
+        timings[entry] = _time_entry(entry, frame)
 
     import tempfile
 
@@ -334,6 +283,28 @@ _START_LOAD: float = 0.0
 _DEGRADED: bool = False
 _START_CPU: tuple[int, int] | None = None
 _SPREAD: dict[str, list[float]] = {}
+_REPS = max(1, int(os.environ.get("BENCH_REPS", "1")))
+
+
+def _time_entry(name: str, thunk) -> float:
+    """Median wall seconds of materializing ``thunk()`` over BENCH_REPS
+    reps. Each rep runs inside its own ``checkpoint_scope``; the scope
+    releases the rep's checkpoints after the sample is taken, outside
+    the timed region, so reps do not accrete pinned blocks. Multi-rep
+    runs also record the entry's [min, max] in ``_SPREAD`` — the
+    within-run noise evidence."""
+    samples = []
+    for _ in range(_REPS):
+        with checkpoint_scope():
+            t0 = time.perf_counter()
+            materialize(thunk())
+            samples.append(time.perf_counter() - t0)
+    samples.sort()
+    mid = len(samples) // 2
+    med = samples[mid] if len(samples) % 2 else (samples[mid - 1] + samples[mid]) / 2
+    if _REPS > 1:
+        _SPREAD[name] = [round(samples[0], 3), round(samples[-1], 3)]
+    return round(med, 3)
 
 
 def _read_cpu_stat() -> tuple[int, int] | None:
@@ -368,7 +339,7 @@ def _emit(timings: dict[str, float], sf: str) -> None:
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "loadavg": [round(load1, 2), round(load5, 2), round(load15, 2)],
         "loadavg_start": round(_START_LOAD, 2),
-        "reps": max(1, int(os.environ.get("BENCH_REPS", "1"))),
+        "reps": _REPS,
     }
     # CPU-steal fraction over the whole run (r13 verdict #2): >0.02 or
     # so means the hypervisor took cycles mid-run and wall-clock diffs

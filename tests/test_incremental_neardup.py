@@ -5,13 +5,16 @@ idempotent."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from ubeardw_databricks_lakehouse_spark.core.session import checkpoint_scope
 from ubeardw_databricks_lakehouse_spark.operators.dedup import (
     lsh_band_index,
     minhash_signatures,
     neardup_verified_pairs,
 )
+from ubeardw_databricks_lakehouse_spark.plans.registry import QUERIES
 from ubeardw_databricks_lakehouse_spark.storage.lakehouse import Lakehouse
 from ubeardw_databricks_lakehouse_spark.streaming.incremental_neardup import (
     start_incremental_neardup,
@@ -277,4 +280,31 @@ def test_incremental_neardup_releases_per_batch_pins(spark, tmp_path):
     )
     assert counts[-1] - counts[0] <= 1, (
         f"pin count rising per wave: {counts}"
+    )
+
+
+@pytest.mark.parametrize(
+    "name", ["q_bm25_search", "q_hybrid_search_rrf", "q_triangle_suppliers"]
+)
+def test_scoped_bench_reps_release_query_checkpoints(spark, name):
+    """Scope tripwire, the one-shot twin of the streaming tripwire
+    above: registry queries take query-private checkpoints (BM25's
+    hit-filtered tf, the triangle edge sets) that GC never frees. Run
+    the way bench.py times a multi-rep entry — each rep materialized to
+    the noop sink inside its own checkpoint_scope — the session's
+    persisted-RDD count must not grow."""
+    fn = {q.name: q.fn for q in QUERIES}[name]
+
+    def persisted() -> int:
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    base = persisted()
+    for _ in range(5):
+        with checkpoint_scope():
+            fn(spark, "/root/testdata/sf0.001").write.format("noop").mode(
+                "overwrite"
+            ).save()
+    assert persisted() <= base, (
+        f"{name}: persisted RDDs grew {base} -> {persisted()} over 5 "
+        "scoped reps — a query-private checkpoint escaped the scope"
     )

@@ -2638,6 +2638,107 @@ def test_release_local_checkpoint_frees_blocks(spark):
     release_local_checkpoint(b)
 
 
+def test_checkpoint_scope_releases_on_exit_and_nests(spark):
+    """checkpoint() outside any scope is a plain eager localCheckpoint
+    (nothing frees it); inside scopes a frame belongs to the innermost
+    one and is released when that scope exits — also when the block
+    raises."""
+    import pytest
+
+    from ubeardw_databricks_lakehouse_spark.core.session import (
+        checkpoint,
+        checkpoint_scope,
+        release_local_checkpoint,
+    )
+
+    def n_persisted():
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    base = n_persisted()
+    loose = checkpoint(spark.range(10))
+    with checkpoint_scope():
+        outer = checkpoint(spark.range(20))
+        with checkpoint_scope():
+            checkpoint(spark.range(30))
+            assert n_persisted() == base + 3
+        assert n_persisted() == base + 2
+        assert outer.count() == 20
+    assert n_persisted() == base + 1
+    with pytest.raises(ZeroDivisionError):
+        with checkpoint_scope():
+            checkpoint(spark.range(40))
+            1 / 0
+    assert n_persisted() == base + 1
+    assert loose.count() == 10
+    release_local_checkpoint(loose)
+    assert n_persisted() == base
+
+
+def test_checkpoint_scope_is_per_thread(spark):
+    """A scope closing on one thread must not release a frame that
+    another thread registered in its own, still-open scope."""
+    import threading
+
+    from ubeardw_databricks_lakehouse_spark.core.session import (
+        checkpoint,
+        checkpoint_scope,
+    )
+
+    def n_persisted():
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    registered, finish = threading.Event(), threading.Event()
+    box = {}
+
+    def worker():
+        with checkpoint_scope():
+            box["df"] = checkpoint(spark.range(50))
+            registered.set()
+            finish.wait(120)
+
+    base = n_persisted()
+    t = threading.Thread(target=worker)
+    with checkpoint_scope():
+        t.start()
+        assert registered.wait(120)
+        checkpoint(spark.range(10))
+        assert n_persisted() == base + 2
+    try:
+        # only this thread's frame went; the worker's is still pinned
+        assert n_persisted() == base + 1
+        assert box["df"].count() == 50
+    finally:
+        finish.set()
+        t.join(120)
+    assert n_persisted() == base
+
+
+def test_prebuilt_ivfpq_index_survives_scoped_reps(spark):
+    """The cached IVFADC index is long-lived state (plain checkpoints
+    owned by invalidate_ivfpq_index): building it inside one bench-rep
+    scope and searching it from the next must return identical rows —
+    a scope that freed the index would make the second rep recompute
+    from an empty lineage."""
+    from ubeardw_databricks_lakehouse_spark.core.session import checkpoint_scope
+    from ubeardw_databricks_lakehouse_spark.plans.llm_q import (
+        invalidate_ivfpq_index,
+        q_embedding_topk_ivfpq_search,
+    )
+
+    sf = "/root/testdata/sf0.001"
+    invalidate_ivfpq_index(spark, sf)
+    reps = []
+    try:
+        for _ in range(2):
+            with checkpoint_scope():
+                reps.append(sorted(
+                    tuple(r) for r in q_embedding_topk_ivfpq_search(spark, sf).collect()
+                ))
+    finally:
+        invalidate_ivfpq_index(spark, sf)
+    assert reps[0] and reps[0] == reps[1]
+
+
 # ---------------------------------------------------------------------------
 # Incremental connected-components maintenance (r13): cc_upsert
 # ---------------------------------------------------------------------------

@@ -768,3 +768,81 @@ def test_broadcast_gate_follows_session_budget(spark):
         assert {(r.node, r.triangles) for r in shuffled.collect()} == base
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+class _Conf:
+    def __init__(self, values):
+        self.values = values
+
+    def get(self, key, *default):
+        if key in self.values:
+            return self.values[key]
+        if default:
+            return default[0]
+        raise KeyError(key)
+
+
+class _JvmlessSession:
+    """The Spark Connect shape: public conf only, no JVM handle."""
+
+    def __init__(self, **conf):
+        self.conf = _Conf({
+            "spark.sql.autoBroadcastJoinThreshold": conf.pop("threshold", "10m"),
+            **{f"spark.{k}.memory": v for k, v in conf.items()},
+        })
+
+    @property
+    def sparkContext(self):
+        raise RuntimeError("no JVM handle on this session")
+
+
+def test_broadcast_rows_parses_threshold_strings():
+    """The threshold is read through spark.conf as a Spark byte string;
+    the budget is max(threshold, heap/32), rows = budget / (16 x 4)."""
+    from ubeardw_databricks_lakehouse_spark.core.session import (
+        resolve_broadcast_rows,
+    )
+
+    mib = 1 << 20
+    assert resolve_broadcast_rows(_JvmlessSession(threshold="-1"), 16) == 0
+    # 64 MiB heap -> heap/32 = 2 MiB < the 10 MiB threshold
+    small = _JvmlessSession(threshold="10m", driver="64m")
+    assert resolve_broadcast_rows(small, 16) == 10 * mib // 64
+    assert resolve_broadcast_rows(
+        _JvmlessSession(threshold="10485760b", driver="64m"), 16
+    ) == 10 * mib // 64
+    assert resolve_broadcast_rows(
+        _JvmlessSession(threshold="1g", driver="64m"), 16
+    ) == 1024 * mib // 64
+
+
+def test_broadcast_rows_degrade_without_jvm_and_bound_by_smaller_heap():
+    """No JVM handle: the heap comes from the configured memory sizes
+    (Spark's 1 GiB default when unset) instead of raising. A small
+    driver next to big executors bounds the budget — an explicit
+    broadcast is hydrated on the driver first."""
+    from ubeardw_databricks_lakehouse_spark.core.session import (
+        resolve_broadcast_rows,
+    )
+
+    mib = 1 << 20
+    assert resolve_broadcast_rows(_JvmlessSession(threshold="1m"), 16) == 32 * mib // 64
+    big = _JvmlessSession(threshold="1m", driver="16g", executor="16g")
+    assert resolve_broadcast_rows(big, 16) == 512 * mib // 64
+    for asym in (
+        _JvmlessSession(threshold="1m", driver="1g", executor="16g"),
+        _JvmlessSession(threshold="1m", driver="16g", executor="1024"),  # MiB
+    ):
+        assert resolve_broadcast_rows(asym, 16) == 32 * mib // 64
+
+
+def test_broadcast_rows_unchanged_on_the_shipped_local_session(spark):
+    """local[n]: no executor memory conf, so the heap is the driver
+    JVM's own maxMemory — the budget the gate always derived here."""
+    from ubeardw_databricks_lakehouse_spark.core.session import (
+        resolve_broadcast_rows,
+    )
+
+    heap = spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
+    thr = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold").rstrip("b"))
+    assert resolve_broadcast_rows(spark, 16) == min(max(thr, heap // 32), 2 << 30) // 64

@@ -53,6 +53,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from ubeardw_databricks_lakehouse_spark.core.session import (
+        checkpoint_scope,
         get_spark,
         release_local_checkpoint,
         ship_package,
@@ -97,15 +98,13 @@ def main() -> None:
 
     def timed_upsert(docs_b, idx, docs_d):
         stamp = load_stamp()
-        pins = []
-        t0 = time.perf_counter()
-        pairs, _bands = neardup_upsert(
-            idx, docs_d, docs_b, threshold=0.5, hash_fn="xxhash64", pins=pins
-        )
-        n_pairs = pairs.count()
-        wall = time.perf_counter() - t0
-        for p in pins:  # rung-private intermediates: free across rungs
-            release_local_checkpoint(p)
+        with checkpoint_scope():  # rung-private intermediates: free across rungs
+            t0 = time.perf_counter()
+            pairs, _bands = neardup_upsert(
+                idx, docs_d, docs_b, threshold=0.5, hash_fn="xxhash64"
+            )
+            n_pairs = pairs.count()
+            wall = time.perf_counter() - t0
         return wall, n_pairs, stamp
 
     results = []

@@ -21,8 +21,11 @@ Scale notes (100 TB design intent):
 from __future__ import annotations
 
 import os
+import re
+import threading
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -119,6 +122,47 @@ def get_spark(
     return builder.getOrCreate()
 
 
+_SCOPES = threading.local()
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint(eager=True)``, registered with the innermost
+    ``checkpoint_scope`` open on this thread (if any) so the scope frees
+    its blocks on exit. With no scope open it is a plain eager local
+    checkpoint. Long-lived state — a frame that outlives the unit of
+    work that builds it, like the cached ivfpq index — must use plain
+    ``localCheckpoint`` and an explicit owner release instead."""
+    out = df.localCheckpoint(eager=True)
+    stack = getattr(_SCOPES, "stack", None)
+    if stack:
+        stack[-1].append(out)
+    return out
+
+
+@contextmanager
+def checkpoint_scope():
+    """Lifetime of every ``checkpoint`` taken on this thread inside the
+    block: on exit (normal or raised) each one is released with
+    ``release_local_checkpoint``. The owner of a unit of work — a bench
+    rep, a foreachBatch call, an index build — opens the scope; the
+    operators it calls just ``checkpoint``. Scopes nest (a frame belongs
+    to the innermost one) and are per thread. Anything derived from a
+    scoped checkpoint must be consumed (written, collected, or
+    re-checkpointed outside the scope's frames) before the block ends:
+    a read after release recomputes from an empty lineage."""
+    if not hasattr(_SCOPES, "stack"):
+        _SCOPES.stack = []
+    stack = _SCOPES.stack
+    frames: list[DataFrame] = []
+    stack.append(frames)
+    try:
+        yield
+    finally:
+        stack.pop()
+        for df in frames:
+            release_local_checkpoint(df)
+
+
 def release_local_checkpoint(df, allow_projection: bool = False) -> bool:
     """Free the pinned blocks of an eagerly ``localCheckpoint``-ed
     DataFrame NOW instead of waiting for the JVM ContextCleaner.
@@ -126,31 +170,28 @@ def release_local_checkpoint(df, allow_projection: bool = False) -> bool:
     ``df.unpersist()`` does NOT release checkpoint blocks (it targets
     the cache manager, and a checkpointed frame is a LogicalRDD, not
     an InMemoryRelation) and dropping the Python reference frees them
-    only on an eventual GC cycle — measured on this runtime: blocks
-    still pinned after del + gc.collect() + System.gc(). Long
-    iterative loops (k-core peel, CC rounds, multi-rung stress
-    ladders) that hold every superseded round's edge set this way
-    exhaust unified memory at the 10^7-row scale (the r10 PPS-ladder
-    GC thrash, and the kcore 32M OOM that motivated this helper).
+    only on an eventual GC cycle — blocks stay pinned after del +
+    gc.collect() + System.gc() on this runtime, so a long-lived
+    session accretes every checkpoint it never releases.
+
+    Call sites rarely need this directly: take query- and call-private
+    checkpoints with ``checkpoint`` and let the owner's
+    ``checkpoint_scope`` release them. Direct calls remain for two
+    cases — iterative loops releasing the round they just superseded
+    (bounding memory within one call), and owners of long-lived state
+    retiring it (``plans.llm_q.invalidate_ivfpq_index``).
 
     Only call on a frame that is truly dead — a checkpointed frame
     read after release recomputes from an EMPTY lineage and returns
     wrong results. Returns True when blocks were actually released,
     False for a no-op. Accepts the checkpoint frame itself OR — with
     ``allow_projection=True`` — a plan over exactly one checkpoint
-    leaf (e.g. the ``.drop()`` projection an iterative loop carries —
-    caught by pytest: the root-only check silently no-opped on those
-    from round 2 on); multi-leaf plans are always left alone (another
-    leaf might be live).
-
-    ``allow_projection`` defaults to False because the single-leaf
-    path cannot tell whether that leaf checkpoint is SHARED with
-    another live DataFrame (two projections of one checkpoint, one
-    still in use): releasing it makes later reads of the surviving
-    frame silently recompute from the empty lineage. Opt in only when
-    the caller owns every derivation of the checkpoint — as the
-    in-repo iterative loops do, each releasing a round-private frame
-    it created and superseded itself.
+    leaf (e.g. the ``.drop()`` projection an iterative loop carries);
+    multi-leaf plans are always left alone (another leaf might be
+    live). ``allow_projection`` defaults to False because the
+    single-leaf path cannot tell whether that leaf checkpoint is
+    SHARED with another live DataFrame; opt in only when the caller
+    owns every derivation of the checkpoint.
     """
     try:
         plan = df._jdf.queryExecution().analyzed()
@@ -168,6 +209,53 @@ def release_local_checkpoint(df, allow_projection: bool = False) -> bool:
     return False
 
 
+_BYTE_UNITS = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30,
+               "t": 1 << 40, "p": 1 << 50}
+
+
+def _byte_string(value: str, unit: int = 1) -> int:
+    """Bytes in a Spark size string: ``"-1"``, ``"10485760b"``,
+    ``"10m"``, ``"64MB"``, ``"1g"``. A bare number counts in ``unit``
+    bytes (1 for size confs; memory confs such as
+    ``spark.executor.memory`` read a bare number as MiB)."""
+    m = re.fullmatch(r"(-?\d+)\s*([bkmgtp]?)b?", value.strip().lower())
+    if m is None:
+        raise ValueError(f"not a Spark byte string: {value!r}")
+    num, suffix = int(m.group(1)), m.group(2)
+    return num * (_BYTE_UNITS[suffix] if suffix else unit)
+
+
+def _broadcast_threshold(spark) -> int:
+    try:
+        return _byte_string(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+    except Exception:
+        return 10 * 1024 * 1024  # planner default — assume broadcasts allowed
+
+
+def _heap_bytes(spark) -> int:
+    """min(driver heap, executor heap): an explicit ``F.broadcast`` is
+    collected and hydrated on the driver before it ships, so a small
+    driver next to big executors bounds the budget. The driver heap is
+    the JVM's own ``maxMemory`` when a JVM handle exists, else the
+    configured ``spark.driver.memory``; the executor heap is the
+    configured ``spark.executor.memory`` (unset in local mode, where
+    the driver JVM is the executor). Unknowable parts fall back to
+    Spark's 1 GiB default."""
+    mib = 1 << 20
+    try:
+        driver = int(spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory())
+    except Exception:
+        try:
+            driver = _byte_string(spark.conf.get("spark.driver.memory", "1g"), mib)
+        except Exception:
+            driver = 1 << 30
+    try:
+        executor = _byte_string(spark.conf.get("spark.executor.memory"), mib)
+    except Exception:  # unset: local mode, the driver JVM is the executor
+        executor = driver
+    return min(driver, executor)
+
+
 def resolve_broadcast_rows(spark, bytes_per_row: int, hydration: int = 4) -> int:
     """Session-derived ROW budget for the iterative operators' explicit
     broadcasts (pagerank's rank vector, LPA's label vector, the
@@ -182,37 +270,26 @@ def resolve_broadcast_rows(spark, bytes_per_row: int, hydration: int = 4) -> int
       (``spark.sql.autoBroadcastJoinThreshold`` < 0) -> 0: the operator
       falls back to its shuffle path — the explicit hint must respect
       the session-wide opt-out (pinned by a plan test).
-    - otherwise ``budget = max(threshold, heap/32)`` bytes: never less
+    - otherwise ``budget = max(threshold, heap/32)`` bytes, with
+      ``heap = min(driver, executor)`` (``_heap_bytes``): never less
       than what the session already authorizes the planner to broadcast
-      on its own, at most ~3% of the executor heap per relation (a
-      hydrated hash relation must coexist with execution memory; guide
-      §3.1 "a few hundred MB is usually fine, multiple GB is asking
-      for OOMs"), capped well under Spark's 8 GB broadcast hard limit.
+      on its own, at most ~3% of the heap per relation (a hydrated hash
+      relation must coexist with execution memory; guide §3.1 "a few
+      hundred MB is usually fine, multiple GB is asking for OOMs"),
+      capped well under Spark's 8 GB broadcast hard limit.
     - rows = budget / (``bytes_per_row`` × ``hydration``): hydration 4x
       covers the unsafe-row + hash-relation overhead on narrow rows.
 
-    At the shipped 8 GB local session this lands within ~5% of the r13
-    4M-row literal for 16-byte edge rows — same bench behavior, now a
-    function of the config instead of a constant tuned to it.
+    Only public session APIs plus an optional JVM heap probe are used,
+    so a session without a JVM handle (Spark Connect) degrades to the
+    configured memory sizes instead of raising. At the shipped 8 GB
+    local session this lands within ~5% of the r13 4M-row literal for
+    16-byte edge rows.
     """
-    try:
-        thr = int(
-            spark._jsparkSession.sessionState()
-            .conf()
-            .autoBroadcastJoinThreshold()
-        )
-    except Exception:
-        thr = 10 * 1024 * 1024  # planner default — assume broadcasts allowed
+    thr = _broadcast_threshold(spark)
     if thr < 0:
         return 0
-    jvm = spark.sparkContext._jvm
-    try:
-        mem_str = spark.conf.get("spark.executor.memory")
-        heap = int(jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(mem_str))
-    except Exception:
-        # local mode: the driver JVM IS the executor
-        heap = int(jvm.java.lang.Runtime.getRuntime().maxMemory())
-    budget = min(max(thr, heap // 32), 2 << 30)
+    budget = min(max(thr, _heap_bytes(spark) // 32), 2 << 30)
     return budget // (bytes_per_row * max(1, hydration))
 
 
@@ -242,13 +319,8 @@ def resolve_auto_join_hint(build_df) -> str | None:
         size = int(str(
             build_df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         ))
-        thr = int(
-            build_df.sparkSession._jsparkSession.sessionState()
-            .conf()
-            .autoBroadcastJoinThreshold()
-        )
     except Exception:
         return "SHUFFLE_HASH_AUTO"  # no estimate -> assume big (safe at scale)
-    if 0 <= size <= thr:
+    if 0 <= size <= _broadcast_threshold(build_df.sparkSession):
         return None
     return "SHUFFLE_HASH_AUTO"

@@ -60,6 +60,7 @@ from collections import Counter
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..core.session import checkpoint
 from .text import tokens
 
 END = "</w>"
@@ -145,7 +146,7 @@ def train_bpe(
     vocab = (
         word_vocab(df, text_col)
         .select(F.col("cnt"), _initial_symbols(F.col("word")).alias("syms"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     max_candidates = _default_candidates(batch)
     merges: list[tuple[str, str, int]] = []
@@ -183,9 +184,7 @@ def train_bpe(
         syms = F.col("syms")
         for left, right, _ in picked:
             syms = _merge_pair(syms, left, right)
-        vocab = vocab.select("cnt", syms.alias("syms")).localCheckpoint(
-            eager=True
-        )
+        vocab = checkpoint(vocab.select("cnt", syms.alias("syms")))
     return (merges, passes) if return_passes else merges
 
 

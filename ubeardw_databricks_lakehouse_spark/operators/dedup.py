@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..core.session import checkpoint, release_local_checkpoint, resolve_broadcast_rows
 from .text import fingerprint, tokens
 
 
@@ -203,11 +204,11 @@ def containment_pairs(
     sh = (
         with_shingles(df, id_col, text_col, n)
         .filter(F.size("_sh") > 0)
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     ex = (
         sh.select(F.col(id_col).alias("_id"), F.explode("_sh").alias("g"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     dfreq = ex.groupBy("g").agg(F.count("*").alias("_df"))
     # Lossless prefix bound: the verify filter is fl(k/m) > t (float
@@ -499,8 +500,6 @@ def neardup_upsert(
     threshold: float = 0.5,
     hash_fn: str = "md5",
     broadcast_delta: bool = True,
-    materialize: bool = True,
-    pins: list | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental near-dup: new docs against a MATERIALIZED LSH band
     index, O(new), never O(corpus).
@@ -544,37 +543,24 @@ def neardup_upsert(
     ladder; disable for a giant backfill delta where the planner
     should pick the join side itself).
 
-    ``materialize`` (default True) eagerly ``localCheckpoint``s the
-    three intermediates every later stage re-references — the delta's
-    band rows (referenced by the index probe, the delta self-join
-    twice, and the returned append frame), the candidate pair set
-    (referenced by the verify join and by the touched-docs semi-join
-    under BOTH shingle legs), and the touched-docs shingle table
-    (referenced once per pair side). Catalyst recomputes a referenced
-    DataFrame per reference, so without pinning the lazy plan scans
-    the inputs ~48x and re-runs the base-index subtree ~12x (measured
-    at sf0.1: the initial plan holds 48 parquet scans of the documents
-    table). All three frames are O(delta)/O(touched) — KBs to a few MB
-    per ingest batch, never O(corpus). Checkpoint blocks outlive the
-    frames on this runtime (core/session.py:122): callers running
-    per-micro-batch pass ``pins`` (a list the operator appends every
-    pinned frame to) and ``release_local_checkpoint`` each entry AFTER
-    the returned frames are materialized — the streaming face does.
-    One-shot batch callers can leave ``pins=None``.
+    Three intermediates every later stage re-references are eagerly
+    ``checkpoint``-ed: the delta's band rows (referenced by the index
+    probe, the delta self-join twice, and the returned append frame),
+    the candidate pair set (referenced by the verify join and by the
+    touched-docs semi-join under BOTH shingle legs), and the
+    touched-docs shingle table (referenced once per pair side).
+    Catalyst recomputes a referenced DataFrame per reference, so
+    without them the lazy plan scans the inputs ~48x and re-runs the
+    base-index subtree ~12x (measured at sf0.1: 48 parquet scans of
+    the documents table). All three are O(delta)/O(touched) — KBs to
+    a few MB per ingest batch, never O(corpus) — and the returned
+    frames read them, so their lifetime is the caller's
+    ``checkpoint_scope`` (the streaming face opens one per batch).
     """
-
-    def _pin(df: DataFrame) -> DataFrame:
-        if not materialize:
-            return df
-        out = df.localCheckpoint(eager=True)
-        if pins is not None:
-            pins.append(out)
-        return out
-
     new_sigs = minhash_signatures(
         new_docs, id_col, text_col, n_hashes, shingle_n, hash_fn
     )
-    delta_bands = _pin(
+    delta_bands = checkpoint(
         lsh_band_index(new_sigs, id_col, n_hashes, band_size, hash_fn)
     )
     nb = F.broadcast(delta_bands) if broadcast_delta else delta_bands
@@ -611,7 +597,7 @@ def neardup_upsert(
         & (F.col("band_hash") == F.col("_bh"))
         & (F.col("id_a") < F.col("id_b")),
     ).select("id_a", "id_b")
-    cands = _pin(nv_base.union(nv_new).distinct())
+    cands = checkpoint(nv_base.union(nv_new).distinct())
 
     # exact-Jaccard verify against only the docs the candidates touch:
     # the semi-join keeps the corpus read O(touched), and on a real
@@ -630,7 +616,7 @@ def neardup_upsert(
     verify_docs = new_docs.select(id_col, text_col).unionByName(
         touched_base.select(id_col, text_col)
     )
-    sh = _pin(
+    sh = checkpoint(
         with_shingles(verify_docs, id_col, text_col, shingle_n).select(
             F.col(id_col).alias("_id"), F.col("_sh")
         )
@@ -808,7 +794,7 @@ def embedding_neardup_pairs_clustered(
             # K unknown until the category centroids materialize — the
             # centroid frame is tiny (one row per category), so the
             # count is a cheap job, paid once per call
-            cents = cents.localCheckpoint(eager=True)
+            cents = checkpoint(cents)
             assign = resolve_assign_mode(assign, cents.count())
     else:
         # the shared Lloyd trainer (one copy of the seeding/update rule
@@ -891,8 +877,6 @@ def _min_label_propagation(
 ) -> tuple[DataFrame, bool]:
     """The propagation core: endpoint labels plus a converged flag (so
     callers can tell a fixpoint from budget exhaustion)."""
-    from ..core.session import release_local_checkpoint, resolve_broadcast_rows
-
     # materialize the symmetrized edge set ONCE: it is re-read by the
     # seed and by every round's join, and the caller's edge lineage is
     # often the expensive part (dedup_clusters hands over the whole
@@ -903,14 +887,14 @@ def _min_label_propagation(
         .unionByName(
             edges.select(F.col("id_b").alias("v"), F.col("id_a").alias("u"))
         )
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     # seed = round 1 fused into the edge pass (duplicate edges are
     # harmless under min)
     labels = (
         sym.groupBy("v")
         .agg(F.least(F.col("v"), F.min("u")).alias("lbl"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     # Broadcast the endpoint-label vector into each round's edge join
     # when it fits the session budget (the LPA/pagerank pattern, r13
@@ -950,7 +934,7 @@ def _min_label_propagation(
                 (new_lbl < F.col("lbl")).alias("_chg"),
             )
             .select(F.col("v"), F.col("_new").alias("lbl"), "_chg")
-        ).localCheckpoint(eager=True)  # truncate the iterative lineage
+        ).transform(checkpoint)  # truncate the iterative lineage
         changed = new_labels.where("_chg").limit(1).count()
         # the superseded round's label frame is dead once the new
         # checkpoint is materialized — release its pinned blocks now
@@ -998,9 +982,7 @@ def connected_components_auto(
     """
     # pin the caller's (often expensive) edge lineage once so a star
     # fallback re-reads a cache, never re-runs MinHash->LSH->verify
-    from ..core.session import release_local_checkpoint
-
-    edges = edges.localCheckpoint(eager=True)
+    edges = checkpoint(edges)
     labels, converged = _min_label_propagation(edges, prop_budget)
     if not converged:
         release_local_checkpoint(labels, allow_projection=True)  # partial labels: garbage
@@ -1055,7 +1037,7 @@ def connected_components_star(
         edges.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
         .where(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
 
     def _sym(df: DataFrame) -> DataFrame:
@@ -1111,8 +1093,6 @@ def connected_components_star(
             F.coalesce(F.bit_xor(F.xxhash64("a", "b")), F.lit(0)).alias("h"),
         ).first()
 
-    from ..core.session import release_local_checkpoint, resolve_broadcast_rows
-
     budget = resolve_broadcast_rows(edges.sparkSession, 16)
     n_edges = e.count()  # scans the just-materialized checkpoint blocks
     prev = None
@@ -1120,7 +1100,7 @@ def connected_components_star(
         prev_e = e
         e = _small_star(
             _large_star(e, n_edges, budget), n_edges, budget
-        ).localCheckpoint(eager=True)
+        ).transform(checkpoint)
         release_local_checkpoint(prev_e, allow_projection=True)  # superseded round — free now
         cur = _checksum(e)
         n_edges = cur["n"]
@@ -1288,13 +1268,11 @@ def cc_upsert(
     changed-label set against the stored table — one pruned scan, no
     shuffle of the corpus-sized side.
     """
-    from ..core.session import release_local_checkpoint
-
     edges = (
         delta_edges.select("id_a", "id_b")
         .where(F.col("id_a") != F.col("id_b"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     try:
         stored = labels.select(
@@ -1308,7 +1286,7 @@ def cc_upsert(
             .distinct()
             .join(stored, "v", "left")
             .select("v", F.coalesce("lbl", F.col("v")).alias("lbl"))
-            .localCheckpoint(eager=True)
+            .transform(checkpoint)
         )
         # (2) the label graph: one node per touched component
         la = ends.select(F.col("v").alias("id_a"), F.col("lbl").alias("la"))
@@ -1329,7 +1307,7 @@ def cc_upsert(
             connected_components_auto(label_edges, label_nodes, id_col="lbl")
             .where(F.col("lbl") != F.col("component"))
             .select("lbl", F.col("component").alias("new_lbl"))
-            .localCheckpoint(eager=True)
+            .transform(checkpoint)
         )
         try:
             # relabel the losers: stored rows whose component lost its
@@ -1348,7 +1326,7 @@ def cc_upsert(
                     F.coalesce("new_lbl", F.col("lbl")).alias("component"),
                 )
             )
-            out = relabeled.unionByName(fresh).localCheckpoint(eager=True)
+            out = checkpoint(relabeled.unionByName(fresh))
         finally:
             release_local_checkpoint(mapping, allow_projection=True)
             release_local_checkpoint(ends, allow_projection=True)

@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..core.session import checkpoint, release_local_checkpoint, resolve_broadcast_rows
+
 DAMPING = 0.85
 
 
@@ -63,12 +65,12 @@ def pagerank(
     # distinct) that would otherwise recompute every round. The static
     # out-degree is folded INTO the edge table here, so the loop joins
     # one table, not two.
-    edges = edges.localCheckpoint(eager=True)
+    edges = checkpoint(edges)
     nodes = (
         edges.select(F.col(src).alias("node"))
         .unionByName(edges.select(F.col(dst).alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     n = nodes.count()
     out_type = "decimal(18,6)" if exact else "double"
@@ -83,8 +85,6 @@ def pagerank(
     # derived from autoBroadcastJoinThreshold + executor heap instead
     # of a 4M-row literal); past it the vector would OOM executors, so
     # the plain shuffle join (with AQE free to re-plan) takes over.
-    from ..core.session import resolve_broadcast_rows
-
     small = n <= resolve_broadcast_rows(edges.sparkSession, 16)
     brd = F.broadcast if small else (lambda df: df)
     # out-degree is one row per SOURCE node (<= n) — same broadcast
@@ -94,7 +94,7 @@ def pagerank(
     ew = (
         edges.join(brd(outdeg), src)
         .select(F.col(src), F.col(dst), F.col("outdeg"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
 
     # F.round, not Python round(): Python rounds half-to-even, the
@@ -139,7 +139,7 @@ def pagerank(
         # (the chained broadcast stages fuse into ONE job), so truncate
         # only every 5th round to bound plan depth on long runs.
         if (it + 1) % 5 == 0:
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = checkpoint(ranks)
     return ranks.select("node", F.col("rank").cast(out_type).alias("rank"))
 
 
@@ -178,7 +178,7 @@ def _oriented_edges(
     # would each re-run the caller's edge derivation + this distinct
     # (ReuseExchange does not fire across them, the same lesson as the
     # corners explode in triangle_counts).
-    und = und.localCheckpoint(eager=True)
+    und = checkpoint(und)
     deg = (
         und.select(F.col("a").alias("node"))
         .unionByName(und.select(F.col("b").alias("node")))
@@ -293,14 +293,11 @@ def triangle_counts(
         raise ValueError(f"hub_cap must be >= 1, got {hub_cap}")
     if on_hub not in ("drop", "estimate"):
         raise ValueError(f"on_hub must be 'drop' or 'estimate', got {on_hub!r}")
-    oriented = _oriented_edges(edges, src, dst, orient).localCheckpoint(
-        eager=True
-    )  # reused 3x below (wedge x2 + closure)
+    # reused 3x below (wedge x2 + closure)
+    oriented = checkpoint(_oriented_edges(edges, src, dst, orient))
     # size-gated broadcast of the edge side (see docstring): the count
     # scans the just-materialized checkpoint blocks, no recompute
     if broadcast_edges == "auto":
-        from ..core.session import resolve_broadcast_rows
-
         broadcast_edges = resolve_broadcast_rows(edges.sparkSession, 16)
     brd = (
         F.broadcast
@@ -345,7 +342,7 @@ def triangle_counts(
             wedge_src.filter(F.col("_rk") <= hub_cap)
             .drop("_rk")
             # feeds both wedge legs — checkpoint so the window runs once
-            .localCheckpoint(eager=True)
+            .transform(checkpoint)
         )
     e1 = wedge_src.select(
         F.col("u"),
@@ -464,14 +461,14 @@ def bfs_hops(
     re-materialized. Frontier size is bounded by |V|; at web scale the
     visited set stays a (node, dist) pair table — never collected.
     """
-    edges = edges.localCheckpoint(eager=True)
+    edges = checkpoint(edges)
     und = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .unionByName(
             edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
         )
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     if seeds is None:
         # min over an EMPTY edge set is a single NULL row — drop it so
@@ -487,7 +484,7 @@ def bfs_hops(
         .where(F.col("node").isNotNull())
         .distinct()
         .withColumn("dist", F.lit(0))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     hops = [hop0]
     frontier = hop0.select("node")
@@ -503,7 +500,7 @@ def bfs_hops(
         new = (
             reached.join(visited_nodes, "node", "left_anti")
             .withColumn("dist", F.lit(h))
-            .localCheckpoint(eager=True)
+            .transform(checkpoint)
         )
         if not new.take(1):  # frontier exhausted — component fully seen
             break
@@ -603,7 +600,7 @@ def community_lpa(
             )
             .where(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=True)
+            .transform(checkpoint)
         )
     else:
         # weighted: duplicate (u, v) rows SUM weights; integral-only
@@ -636,15 +633,13 @@ def community_lpa(
             .where(F.col("u") != F.col("v"))
             .groupBy("u", "v")
             .agg(F.sum("_w").alias("_w"))
-            .localCheckpoint(eager=True)
+            .transform(checkpoint)
         )
-    from ..core.session import release_local_checkpoint
-
     labels = (
         und.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("community", F.col("node").cast("bigint"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     # Broadcast the label vector into each round's edge join when the
     # node set is small enough (the pagerank rank-vector pattern, same
@@ -656,8 +651,6 @@ def community_lpa(
     # noise). With it the join is map-side and each round's only
     # shuffles are the two label aggregations. Join strategy never
     # changes the picked labels.
-    from ..core.session import resolve_broadcast_rows
-
     n_nodes = labels.count()
     brd = (
         F.broadcast
@@ -697,7 +690,7 @@ def community_lpa(
         # every node has degree >= 1 in the symmetrized table, so the
         # join is total — no isolated-node coalesce needed here
         prev_labels = labels
-        labels = picked.localCheckpoint(eager=True)
+        labels = checkpoint(picked)
         # the superseded round's label frame is dead once the new
         # checkpoint is materialized — release its pinned blocks (the
         # kcore/PPS-ladder lesson; see core.session.release_local_checkpoint)
@@ -775,10 +768,8 @@ def kcore(
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
-    from ..core.session import release_local_checkpoint
-
     n_edges = sym.count()
     for _ in range(n_iter):
         if n_edges == 0:
@@ -793,7 +784,7 @@ def kcore(
             sym.join(alive, "u", "left_semi")
             .join(alive.select(F.col("u").alias("v")), "v", "left_semi")
             .select("u", "v")
-            .localCheckpoint(eager=True)
+            .transform(checkpoint)
         )
         n_next = nxt.count()
         # the superseded round's edge set is dead the moment the new

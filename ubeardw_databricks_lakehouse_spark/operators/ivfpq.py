@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..core.session import checkpoint
 from .pq import _assign, _l2sq, _subvectors, pq_train
 from .similarity import _centroids_fast, assign_cells
 
@@ -69,7 +70,6 @@ def ivfpq_build(
     m: int = 8,
     ksub: int = 16,
     n_iter: int = 1,
-    pins: list | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Build the IVFADC index once: (cents, codebook, codes).
 
@@ -81,19 +81,14 @@ def ivfpq_build(
     search is what amortizes the bench-visible index cost to zero
     per-query at scale.
 
-    ``pins``: checkpoint-lifecycle out-param (the ``neardup_upsert``
-    pattern — ADVICE r13): the build eagerly pins an O(N) residual
-    table whose blocks are NOT freed by GC on this runtime (see
-    ``core.session.release_local_checkpoint``), and the returned
-    ``codes`` frame reads them lazily, so the build cannot release
-    them itself. Pass a list and, once ``codes`` is materialized
-    (persisted / checkpointed / written), release every frame in it.
-    Callers that rebuild repeatedly in one session (bench reps, index
-    refresh loops, the stress ladder) accrete one residual-sized block
-    per build otherwise. The returned ``cents``/``codebook``
-    checkpoints are NOT in ``pins`` — they ARE the index (every search
-    broadcasts them); release them when the index itself is retired
-    (``plans.llm_q.invalidate_ivfpq_index`` is the reference caller)."""
+    Lifetimes: the O(N) residual table is a call-private ``checkpoint``
+    that the returned lazy ``codes`` still reads — materialize
+    ``codes`` (persist / checkpoint / write) inside the caller's
+    ``checkpoint_scope``, which then frees the residuals. ``cents`` and
+    the codebook are plain ``localCheckpoint``s because they ARE the
+    index (every search broadcasts them); release them when the index
+    itself is retired (``plans.llm_q.invalidate_ivfpq_index`` is the
+    reference caller)."""
     dsub = dim // m
     assert dsub * m == dim, "dim must be divisible by m"
     cents = _centroids_fast(corpus, vec_col, cell_col, dim).localCheckpoint(
@@ -106,11 +101,9 @@ def ivfpq_build(
     # materialize derived inputs first) AND once more by the code
     # encoding below. Checkpoint it once: the assignment window runs
     # once instead of ~5x. One O(N) residual table pinned per build —
-    # the per-snapshot artifact production would persist anyway (and
-    # the ``pins`` out-param hands its lifecycle to the caller).
-    resid = _residuals(corpus_cells, cents, id_col, vec_col).localCheckpoint(
-        eager=True
-    )
+    # the per-snapshot artifact production would persist anyway (its
+    # lifetime is the caller's scope).
+    resid = checkpoint(_residuals(corpus_cells, cents, id_col, vec_col))
     # pq_train returns its final Lloyd-round checkpoint; the rename to
     # (sub_id, code, cvec) is a free projection over those pinned
     # blocks — re-checkpointing it would just pin a second copy
@@ -139,8 +132,6 @@ def ivfpq_build(
         "sub_id",
         "code",
     )
-    if pins is not None:
-        pins.append(resid)
     return cents, codebook_pub, codes
 
 

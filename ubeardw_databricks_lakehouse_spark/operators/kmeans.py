@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..core.session import checkpoint
 from .similarity import _centroids_fast, assign_cells
 
 
@@ -87,12 +88,10 @@ def kmeans_train(
         "cell",
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("cvec"),
     )
-    cents = seeds.localCheckpoint(eager=True)
+    cents = checkpoint(seeds)
     for _ in range(max(0, n_iter)):
         assigned = assign_cells(df, cents, id_col, vec_col, 1)
-        cents = _centroids_fast(assigned, vec_col, "cell", dim).localCheckpoint(
-            eager=True
-        )
+        cents = checkpoint(_centroids_fast(assigned, vec_col, "cell", dim))
     return cents
 
 

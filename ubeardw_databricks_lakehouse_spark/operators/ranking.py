@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..core.session import checkpoint
+
 
 def with_global_row_number(
     df: DataFrame,
@@ -64,7 +66,7 @@ def with_global_row_number(
         df.repartitionByRange(num_partitions, *order_by)
         .sortWithinPartitions(*order_by)
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
 
     out_schema = ", ".join(
@@ -190,7 +192,7 @@ def global_running_sum(
         df.repartitionByRange(num_partitions, *order_by)
         .sortWithinPartitions(*order_by)
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in ranged.schema.fields

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..core.session import checkpoint
 from .text import token_count, tokens
 
 K1 = 1.2
@@ -138,23 +139,14 @@ def bm25_topk(
     tf_index: DataFrame | None = None,
     doc_stats: DataFrame | None = None,
     materialize: bool = True,
-    pins: list | None = None,
 ) -> DataFrame:
     """Top-``k`` documents by BM25 against ``query_terms``.
 
-    ``materialize`` (default True) pins the corpus path's hit-filtered
-    tf frame once — see the inline comment; False keeps the plan fully
-    lazy (plan-shape tests inspect the pre-execution tree).
-
-    ``pins`` (the ``neardup_upsert`` out-param pattern — ADVICE r13):
-    the pinned tf blocks are NOT freed by GC on this runtime, and the
-    returned lazy frame still reads them, so this function cannot
-    release them itself. Pass a list and call
-    ``core.session.release_local_checkpoint`` on its entries once the
-    result is materialized; otherwise every ``materialize=True`` call
-    in a long-lived session (bench rep loops, a query service, each
-    ``q_hybrid_search_rrf`` invocation) permanently accretes one
-    postings-sized block.
+    ``materialize`` (default True) checkpoints the corpus path's
+    hit-filtered tf frame once — see the inline comment; False keeps
+    the plan fully lazy (plan-shape tests inspect the pre-execution
+    tree). The returned frame reads that checkpoint, so its lifetime
+    is the caller's ``checkpoint_scope``.
 
     Returns (doc_id, n_terms_hit, bm25) ordered by score desc with a
     doc-id tie-break; ``bm25`` is DOUBLE, produced as a deterministic
@@ -203,9 +195,7 @@ def bm25_topk(
         # (tf_index=) never reach here: their hits frame reads the
         # materialized index, no corpus pass to save.
         if materialize:
-            tf = tf.localCheckpoint(eager=True)
-            if pins is not None:
-                pins.append(tf)
+            tf = checkpoint(tf)
     # N docs and avg length — two scalar aggregates, broadcast back.
     stats = F.broadcast(
         dl.agg(

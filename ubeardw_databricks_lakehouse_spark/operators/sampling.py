@@ -217,13 +217,13 @@ def pps_systematic_sample(
     prefix sum, an O(P) offsets broadcast, a broadcast 1-row total,
     and a filter. Nothing driver-side beyond the partition offsets.
 
-    Session discipline: the prefix sum pins an eager localCheckpoint
+    Session discipline: the prefix sum takes an eager ``checkpoint``
     of the ordered frame (see global_running_sum). A long-lived
-    session running several large sampling jobs must let each job's
-    result drop (or ``unpersist()`` it) before the next — holding many
-    checkpointed frames concurrently GC-thrashed at 100M+ total
-    resident rows in the 80M-row stress run (SCALING.md, "Operational
-    catch", r10 PPS ladder).
+    session running several large sampling jobs should run each inside
+    its own ``checkpoint_scope`` — holding many checkpointed frames
+    concurrently GC-thrashed at 100M+ total resident rows in the
+    80M-row stress run (SCALING.md, "Operational catch", r10 PPS
+    ladder).
     """
     from pyspark.sql import types as T_
 

@@ -23,6 +23,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..core.session import checkpoint
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential-fold dot product (deterministic, JVM-side)."""
@@ -342,17 +344,9 @@ def topk_ivf(
     k: int = 5,
     nprobe: int = 2,
     exact_centroids: bool = True,
-    pins: list | None = None,
 ) -> DataFrame:
     """IVF ANN top-k: coarse-quantize the corpus into centroid cells,
     probe each query's ``nprobe`` nearest cells, exact-rank inside.
-
-    ``pins`` (the ``neardup_upsert`` out-param pattern — ADVICE r13):
-    collects the K-row centroid checkpoint, whose blocks survive GC on
-    this runtime; release them via
-    ``core.session.release_local_checkpoint`` after the result is
-    materialized. Small per call, but repeated calls in one session
-    accrete.
 
     The inverted-file counterpart to ``topk_lsh``: search cost drops
     from N to ~N*nprobe/K per query, and the corpus join key is the
@@ -372,11 +366,7 @@ def topk_ivf(
     # centroid training pass over the corpus — for the exact builder
     # that is the N×D posexplode shuffle, the heaviest subtree here.
     # The result is K rows: pin it once (guide §2.4).
-    cents = builder(corpus, vec_col, cell_col, dim).localCheckpoint(
-        eager=True
-    )
-    if pins is not None:
-        pins.append(cents)
+    cents = checkpoint(builder(corpus, vec_col, cell_col, dim))
     corpus_cells = assign_cells(corpus, cents, id_col, vec_col, 1)
     return ivf_search(
         cents, corpus_cells, queries, id_col, vec_col, k=k, nprobe=nprobe

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..core.session import checkpoint
+
 
 def winsorize_summary(
     df: DataFrame,
@@ -97,7 +99,7 @@ def mad_outlier_summary(
     # them), turning the 3-scan two-pass shape into 4 scans.
     med = df.groupBy(group_col).agg(
         F.expr(f"percentile({value_col}, 0.5)").alias("med")
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     dev = df.join(F.broadcast(med), group_col).withColumn(
         "_dev", F.abs(v - F.col("med"))
     )

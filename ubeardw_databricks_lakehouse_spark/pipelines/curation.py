@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..core.session import checkpoint
 from ..operators.chunking import chunk_documents
 from ..operators.curation import contamination_report, gopher_quality_flags
 from ..operators.dedup import dedup_clusters
@@ -69,13 +70,13 @@ def curate_corpus(
     quality = gopher_quality_flags(train, id_col, text_col).select(id_col, "keep")
     q_surv = train.join(
         quality.where(F.col("keep")).select(id_col), id_col, "left_semi"
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
 
     # stage 2 — n-gram collisions against the eval set (docs too short
     # to have any n-gram are absent from the report = trivially clean)
     contam = contamination_report(
         q_surv, evalset, contamination_ngram, id_col, text_col
-    ).localCheckpoint(eager=True)  # feeds the anti-join AND the audit
+    ).transform(checkpoint)  # feeds the anti-join AND the audit
     c_surv = q_surv.join(
         contam.where(F.col("contaminated")).select(id_col), id_col, "left_anti"
     )
@@ -87,14 +88,14 @@ def curate_corpus(
         with_fp.join(exact_survivor, "_fp")
         .where(did == F.col("_surv"))
         .select(id_col, text_col)
-        .localCheckpoint(eager=True)  # feeds clusters, stage 5, audit
+        .transform(checkpoint)  # feeds clusters, stage 5, audit
     )
 
     # stage 4 — near-dup clusters; keep the canonical member
     clusters = dedup_clusters(e_surv, id_col, text_col)
     n_surv = e_surv.join(
         clusters.where(F.col("is_canonical")).select(id_col), id_col, "left_semi"
-    ).localCheckpoint(eager=True)  # feeds chunking AND the audit
+    ).transform(checkpoint)  # feeds chunking AND the audit
 
     # stage 5 — chunk the survivors
     n_chunks = (

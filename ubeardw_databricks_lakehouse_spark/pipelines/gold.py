@@ -603,7 +603,6 @@ def run_gold_job(
     trip_events_silver: DataFrame,
     effective_ts=None,
     collect_counts: bool = True,
-    parallel_dims: bool = True,
 ) -> dict[str, int]:
     """Build/refresh the whole star schema; returns row counts.
 
@@ -613,9 +612,9 @@ def run_gold_job(
     once, not once per consumer (the reference re-reads materialized
     silver *tables*, which amounts to the same reuse).
 
-    ``parallel_dims=True`` submits the six independent dimension builds
-    (location, three SCD2 dims, date, time) as concurrent Spark jobs
-    from a thread pool — they write disjoint tables and only trip_fact
+    The six independent dimension builds (location, three SCD2 dims,
+    date, time) run as concurrent Spark jobs from a thread pool — they
+    write disjoint tables and only trip_fact
     depends on one of them (dim_location), so the only barrier is
     before the fact build. On a cluster this is the standard
     multi-job-per-session idiom (the reference runs them serially
@@ -673,16 +672,12 @@ def run_gold_job(
             else lake.overwrite("dim_time", generate_dim_time(spark))
         ),
     ]
-    if parallel_dims:
-        from concurrent.futures import ThreadPoolExecutor
+    from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=len(dim_tasks)) as pool:
-            futures = [pool.submit(fn) for fn in dim_tasks]
-            for f in futures:  # surface the first failure, fail the job
-                f.result()
-    else:
-        for fn in dim_tasks:
-            fn()
+    with ThreadPoolExecutor(max_workers=len(dim_tasks)) as pool:
+        futures = [pool.submit(fn) for fn in dim_tasks]
+        for f in futures:  # surface the first failure, fail the job
+            f.result()
 
     fact = build_trip_fact(
         trip_events_silver, eater_silver, merchant_silver, lake.read("dim_location")

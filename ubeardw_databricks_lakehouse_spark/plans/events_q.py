@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..core.session import checkpoint
 from ..operators.event_pivot import event_pivot
 from .common import dsum, ensure_read_confs, event_ts_expr, t
 
@@ -817,7 +818,7 @@ def _first_touch_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events").select("user_id", "event_type", "ts")
 
     def first_after(prev: DataFrame, step: str, prev_col: str, out: str) -> DataFrame:
-        prev = prev.localCheckpoint(eager=True)
+        prev = checkpoint(prev)
         nxt = (
             ev.where(F.col("event_type") == step)
             .join(prev, "user_id")
@@ -1320,7 +1321,7 @@ def q_event_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ut = (
         ev.select("user_id", "event_type")
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     n_users = ut.select(
         F.count_distinct("user_id").alias("n_users")

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..core.session import checkpoint, checkpoint_scope, release_local_checkpoint
 from ..operators.dedup import (
     embedding_neardup_pairs,
     exact_dedup_groups,
@@ -611,7 +612,7 @@ def q_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache-manager state (4 cold, 8 under a warm suite) — the
     # checkpoint truncates lineage so the corpus is scanned exactly
     # once, deterministically (the r8 discipline).
-    sel = winnow_selections(docs, k=20, w=8).localCheckpoint(eager=True)
+    sel = checkpoint(winnow_selections(docs, k=20, w=8))
     # anti-join against the FREQUENT set: stop-grams are few (like
     # stop-words), so that side broadcasts; broadcasting the rare side
     # would ship nearly the whole hash universe
@@ -1188,9 +1189,7 @@ def q_ivf_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # N×D posexplode centroid aggregation — the query's heaviest
     # subtree — so pin the K-row result once (guide §2.4: remove
     # repeated passes; the frame is 64 rows, not corpus-sized)
-    cents = _centroids(base, "embedding", "label", 64).localCheckpoint(
-        eager=True
-    )
+    cents = checkpoint(_centroids(base, "embedding", "label", 64))
     base_cells = assign_cells(base, cents, "vec_id", "embedding", 1)
     # O(delta) maintenance leg (drift agg off — the bench path; the
     # drift guard itself is pinned in pytest)
@@ -1355,7 +1354,7 @@ def q_source_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the corpus aggregation per reference.
     thresholds = sqrt_mixing_thresholds(
         docs, "source", target_frac=0.5
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     kept = (
         sqrt_mixing_sample(
             docs, "doc_id", "source", target_frac=0.5, thresholds=thresholds
@@ -1864,8 +1863,6 @@ def invalidate_ivfpq_index(spark: SparkSession, sf_dir: str | None = None) -> No
     centroids, codebook) so executor memory is reclaimed immediately —
     ``release_local_checkpoint``, not ``unpersist()``, which does not
     free checkpoint blocks on this runtime."""
-    from ..core.session import release_local_checkpoint
-
     app = spark.sparkContext.applicationId
     for key in [k for k in _IVFPQ_INDEX_CACHE if k[0] == app]:
         if sf_dir is not None and key[1] != sf_dir:
@@ -1882,25 +1879,21 @@ def invalidate_ivfpq_index(spark: SparkSession, sf_dir: str | None = None) -> No
 
 
 def _ivfpq_index(spark: SparkSession, sf_dir: str):
-    from ..core.session import release_local_checkpoint
     from ..operators.ivfpq import ivfpq_build
 
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _IVFPQ_INDEX_CACHE:
         emb = t(spark, sf_dir, "embeddings")
-        pins: list = []
-        cents, codebook, codes = ivfpq_build(
-            emb, m=8, ksub=16, n_iter=1, pins=pins
-        )
-        _IVFPQ_INDEX_CACHE[key] = (
-            cents,
-            codebook,
-            codes.localCheckpoint(eager=True),
-        )
-        # codes is materialized — the build's residual pin is dead
-        # (ADVICE r13: one O(N) block otherwise survives per build)
-        for p in pins:
-            release_local_checkpoint(p)
+        # the build's own scope: its residual checkpoint dies once codes
+        # is materialized; the index frames are plain checkpoints that
+        # outlive it (and any caller's scope) until invalidation
+        with checkpoint_scope():
+            cents, codebook, codes = ivfpq_build(emb, m=8, ksub=16, n_iter=1)
+            _IVFPQ_INDEX_CACHE[key] = (
+                cents,
+                codebook,
+                codes.localCheckpoint(eager=True),
+            )
     return _IVFPQ_INDEX_CACHE[key]
 
 
@@ -2116,7 +2109,7 @@ def q_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta = docs.filter(bkt >= 9000)
     # the base signature table is a stored artifact in production;
     # localCheckpoint stands in for the materialized read
-    sigs_base = minhash_signatures(base).localCheckpoint(eager=True)
+    sigs_base = checkpoint(minhash_signatures(base))
     sigs_all = sigs_base.unionByName(minhash_signatures(delta))
     # checkpoint: pairs feeds BOTH semi-join branches below — without
     # it the whole band+verify pipeline runs twice (ReuseExchange does
@@ -2124,7 +2117,7 @@ def q_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the materialization is bounded by the result, not the corpus.
     pairs = neardup_verified_pairs(
         docs, n_hashes=8, band_size=2, threshold=0.5, signatures=sigs_all
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     # pairs touching the delta batch: two equi semi-joins (an OR-semi
     # would plan a nested loop), deduped on the pair key
     dids = delta.select("doc_id")
@@ -2258,7 +2251,7 @@ def q_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the corpus (the heaviest step) a second time.
     tok = docs.select(
         "source", F.explode(tokens("text")).alias("tk")
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     vocab = (
         tok.filter(F.col("source") == _OOV_REF_SOURCE)
         .select("tk")
@@ -2345,7 +2338,7 @@ def q_chisq_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(F.col("source"), bucket.alias("bucket"))
         .groupBy("source", "bucket")
         .agg(F.count("*").cast("bigint").alias("o"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     rt = cells.groupBy("source").agg(F.sum("o").alias("row_total"))
     ct = cells.groupBy("bucket").agg(F.sum("o").alias("col_total"))
@@ -2539,7 +2532,7 @@ def q_ranksum_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     vc = docs.groupBy("n_chars").agg(
         F.count("*").cast("bigint").alias("cnt")
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     w = Window.orderBy("n_chars").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -2669,7 +2662,7 @@ def q_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # merge leg would each re-scan the corpus (the CC-edge lesson)
     per_source = tdigest_build(
         docs, "n_chars", ["source"], delta=100.0
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     qs = [0.5, 0.9, 0.99]
     per = tdigest_quantiles(per_source, qs, ["source"])
     # the mergeability headline: the global digest comes from the

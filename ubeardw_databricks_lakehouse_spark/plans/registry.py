@@ -864,52 +864,37 @@ QUERIES: list[QueryDef] = [
 #   window (demand r14 floor = 26, well under 50).
 # 25 + 1 + 24 = 50/50: exactly full.
 _WINDOW: list[str] = [
-    # r14 window (mechanically generated by tools/rotation_plan.py,
-    # then fill-lane adjusted per the r13 verdict's "Next round #1":
-    # the r13-optimization-rewritten queries must be driver-graded
-    # this round — their semantics-bearing rewrites currently rest on
-    # the in-repo oracle sweep only).
-    # r10-latest-green lane (falls off the 4-report horizon now that
-    # r13 is on disk; the full 26-entry cohort in definition order)
-    "q04_priority_semi", "q10_returned_items",
-    "q_customer_deciles", "q07_nation_volume",
-    "q08_market_share", "q09_product_profit",
-    "q13_customer_distribution", "q15_top_supplier",
-    "q17_small_qty_revenue", "q18_large_orders",
-    "q19_disjunctive_revenue", "q21_waiting_supplier",
-    "q22_idle_customers", "q_props_json",
-    "q_moving_value", "q_daily_timeseries",
-    "q_top_purchasers", "q_event_quantiles",
-    "q_time_rollup_multires", "q_bm25_search",
-    "q_gapfill_daily", "q_pagerank_trading",
-    "q_customer_percentiles", "q_masked_read",
-    "q_interpolate_daily", "q_peak_concurrency",
-    # never-driver-graded lane (r13 deferred-new queue)
-    "q_ivf_upsert",
-    # verdict-priority fill (r13 "Next round #1"): the optimization
-    # round's semantics-bearing rewrites, promoted ahead of the plain
-    # oldest-evidence cohort so CORRECTNESS_r14 driver-verifies them
-    # (q_bm25_search / q_pagerank_trading / q_embedding_topk_ivf are
-    # already above via the staleness lanes; q_training_export and
-    # q_pagerank_trading_fast are r13-fresh)
-    "q_dup_span_removal", "q_bigram_lm",
-    "q_triangle_suppliers", "q_quality_rules",
-    "q_curated_corpus",
-    # r11-latest-green lane (first 17 of the cohort in definition
-    # order, plus q_embedding_topk_ivf_fast which shares the r13 ivf
-    # rewrite; the 5 displaced r11 entries — q_neardup_verified_fast,
-    # q_embedding_quantized, q_frame_sampling, q_pii_redaction,
-    # q_sentence_split — go red at the r15 boundary and rotate then:
-    # demand floor r15 = 29, satisfiable)
-    "q_lang_quality", "q_geo_enrichment",
-    "q_simhash", "q_embedding_topk_lsh",
-    "q_user_event_arrays", "q_approx_profile",
-    "q_editdist_verify", "q_dedup_clusters",
-    "q_embedding_topk_ivf", "q_winnow_fingerprints",
-    "q_winnow_overlap", "q_time_travel",
-    "q_ivm_refresh", "q_audio_windows",
-    "q_row_fingerprints", "q_embedding_dedup",
-    "q_sequence_packing", "q_embedding_topk_ivf_fast",
+    # r15 window (tools/rotation_plan.py, oldest evidence first).
+    # r11-latest-green lane: falls off the 4-report horizon now that
+    # r14 is on disk (the 5 entries displaced from r14's window, then
+    # the rest of the cohort in definition order)
+    "q_neardup_verified_fast", "q_embedding_quantized",
+    "q_frame_sampling", "q_pii_redaction",
+    "q_sentence_split", "q_contamination",
+    "q_span_dedup", "q_linear_quality",
+    "q_error_after_purchase", "q_bpe_encode",
+    "q_hybrid_search_rrf", "q_mmr_rerank",
+    "q_quality_buckets", "q_cms_heavy_hitters",
+    "q_winsorized_stats", "q_kmv_distinct",
+    "q02_min_cost_supplier", "q11_important_parts",
+    "q16_supplier_diversity", "q20_dominant_suppliers",
+    "q_fuzzy_part_match", "q_event_transitions",
+    "q_value_histogram", "q_entity_clusters",
+    "q_trailing_7day", "q_quantile_sketch",
+    "q_weighted_sample", "q_spatial_neighbors",
+    "q_lpa_communities",
+    # fill lane: the 21 oldest r12-latest-green entries
+    "q_boilerplate_ngrams",
+    "q_doc_top_terms", "q_corpus_splits",
+    "q_source_mixing", "q_sample_per_source",
+    "q_stream_attribution", "q_contamination_bloom",
+    "q_session_windows", "q_bpe_merges",
+    "q_inverted_index", "q_pq_codes",
+    "q_text_profile", "q_exact_dedup",
+    "q_jaccard_pairs", "q_minhash_signatures",
+    "q_lsh_candidates", "q_neardup_verified",
+    "q_embedding_topk", "q_embedding_neardup",
+    "q_multimodal_features", "q_chunking",
 ]
 
 # End-of-round full-gate mirror: ALL 130 oracle-paired entries swept

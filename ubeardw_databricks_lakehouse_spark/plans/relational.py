@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..core.session import checkpoint
 from .common import davg, dsum, sql_davg, sql_dsum, t
 
 # ---------------------------------------------------------------------------
@@ -1538,7 +1539,7 @@ def _trading_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the orders x lineitem join + distinct runs twice inside the
         # edge build (ReuseExchange does not fire across union
         # branches; the triangle-corners lesson applied here).
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     # no distinct after symmetrizing: the even/odd node namespaces are
     # disjoint, so a reversed edge can never collide with a forward one
@@ -1977,7 +1978,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(sup_asia), li.l_suppkey == F.col("s_suppkey"))
         .groupBy(F.col("l_partkey").alias("p_partkey"))
         .agg(F.sum(vol).alias("_value_dec"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     total = per_part_dec.agg(
         F.sum("_value_dec").cast("double").alias("_total")
@@ -2187,7 +2188,7 @@ def cosupply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("s1") < F.col("s2"))
         .groupBy("s1", "s2")
         .agg(F.count("*").alias("cnt"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     mean_w = pairs.agg(
         (F.sum("cnt").cast("double") / F.count("*")).alias("_mean")
@@ -2645,7 +2646,7 @@ def brand_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(part, li.l_partkey == part.p_partkey)
         .select(F.col("l_orderkey").alias("okey"), F.col("p_brand").alias("brand"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
 
 

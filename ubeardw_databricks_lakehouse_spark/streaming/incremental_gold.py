@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..core.catalog import GOLD_TABLES
 from ..pipelines.gold import build_trip_fact
 from ..storage.lakehouse import Lakehouse
 
@@ -40,7 +41,9 @@ def start_incremental_trip_fact(
     checkpoint: str,
     available_now: bool = True,
 ) -> StreamingQuery:
-    """Start the foreachBatch query maintaining ``trip_fact``."""
+    """Start the foreachBatch query maintaining ``trip_fact`` with the
+    catalog's merge spec — the same one ``run_gold_job`` applies."""
+    fact_spec = GOLD_TABLES["trip_fact"]
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         touched = batch_df.select("trip_id").distinct()
@@ -52,9 +55,9 @@ def start_incremental_trip_fact(
         lake.upsert(
             "trip_fact",
             fact,
-            keys=["trip_id"],
-            update_condition="source.updated_at > target.updated_at",
-            partition_by=["date_partition", "region_partition"],
+            keys=list(fact_spec.merge_keys),
+            update_condition=fact_spec.merge_guard,
+            partition_by=list(fact_spec.partition_by),
         )
 
     writer = (

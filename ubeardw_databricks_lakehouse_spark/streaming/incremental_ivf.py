@@ -52,9 +52,9 @@ metrics leg). Write order (assignment -> metrics) means a mid-batch
 crash can only lose the metrics row of a batch whose assignment
 landed; the replay re-merges both.
 
-Memory: the per-batch ``localCheckpoint`` pin is explicitly released
-(``release_local_checkpoint``) once merged — checkpoint blocks
-survive unpersist()/GC on this runtime (core/session.py:122).
+Memory: each micro-batch runs inside one ``checkpoint_scope``, so its
+checkpoint is released once merged — checkpoint blocks survive
+unpersist()/GC on this runtime.
 
 Reference parity: the reference has no incremental ANN maintenance —
 its gold MERGE pattern (pipelines/gold_pipeline.py:789-796) is the
@@ -70,7 +70,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..core.session import release_local_checkpoint
+from ..core.session import checkpoint as scoped_checkpoint
+from ..core.session import checkpoint_scope
 from ..operators.similarity import (
     assign_cells,
     ivf_distortion,
@@ -109,8 +110,8 @@ def bootstrap_ivf_state(
     docstring; this is the layout every maintenance MERGE and every
     search prunes on."""
     spark = corpus.sparkSession
-    cents = cents.localCheckpoint(eager=True)
-    try:
+    with checkpoint_scope():
+        cents = scoped_checkpoint(cents)
         assigned = assign_cells(corpus, cents, id_col, vec_col, 1)
         base_d = ivf_distortion(cents, assigned, vec_col)
         lake.overwrite(centroids_table, cents)
@@ -122,8 +123,6 @@ def bootstrap_ivf_state(
                 _METRICS_SCHEMA,
             ),
         )
-    finally:
-        release_local_checkpoint(cents)
     return base_d
 
 
@@ -175,9 +174,11 @@ def retrain_ivf(
     quantizer and would poison later comparisons."""
     from ..operators.kmeans import kmeans_train
 
-    corpus = lake.read(assignment_table).select(id_col, vec_col)
-    corpus = corpus.localCheckpoint(eager=True)  # k-means re-reads per round
-    try:
+    with checkpoint_scope():
+        # k-means re-reads the corpus per round
+        corpus = scoped_checkpoint(
+            lake.read(assignment_table).select(id_col, vec_col)
+        )
         if k is None:
             k = lake.read(centroids_table).count()
         cents = kmeans_train(
@@ -187,8 +188,6 @@ def retrain_ivf(
             lake, corpus, cents, id_col, vec_col,
             centroids_table, assignment_table, metrics_table,
         )
-    finally:
-        release_local_checkpoint(corpus)
 
 
 def start_incremental_ivf(
@@ -222,6 +221,13 @@ def start_incremental_ivf(
     stream_id = os.path.basename(os.path.normpath(checkpoint)) or checkpoint
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # one scope per micro-batch: the batch checkpoint is dead once
+        # merged (or empty) — a forever-running stream would otherwise
+        # accrete one per batch
+        with checkpoint_scope():
+            _process(batch_df, batch_id)
+
+    def _process(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.select(id_col, vec_col).dropDuplicates([id_col])
         if batch.isEmpty():
             return
@@ -244,43 +250,38 @@ def start_incremental_ivf(
             base_d = row["base_distortion"] if row else None
         # enforce the new-ids contract structurally (source redelivery
         # drops out here); the anti-join reads the very table the MERGE
-        # below rewrites, so pin the batch before writing
-        batch = batch.join(
+        # below rewrites, so checkpoint the batch before writing
+        batch = scoped_checkpoint(batch.join(
             lake.read(assignment_table).select(id_col), id_col, "left_anti"
-        ).localCheckpoint(eager=True)
-        try:
-            if batch.isEmpty():
-                return
-            delta_cells, info = ivf_upsert(
-                cents, batch, id_col, vec_col,
-                base_distortion=base_d, retrain_factor=retrain_factor,
-            )
+        ))
+        if batch.isEmpty():
+            return
+        delta_cells, info = ivf_upsert(
+            cents, batch, id_col, vec_col,
+            base_distortion=base_d, retrain_factor=retrain_factor,
+        )
+        lake.upsert(
+            assignment_table,
+            delta_cells,
+            keys=["cell", id_col],
+            partition_by=["cell"],
+        )
+        if track_drift and base_d is not None:
             lake.upsert(
-                assignment_table,
-                delta_cells,
-                keys=["cell", id_col],
-                partition_by=["cell"],
+                metrics_table,
+                spark.createDataFrame(
+                    [(
+                        stream_id,
+                        int(batch_id),
+                        batch.count(),
+                        info.get("delta_distortion"),
+                        base_d,
+                        bool(info.get("retrain", False)),
+                    )],
+                    _METRICS_SCHEMA,
+                ),
+                keys=["stream_id", "batch_id"],
             )
-            if track_drift and base_d is not None:
-                lake.upsert(
-                    metrics_table,
-                    spark.createDataFrame(
-                        [(
-                            stream_id,
-                            int(batch_id),
-                            batch.count(),
-                            info.get("delta_distortion"),
-                            base_d,
-                            bool(info.get("retrain", False)),
-                        )],
-                        _METRICS_SCHEMA,
-                    ),
-                    keys=["stream_id", "batch_id"],
-                )
-        finally:
-            # merged (or empty): the pinned blocks are dead — free them
-            # NOW, or a forever-running stream accretes one per batch
-            release_local_checkpoint(batch)
 
     writer = (
         vecs_stream.writeStream.foreachBatch(process_batch)

@@ -45,11 +45,11 @@ files natively). Size B so delta rows per batch stay BELOW B — uniform
 hashing touches ``B*(1-(1-1/B)^rows)`` buckets, so a batch with more
 rows than buckets degenerates to the full rewrite.
 
-Memory: the per-batch ``localCheckpoint`` pin is explicitly released
-(``release_local_checkpoint``) once the batch's rows are merged —
-checkpoint blocks survive unpersist()/GC on this runtime
-(core/session.py:122), so a forever-running stream would otherwise
-accrete one dead delta-sized block per micro-batch.
+Memory: each micro-batch runs inside one ``checkpoint_scope``, so every
+checkpoint the batch takes is released once its rows are merged —
+checkpoint blocks survive unpersist()/GC on this runtime, so a
+forever-running stream would otherwise accrete dead delta-sized blocks
+per micro-batch.
 """
 
 from __future__ import annotations
@@ -58,7 +58,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..core.session import release_local_checkpoint
+from ..core.session import checkpoint as scoped_checkpoint
+from ..core.session import checkpoint_scope
 from ..operators.dedup import neardup_upsert
 from ..storage.lakehouse import Lakehouse
 
@@ -121,62 +122,48 @@ def start_incremental_neardup(
         )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # one scope per micro-batch: every checkpoint taken below — the
+        # anti-joined batch, neardup_upsert's intermediates (delta
+        # bands, candidate set, touched-doc shingles), the merge inputs —
+        # is dead once the batch's rows are merged (or the batch turns
+        # out empty); a forever-running stream would otherwise accrete
+        # them per micro-batch
+        with checkpoint_scope():
+            _process(batch_df)
+
+    def _process(batch_df: DataFrame) -> None:
         batch = batch_df.select(id_col, text_col).dropDuplicates([id_col])
         if batch.isEmpty():
             return
         if lake.exists(corpus_table):
             corpus = lake.read(corpus_table).select(id_col, text_col)
             # enforce the new-ids contract (and source redelivery
-            # safety) structurally, not by trusting the source
-            batch = batch.join(corpus.select(id_col), id_col, "left_anti")
-            # anti-join + the upsert below both traverse `batch`; pin it
-            # so the plan runs once per branch, and because foreachBatch
-            # overwrites/merges the very tables batch reads from
-            batch = batch.localCheckpoint(eager=True)
-            pins: list = []
-            try:
-                if batch.isEmpty():
-                    return
-                index = lake.read(index_table)
-                pairs, delta_bands = neardup_upsert(
-                    index, batch, corpus,
-                    id_col=id_col, text_col=text_col, n_hashes=n_hashes,
-                    band_size=band_size, shingle_n=shingle_n,
-                    threshold=threshold, hash_fn=hash_fn,
-                    broadcast_delta=broadcast_delta, pins=pins,
-                )
-                _merge_all(batch, pairs, delta_bands)
-            finally:
-                # the batch's rows are merged (or the batch was empty):
-                # the pinned blocks — the anti-joined batch AND the
-                # operator's internal intermediates (delta bands,
-                # candidate set, touched-doc shingles) — are dead;
-                # free them NOW, or a forever-running stream accretes
-                # them per micro-batch
-                release_local_checkpoint(batch)
-                for p in pins:
-                    release_local_checkpoint(p)
+            # safety) structurally, not by trusting the source; the
+            # anti-join + the upsert below both traverse `batch` —
+            # checkpoint it so the plan runs once per branch, and
+            # because foreachBatch merges the very tables batch reads
+            batch = scoped_checkpoint(
+                batch.join(corpus.select(id_col), id_col, "left_anti")
+            )
+            if batch.isEmpty():
+                return
+            index = lake.read(index_table)
         else:
             # first batch bootstraps the state: empty index, empty corpus
-            batch = batch.localCheckpoint(eager=True)
-            pins = []
-            try:
-                id_type = batch.schema[id_col].dataType.simpleString()
-                empty_index = spark.createDataFrame(
-                    [], f"{id_col} {id_type}, band_idx int, band_hash string"
-                )
-                pairs, delta_bands = neardup_upsert(
-                    empty_index, batch, batch.limit(0),
-                    id_col=id_col, text_col=text_col, n_hashes=n_hashes,
-                    band_size=band_size, shingle_n=shingle_n,
-                    threshold=threshold, hash_fn=hash_fn,
-                    broadcast_delta=broadcast_delta, pins=pins,
-                )
-                _merge_all(batch, pairs, delta_bands)
-            finally:
-                release_local_checkpoint(batch)
-                for p in pins:
-                    release_local_checkpoint(p)
+            batch = scoped_checkpoint(batch)
+            id_type = batch.schema[id_col].dataType.simpleString()
+            index = spark.createDataFrame(
+                [], f"{id_col} {id_type}, band_idx int, band_hash string"
+            )
+            corpus = batch.limit(0)
+        pairs, delta_bands = neardup_upsert(
+            index, batch, corpus,
+            id_col=id_col, text_col=text_col, n_hashes=n_hashes,
+            band_size=band_size, shingle_n=shingle_n,
+            threshold=threshold, hash_fn=hash_fn,
+            broadcast_delta=broadcast_delta,
+        )
+        _merge_all(batch, pairs, delta_bands)
 
     def _merge_groups(pairs: DataFrame) -> None:
         # fold the batch's verified pairs into the stored group labels
@@ -195,18 +182,15 @@ def start_incremental_neardup(
                 [], f"{id_col} {id_type}, component {id_type}"
             )
         delta = cc_upsert(stored, pairs.select("id_a", "id_b"), id_col=id_col)
-        try:
-            if bucketed:
-                lake.upsert(
-                    groups_table,
-                    _bucket(delta, id_col, "grp_bucket"),
-                    keys=["grp_bucket", id_col],
-                    partition_by=["grp_bucket"],
-                )
-            else:
-                lake.upsert(groups_table, delta, keys=[id_col])
-        finally:
-            release_local_checkpoint(delta)
+        if bucketed:
+            lake.upsert(
+                groups_table,
+                _bucket(delta, id_col, "grp_bucket"),
+                keys=["grp_bucket", id_col],
+                partition_by=["grp_bucket"],
+            )
+        else:
+            lake.upsert(groups_table, delta, keys=[id_col])
 
     def _merge_all(
         batch: DataFrame, pairs: DataFrame, delta_bands: DataFrame
@@ -218,37 +202,31 @@ def start_incremental_neardup(
         if bucketed:
             # the pruned MERGE traverses each source twice (bucket
             # distinct + the merge join) and `pairs` carries the
-            # verify leg — pin both once, release when merged
-            pairs = _bucket(pairs, "id_a", "pair_bucket").localCheckpoint(
-                eager=True
+            # verify leg — checkpoint both once
+            pairs = scoped_checkpoint(_bucket(pairs, "id_a", "pair_bucket"))
+            bands = scoped_checkpoint(
+                _bucket(delta_bands, "band_hash", "band_bucket")
             )
-            bands = _bucket(
-                delta_bands, "band_hash", "band_bucket"
-            ).localCheckpoint(eager=True)
-            try:
-                lake.upsert(
-                    pairs_table,
-                    pairs,
-                    keys=["pair_bucket", "id_a", "id_b"],
-                    partition_by=["pair_bucket"],
-                )
-                lake.upsert(
-                    index_table,
-                    bands,
-                    keys=["band_bucket", id_col, "band_idx"],
-                    partition_by=["band_bucket"],
-                )
-                if groups_table:
-                    _merge_groups(pairs)
-                lake.upsert(
-                    corpus_table,
-                    _bucket(batch, id_col, "id_bucket"),
-                    keys=["id_bucket", id_col],
-                    partition_by=["id_bucket"],
-                )
-            finally:
-                release_local_checkpoint(pairs)
-                release_local_checkpoint(bands)
+            lake.upsert(
+                pairs_table,
+                pairs,
+                keys=["pair_bucket", "id_a", "id_b"],
+                partition_by=["pair_bucket"],
+            )
+            lake.upsert(
+                index_table,
+                bands,
+                keys=["band_bucket", id_col, "band_idx"],
+                partition_by=["band_bucket"],
+            )
+            if groups_table:
+                _merge_groups(pairs)
+            lake.upsert(
+                corpus_table,
+                _bucket(batch, id_col, "id_bucket"),
+                keys=["id_bucket", id_col],
+                partition_by=["id_bucket"],
+            )
             # steady appends (the insert-only MERGE fast path writes one
             # file per touched bucket per batch) need compaction or the
             # per-batch probe/verify reads degrade on file count; the
@@ -263,18 +241,13 @@ def start_incremental_neardup(
                     lake.set_auto_compact(tbl, max(512, 8 * state_buckets))
         elif groups_table:
             # pairs' lineage reads the index/corpus tables the MERGEs
-            # below rewrite — pin it before any write or the deferred
-            # cc_upsert materialization reads deleted files
-            pairs = pairs.localCheckpoint(eager=True)
-            try:
-                lake.upsert(pairs_table, pairs, keys=["id_a", "id_b"])
-                lake.upsert(
-                    index_table, delta_bands, keys=[id_col, "band_idx"]
-                )
-                _merge_groups(pairs)
-                lake.upsert(corpus_table, batch, keys=[id_col])
-            finally:
-                release_local_checkpoint(pairs)
+            # below rewrite — checkpoint it before any write or the
+            # deferred cc_upsert materialization reads deleted files
+            pairs = scoped_checkpoint(pairs)
+            lake.upsert(pairs_table, pairs, keys=["id_a", "id_b"])
+            lake.upsert(index_table, delta_bands, keys=[id_col, "band_idx"])
+            _merge_groups(pairs)
+            lake.upsert(corpus_table, batch, keys=[id_col])
         else:
             lake.upsert(pairs_table, pairs, keys=["id_a", "id_b"])
             lake.upsert(index_table, delta_bands, keys=[id_col, "band_idx"])
