@@ -272,6 +272,30 @@ def test_update_and_delete_where(spark, tmp_path):
     assert lake.read("t").count() == 1
 
 
+@pytest.mark.parametrize(
+    "rewrite, raises, expect",
+    [
+        # the job raises mid-write: the old table stays intact
+        (lambda t: t.select(F.udf(lambda x: 1 // 0, "long")("id").alias("id")),
+         True, range(100)),
+        # a narrow rewrite that reads the table it replaces (no shuffle
+        # between the scan and the write)
+        (lambda t: t.where("id < 50"), False, range(50)),
+    ],
+    ids=["failed_job", "narrow_self_overwrite"],
+)
+def test_overwrite_never_loses_the_table(spark, tmp_path, rewrite, raises, expect):
+    import contextlib
+    import os
+
+    lake = Lakehouse(spark, str(tmp_path))
+    lake.overwrite("t", spark.range(100))
+    with pytest.raises(Exception) if raises else contextlib.nullcontext():
+        lake.overwrite("t", rewrite(lake.read("t")))
+    assert sorted(r.id for r in lake.read("t").collect()) == list(expect)
+    assert not [d for d in os.listdir(tmp_path) if d.startswith((".tmp-", ".trash-"))]
+
+
 # ---------------------------------------------------------------------------
 # Expectations
 # ---------------------------------------------------------------------------

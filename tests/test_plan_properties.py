@@ -770,6 +770,55 @@ def test_broadcast_gate_follows_session_budget(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
+# jobs per call + collect with broadcasts disabled; the size gate's
+# count() (a map-stage job plus a result job) would add 2 to each
+DISABLED_GATE_JOB_CEILINGS = {"triangle_counts": 11, "community_lpa": 20,
+                              "connected_components": 20}
+
+
+@pytest.mark.parametrize("op", sorted(DISABLED_GATE_JOB_CEILINGS))
+def test_disabled_broadcast_gate_runs_no_count_job(spark, op):
+    """A zero broadcast budget decides the gate without counting the
+    label/edge frame: the operator's Spark job count stays pinned."""
+    import uuid
+
+    from ubeardw_databricks_lakehouse_spark.operators.dedup import (
+        connected_components,
+    )
+    from ubeardw_databricks_lakehouse_spark.operators.graph import (
+        community_lpa,
+        triangle_counts,
+    )
+
+    edges = spark.createDataFrame(
+        [(a, b) for a in range(4) for b in range(a + 1, 4)] + [(3, 9)],
+        "src long, dst long",
+    )
+    run = {
+        "triangle_counts": lambda: triangle_counts(edges),
+        "community_lpa": lambda: community_lpa(edges),
+        "connected_components": lambda: connected_components(
+            edges.selectExpr("src AS id_a", "dst AS id_b"),
+            spark.createDataFrame([(i,) for i in (0, 1, 2, 3, 7, 9)], "doc_id long"),
+        ),
+    }[op]
+    sc = spark.sparkContext
+    group = f"gate-{uuid.uuid4().hex[:8]}"
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        sc.setJobGroup(group, group)
+        run().collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= DISABLED_GATE_JOB_CEILINGS[op], (
+        f"{op} ran {n_jobs} jobs with broadcasts disabled"
+    )
+
+
 class _Conf:
     def __init__(self, values):
         self.values = values

@@ -75,7 +75,7 @@ def optimize_table(
             ).sortWithinPartitions(*zorder_by)
         else:
             clustered = df.coalesce(int(n_out))
-        lake._swap(table, clustered)
+        lake.overwrite(table, clustered)
     after = describe_detail(lake, table)
     return {
         "table": table,
@@ -109,7 +109,7 @@ def analyze_table(lake: Lakehouse, table: str) -> None:
 def vacuum(lake: Lakehouse, retention_hours: float = 168.0) -> list[str]:
     """Remove aged swap-trash directories (VACUUM parity).
 
-    The parquet backend's crash-safe ``_swap`` renames the previous
+    The parquet backend's crash-safe full-table swap renames the previous
     table directory to ``.trash-<table>-<uuid>`` before promoting the
     new write (storage/lakehouse.py) — the analogue of Delta's
     unreferenced files. VACUUM deletes trash older than the retention

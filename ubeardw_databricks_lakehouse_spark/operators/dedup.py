@@ -904,10 +904,12 @@ def _min_label_propagation(
     # EDGE SET against a label vector that is noise next to it. With
     # it, a round's only exchange is the min-label aggregation. The
     # endpoint count is corpus duplication mass, not corpus size —
-    # usually tiny — and join strategy never changes the min.
+    # usually tiny — and join strategy never changes the min. A zero
+    # budget (broadcasts disabled) skips the count job.
+    budget = resolve_broadcast_rows(edges.sparkSession, 16)
     brd = (
         F.broadcast
-        if labels.count() <= resolve_broadcast_rows(edges.sparkSession, 16)
+        if budget and labels.count() <= budget
         else (lambda df: df)
     )
     converged = False

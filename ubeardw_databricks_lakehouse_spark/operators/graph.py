@@ -296,12 +296,13 @@ def triangle_counts(
     # reused 3x below (wedge x2 + closure)
     oriented = checkpoint(_oriented_edges(edges, src, dst, orient))
     # size-gated broadcast of the edge side (see docstring): the count
-    # scans the just-materialized checkpoint blocks, no recompute
+    # scans the just-materialized checkpoint blocks, no recompute; a
+    # zero budget (broadcasts disabled) skips it
     if broadcast_edges == "auto":
         broadcast_edges = resolve_broadcast_rows(edges.sparkSession, 16)
     brd = (
         F.broadcast
-        if broadcast_edges is not None and oriented.count() <= broadcast_edges
+        if broadcast_edges and oriented.count() <= broadcast_edges
         else (lambda df: df)
     )
     # weighted only when capped: the exact path counts corner rows
@@ -650,11 +651,12 @@ def community_lpa(
     # EDGE TABLE by v (the round's dominant cost; the label side is
     # noise). With it the join is map-side and each round's only
     # shuffles are the two label aggregations. Join strategy never
-    # changes the picked labels.
-    n_nodes = labels.count()
+    # changes the picked labels. A zero budget (broadcasts disabled)
+    # skips the count job.
+    budget = resolve_broadcast_rows(edges.sparkSession, 16)
     brd = (
         F.broadcast
-        if n_nodes <= resolve_broadcast_rows(edges.sparkSession, 16)
+        if budget and labels.count() <= budget
         else (lambda df: df)
     )
     for _ in range(n_iter):

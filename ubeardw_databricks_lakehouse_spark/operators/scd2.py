@@ -8,9 +8,12 @@ composite-key support:
 2. change-detect via LEFT JOIN against current rows
    (``target.row_hash IS NULL OR source.row_hash != target.row_hash``);
 3. short-circuit when nothing changed (gold_pipeline.py:177-180);
-4. expire matched current rows (is_current=false, end date);
-5. assign version = coalesce(max_existing, 0) + 1 via a grouped-max join;
-6. append the new current versions.
+4. assign version = coalesce(max_existing, 0) + 1 via a grouped-max join;
+5. commit the expired previous versions (is_current=false, end date)
+   and the new current versions as ONE ``Lakehouse.upsert`` keyed on
+   business keys + version_number: the expired rows match and update,
+   the new versions insert — one MERGE on either backend, so no crash
+   window leaves a changed key without a current row.
 
 Scale notes: the dimension side is small relative to the fact; the
 change-detection join broadcasts the *current* snapshot of the dim when
@@ -90,8 +93,8 @@ def apply_scd2(
         .filter(F.col("_cur_hash").isNull() | (F.col("row_hash") != F.col("_cur_hash")))
         .drop("_cur_hash")
     )
-    # Persist the (small) change set: it feeds the expiry condition, the
-    # version join, and the append — one computation, three consumers.
+    # Persist the (small) change set: it feeds the expiry semi-join, the
+    # version join, and the new rows — one computation, three consumers.
     changes = changes.cache()
     n_changes = changes.count()
     if n_changes == 0:
@@ -101,28 +104,12 @@ def apply_scd2(
     # Expire the previous current versions of the changed keys. The changed
     # key set is small → broadcast to the dim scan, no shuffle.
     changed_keys = changes.select(*business_keys).distinct()
-    existing = lake.read(table)
-    expired_flag = F.broadcast(changed_keys.withColumn("_expire", F.lit(True)))
-    with_flag = existing.join(expired_flag, on=business_keys, how="left")
-    expired = with_flag.select(
-        *[
-            F.when(
-                F.col("_expire").isNotNull() & F.col("is_current"), F.lit(False)
-            )
-            .otherwise(F.col("is_current"))
-            .alias(c)
-            if c == "is_current"
-            else (
-                F.when(
-                    F.col("_expire").isNotNull() & F.col("is_current"), effective_ts
-                )
-                .otherwise(F.col("effective_end_date"))
-                .alias(c)
-                if c == "effective_end_date"
-                else F.col(c)
-            )
-            for c in existing.columns
-        ]
+    expired = (
+        lake.read(table)
+        .filter(F.col("is_current"))
+        .join(F.broadcast(changed_keys), on=business_keys, how="left_semi")
+        .withColumn("is_current", F.lit(False))
+        .withColumn("effective_end_date", effective_ts)
     )
 
     # Version numbers for the new rows (gold_pipeline.py:197-211).
@@ -144,36 +131,12 @@ def apply_scd2(
     if surrogate_name:
         new_rows = new_rows.withColumn(surrogate_name, surrogate_key(business_keys))
 
-    if lake.fmt == "delta":  # pragma: no cover - delta not in this container
-        # ACID path: expire via DeltaTable.merge against the changed-keys
-        # DATAFRAME (reference: gold_pipeline.py:187-195) — the key set
-        # never leaves the cluster, so there is no driver-memory or
-        # SQL-literal ceiling on the size of a change batch. The expiry
-        # timestamp rides along as a source column so any Column-valued
-        # effective_ts (literal or current_timestamp) works.
-        from delta.tables import DeltaTable
-
-        merge_src = changed_keys.withColumn("_expire_ts", effective_ts)
-        cond = (
-            " AND ".join(f"target.{k} = source.{k}" for k in business_keys)
-            + " AND target.is_current"
-        )
-        (
-            DeltaTable.forPath(lake.spark, lake.path(table))
-            .alias("target")
-            .merge(merge_src.alias("source"), cond)
-            .whenMatchedUpdate(
-                set={
-                    "is_current": "false",
-                    "effective_end_date": "source._expire_ts",
-                }
-            )
-            .execute()
-        )
-        lake.append(table, new_rows.select(*lake.read(table).columns))
-    else:
-        # parquet path: one rewrite commits expiry + append together
-        out = expired.unionByName(new_rows.select(*expired.columns))
-        lake._swap(table, out)
+    # one MERGE: the expired versions match their own (keys, version)
+    # row and update it, the new versions match nothing and insert
+    lake.upsert(
+        table,
+        expired.unionByName(new_rows.select(*expired.columns)),
+        keys=business_keys + ["version_number"],
+    )
     changes.unpersist()
     return n_changes

@@ -634,6 +634,9 @@ def run_gold_job(
     for df in cached:
         df.cache()
 
+    from concurrent.futures import ThreadPoolExecutor
+    from functools import partial
+
     from ..core.catalog import GOLD_TABLES
 
     def _location() -> None:
@@ -643,26 +646,25 @@ def run_gold_job(
             partition_by=list(GOLD_TABLES["dim_location"].partition_by),
         )
 
-    def _scd2(name: str, enriched: DataFrame, keys: list[str],
-              compare, surrogate: str) -> None:
+    scd2_dims = {
+        "dim_eater": (eater_with_metrics, eater_silver),
+        "dim_merchant": (merchant_with_metrics, merchant_silver),
+        "dim_courier": (courier_with_metrics, courier_silver),
+    }
+
+    def _scd2(name: str) -> None:
+        build, silver = scd2_dims[name]
+        spec = GOLD_TABLES[name]
         apply_scd2(
-            lake, name, enriched, keys, compare,
-            surrogate_name=surrogate, effective_ts=effective_ts,
+            lake, name, build(silver, trip_events_silver),
+            list(spec.scd2_business_keys), list(spec.scd2_compare_columns),
+            surrogate_name=name.removeprefix("dim_") + "_key",
+            effective_ts=effective_ts,
         )
 
     dim_tasks = [
         _location,
-        lambda: _scd2(
-            "dim_eater", eater_with_metrics(eater_silver, trip_events_silver),
-            ["eater_id"], EATER_COMPARE_COLS, "eater_key"),
-        lambda: _scd2(
-            "dim_merchant",
-            merchant_with_metrics(merchant_silver, trip_events_silver),
-            ["merchant_id"], MERCHANT_COMPARE_COLS, "merchant_key"),
-        lambda: _scd2(
-            "dim_courier",
-            courier_with_metrics(courier_silver, trip_events_silver),
-            ["courier_id"], COURIER_COMPARE_COLS, "courier_key"),
+        *(partial(_scd2, name) for name in scd2_dims),
         lambda: (
             None if lake.exists("dim_date")
             else lake.overwrite("dim_date", generate_dim_date(spark))
@@ -672,8 +674,6 @@ def run_gold_job(
             else lake.overwrite("dim_time", generate_dim_time(spark))
         ),
     ]
-    from concurrent.futures import ThreadPoolExecutor
-
     with ThreadPoolExecutor(max_workers=len(dim_tasks)) as pool:
         futures = [pool.submit(fn) for fn in dim_tasks]
         for f in futures:  # surface the first failure, fail the job

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .lakehouse import Lakehouse, read_changes
+from .lakehouse import Lakehouse, _next_commit_version, read_changes
 
 def _sign() -> F.Column:
     # lazy: Column construction needs an active session (import-time
@@ -140,7 +140,6 @@ def refresh_metric_view(
     caller owns dedup across calls); the watermark still advances to
     the max version actually folded.
     """
-    cdf_name = f"{base_name}__cdf"
     if not lake.exists(view_name):
         base = lake.read(base_name)
         seed = base.groupBy(*group_cols).agg(
@@ -149,13 +148,8 @@ def refresh_metric_view(
             ),
             F.count("*").alias("n_rows"),
         )
-        seeded_version = 0
-        if lake.exists(cdf_name):
-            cdf = lake.read(cdf_name)
-            if "_commit_version" in cdf.columns:
-                seeded_version = int(
-                    cdf.agg(F.max("_commit_version")).first()[0] or 0
-                )
+        # the CDF's newest version (0 without a CDF) is inside the seed
+        seeded_version = _next_commit_version(lake, f"{base_name}__cdf") - 1
         lake.overwrite(
             view_name, seed, meta={"last_commit_version": seeded_version}
         )
@@ -176,9 +170,7 @@ def refresh_metric_view(
         last_v = int(m["last_commit_version"])
         changes = read_changes(lake, base_name, since_version=last_v)
     prev_v = int(lake.read_table_meta(view_name).get("last_commit_version", 0))
-    hi = None
-    if "_commit_version" in changes.columns:
-        hi = changes.agg(F.max("_commit_version")).first()[0]
+    hi = changes.agg(F.max("_commit_version")).first()[0]
     new_v = max(prev_v, int(hi or 0))
     deltas = metric_deltas(changes, group_cols, value_col, value_prec)
     apply_deltas(

@@ -13,10 +13,16 @@ API over two backends:
   by directory swap. Correctness-equivalent for a single writer, which
   is what the tests and the bench exercise.
 
-Scale notes: ``upsert`` is a key-equi join — at 100 TB the target side
-is partition-pruned by the merge keys' partition columns before the
-join (pass ``prune_filter``), and AQE handles skewed keys. The parquet
-fallback rewrites matched partitions only when ``partition_by`` is set.
+Every commit goes through this class: callers use ``overwrite``,
+``append`` and ``upsert`` and never pick a backend protocol. On parquet
+every full-table rewrite is one staged write renamed into place
+(``_swap``), so a failed job or a self-reading rewrite never loses the
+live table.
+
+Scale notes: ``upsert`` is a key-equi join — when the table is
+partitioned on a subset of the merge keys, the parquet fallback reads
+and rewrites only the partitions the source touches (see ``upsert``'s
+partition-pruned rewrite), and AQE handles skewed keys.
 """
 
 from __future__ import annotations
@@ -111,26 +117,28 @@ class Lakehouse:
         partition_by: list[str] | None = None,
         meta: dict | None = None,
     ) -> None:
-        """Full-table rewrite. With ``meta`` set, the metadata file is
-        written into the staging directory BEFORE the promote rename,
-        so table data and metadata commit in one atomic swap — the
-        parquet twin of Delta's txnAppId/txnVersion transaction tags
-        (the idempotent-foreachBatch pattern). Without meta, a plain
-        overwrite — which still CARRIES FORWARD any existing sidecar
-        properties (auto-compact thresholds survive INSERT OVERWRITE,
+        """Full-table rewrite. On parquet it commits as one swap: ``df``
+        is written into a staging directory, then the live directory is
+        renamed aside and the staged one renamed into place (Delta
+        writes in place, atomic through its log, unless sidecar
+        metadata is involved). A job that fails
+        leaves the old table intact, and ``df`` may read the table it
+        replaces. With ``meta`` set, the metadata file is written into
+        the staging directory before the rename, so table data and
+        metadata commit together — the parquet twin of Delta's
+        txnAppId/txnVersion transaction tags (the idempotent-foreachBatch
+        pattern). Without meta, existing sidecar properties carry
+        forward (auto-compact thresholds survive INSERT OVERWRITE,
         matching Delta's table-property semantics)."""
-        if meta is None:
-            existing = self.read_table_meta(name)
-            if existing:
-                meta = existing
-        if meta is not None:
-            self._swap(name, df, partition_by, meta=meta)
-            return
-        writer = df.write.format(self.fmt).mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-            self._partitioning[name] = partition_by
-        writer.save(self.path(name))
+        if self.fmt == "delta":  # pragma: no cover - delta not in container
+            if meta is None and not self.read_table_meta(name):
+                writer = df.write.format(self.fmt).mode("overwrite")
+                if partition_by:
+                    writer = writer.partitionBy(*partition_by)
+                    self._partitioning[name] = partition_by
+                writer.save(self.path(name))
+                return
+        self._swap(name, df, partition_by, meta=meta)
 
     def append(
         self,
@@ -485,7 +493,7 @@ class Lakehouse:
     def update_where(
         self, name: str, condition: str, set_map: dict[str, str]
     ) -> None:
-        """UPDATE t SET ... WHERE cond (used by SCD2 expiry)."""
+        """UPDATE t SET ... WHERE cond."""
         if self.fmt == "delta":  # pragma: no cover
             from delta.tables import DeltaTable
 
@@ -573,12 +581,18 @@ class Lakehouse:
         if meta is None:
             meta = self.read_table_meta(name) or None
         tmp = os.path.join(self.root, f".tmp-{name}-{uuid.uuid4().hex[:8]}")
+        if partition_by:
+            self._partitioning[name] = partition_by
         partition_by = partition_by or self.partitioning(name)
         df = self._maybe_optimize_write(name, df, partition_by)
         writer = df.write.format(self.fmt).mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.save(tmp)
+        try:
+            writer.save(tmp)
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
         if meta is not None:
             with open(os.path.join(tmp, "_graft_meta.json"), "w") as f:
                 json.dump(meta, f)
@@ -621,10 +635,6 @@ def upsert_with_cdf(
     never does, so change-order-sensitive consumers (``read_as_of``,
     IVM watermarks) are deterministic.
     """
-    import uuid as _uuid
-
-    commit = batch_ts or "1970-01-01 00:00:00"
-    commit_col = F.lit(commit).cast("timestamp")
     key_cond = None
     for k in keys:
         c = F.col(f"source.{k}") == F.col(f"target.{k}")
@@ -662,19 +672,7 @@ def upsert_with_cdf(
         changes = inserts.unionByName(pre).unionByName(post)
     else:
         changes = source.withColumn("_change_type", F.lit("insert"))
-    cdf_name = f"{name}__cdf"
-    changes = (
-        changes.withColumn("_commit_timestamp", commit_col)
-        .withColumn("_commit_id", F.lit(_uuid.uuid4().hex[:12]))
-        .withColumn(
-            "_commit_version",
-            F.lit(_next_commit_version(lake, cdf_name)).cast("long"),
-        )
-    )
-    if lake.exists(cdf_name):
-        lake.append(cdf_name, changes)
-    else:
-        lake.overwrite(cdf_name, changes)
+    _append_changes(lake, name, changes, batch_ts)
     lake.upsert(name, source, keys, update_condition=update_condition)
 
 
@@ -690,26 +688,34 @@ def delete_where_with_cdf(
     the table rewrite drops them. Incremental consumers
     (``storage/ivm``) subtract the deleted rows' contribution instead
     of rescanning the base."""
-    import uuid as _uuid
-
-    commit = batch_ts or "1970-01-01 00:00:00"
-    cdf_name = f"{name}__cdf"
     deleted = (
         lake.read(name)
         .where(F.expr(condition))
         .withColumn("_change_type", F.lit("delete"))
-        .withColumn("_commit_timestamp", F.lit(commit).cast("timestamp"))
-        .withColumn("_commit_id", F.lit(_uuid.uuid4().hex[:12]))
+    )
+    _append_changes(lake, name, deleted, batch_ts)
+    lake.delete_where(name, condition)
+
+
+def _append_changes(
+    lake: "Lakehouse", name: str, changes: DataFrame, batch_ts: str | None
+) -> None:
+    """Stamp one commit's change rows with its timestamp, id and version
+    and append them to ``<name>__cdf`` (``append`` creates the table on
+    the first commit)."""
+    cdf_name = f"{name}__cdf"
+    lake.append(
+        cdf_name,
+        changes.withColumn(
+            "_commit_timestamp",
+            F.lit(batch_ts or "1970-01-01 00:00:00").cast("timestamp"),
+        )
+        .withColumn("_commit_id", F.lit(uuid.uuid4().hex[:12]))
         .withColumn(
             "_commit_version",
             F.lit(_next_commit_version(lake, cdf_name)).cast("long"),
-        )
+        ),
     )
-    if lake.exists(cdf_name):
-        lake.append(cdf_name, deleted)
-    else:
-        lake.overwrite(cdf_name, deleted)
-    lake.delete_where(name, condition)
 
 
 def _next_commit_version(lake: "Lakehouse", cdf_name: str) -> int:
@@ -720,10 +726,7 @@ def _next_commit_version(lake: "Lakehouse", cdf_name: str) -> int:
     the rest of the parquet fallback."""
     if not lake.exists(cdf_name):
         return 1
-    df = lake.read(cdf_name)
-    if "_commit_version" not in df.columns:  # pre-versioning CDF rows
-        return 1 + df.select("_commit_id").distinct().count()
-    v = df.agg(F.max("_commit_version")).first()[0]
+    v = lake.read(cdf_name).agg(F.max("_commit_version")).first()[0]
     return int(v or 0) + 1
 
 
@@ -781,13 +784,8 @@ def read_as_of(
 
     # commits order by the monotonic _commit_version (Delta's CDF key):
     # _commit_timestamp collides whenever writers omit batch_ts, and the
-    # random _commit_id would then break ties arbitrarily. Legacy CDF
-    # tables without the column fall back to the old ordering.
-    if "_commit_version" in ch.columns:
-        commit_order = [F.col("_commit_version"), type_rank]
-    else:
-        commit_order = [F.col("_commit_timestamp"), type_rank, F.col("_commit_id")]
-    w = Window.partitionBy(*w_key).orderBy(*commit_order)
+    # random _commit_id would then break ties arbitrarily
+    w = Window.partitionBy(*w_key).orderBy(F.col("_commit_version"), type_rank)
     first_change = (
         ch.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
@@ -806,14 +804,9 @@ def table_history(lake: "Lakehouse", name: str) -> DataFrame:
     surface Delta exposes natively (reference:
     utils/optimize_tables.py DESCRIBE-family introspection), rebuilt
     for the parquet backend from the change rows themselves."""
-    ch = lake.read(f"{name}__cdf")
-    group_cols = ["_commit_id", "_commit_timestamp"]
-    order = [F.col("_commit_timestamp").desc(), F.col("_commit_id")]
-    if "_commit_version" in ch.columns:
-        group_cols = ["_commit_version", *group_cols]
-        order = [F.col("_commit_version").desc()]
     return (
-        ch.groupBy(*group_cols)
+        lake.read(f"{name}__cdf")
+        .groupBy("_commit_version", "_commit_id", "_commit_timestamp")
         .agg(
             F.count(F.when(F.col("_change_type") == "insert", 1)).alias(
                 "n_inserted"
@@ -825,7 +818,7 @@ def table_history(lake: "Lakehouse", name: str) -> DataFrame:
                 "n_deleted"
             ),
         )
-        .orderBy(*order)
+        .orderBy(F.col("_commit_version").desc())
     )
 
 
