@@ -198,7 +198,7 @@ def test_incremental_neardup_maintains_groups(spark, tmp_path):
     both the plain and the bucketed layouts, and a fresh-checkpoint
     redelivery changes nothing."""
     from ubeardw_databricks_lakehouse_spark.operators.dedup import (
-        connected_components_auto,
+        connected_components,
     )
 
     docs = spark.read.parquet(DOCS)
@@ -224,7 +224,7 @@ def test_incremental_neardup_maintains_groups(spark, tmp_path):
         )
         want = {
             (r.doc_id, r.component)
-            for r in connected_components_auto(pairs, verts).collect()
+            for r in connected_components(pairs, verts).collect()
         }
         got = {
             (r.doc_id, r.component)

@@ -144,7 +144,9 @@ def test_upsert_partition_pruned_rewrites_only_touched(spark, tmp_path):
     lakeA = Lakehouse(spark, str(tmp_path / "pruned"))
     lakeB = Lakehouse(spark, str(tmp_path / "full"))
     lakeA.overwrite("t", base, partition_by=["b"])
-    lakeB.overwrite("t", base, partition_by=["b"])
+    # the reference lake is unpartitioned, so its MERGE takes the
+    # full-table rewrite
+    lakeB.overwrite("t", base)
 
     # source: 3 updates + 1 insert, all landing in a known bucket subset
     src = bucketed(
@@ -168,7 +170,7 @@ def test_upsert_partition_pruned_rewrites_only_touched(spark, tmp_path):
     before = files(lakeA)
     guard = "source.ts > target.ts"
     lakeA.upsert("t", src, keys=["b", "k"], update_condition=guard)
-    lakeB.upsert("t", src, keys=["b", "k"], update_condition=guard, prune=False)
+    lakeB.upsert("t", src, keys=["b", "k"], update_condition=guard)
     after = files(lakeA)
 
     # untouched buckets: identical files (path + mtime); touched: replaced
@@ -516,7 +518,7 @@ def test_neardup_with_persisted_signatures(spark, tmp_path):
     assert persisted == one_shot and one_shot
 
 
-def test_neardup_upsert_equals_batch_rerun(spark):
+def test_neardup_upsert_equals_batch_rerun(spark, monkeypatch):
     # the incremental contract: upsert(base_index, delta) emits exactly
     # the batch re-run's verified pairs that touch >=1 delta doc, and
     # base_index + returned delta bands == the batch-built index
@@ -545,11 +547,30 @@ def test_neardup_upsert_equals_batch_rerun(spark):
     }
     upserted = {tuple(r) for r in base_index.unionByName(delta_bands).collect()}
     assert upserted == full_index
-    # broadcast_delta=False changes the join strategy, never the pairs
-    pairs2, _ = neardup_upsert(
-        base_index, delta, base, threshold=0.5, broadcast_delta=False
-    )
-    assert {tuple(r) for r in pairs2.collect()} == want
+    # a session with broadcasts disabled plans no broadcast in any
+    # checkpointed intermediate, and the join strategy never changes
+    # the pairs
+    from ubeardw_databricks_lakehouse_spark.core.session import checkpoint
+    from ubeardw_databricks_lakehouse_spark.operators import dedup
+
+    plans = []
+
+    def recording_checkpoint(df):
+        out = checkpoint(df)
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    monkeypatch.setattr(dedup, "checkpoint", recording_checkpoint)
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        pairs2, _ = neardup_upsert(base_index, delta, base, threshold=0.5)
+        got2 = {tuple(r) for r in pairs2.collect()}
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert len(plans) == 3
+    assert not [p for p in plans if "BroadcastExchange" in p]
+    assert got2 == want
 
 
 def test_neardup_upsert_planted_cross_split_pair(spark):
@@ -1738,12 +1759,14 @@ def test_pq_invariants_and_monotone_error(spark):
 
 
 def test_connected_components_star_matches_propagation_random(spark):
-    """Star CC == min-label propagation on a random multi-component
-    graph (same labels, since both converge to component minima)."""
+    """Star CC == min-label propagation run to its fixpoint on a random
+    multi-component graph (same labels, since both converge to
+    component minima)."""
     import random
 
     from ubeardw_databricks_lakehouse_spark.operators.dedup import (
-        connected_components,
+        _min_label_propagation,
+        _symmetrized,
         connected_components_star,
     )
 
@@ -1762,7 +1785,10 @@ def test_connected_components_star_matches_propagation_random(spark):
         [(a, b) for a, b in edges if a != b], "id_a long, id_b long"
     )
     v = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-    prop = {r["doc_id"]: r["component"] for r in connected_components(e, v).collect()}
+    labels, converged = _min_label_propagation(_symmetrized(e), 100)
+    assert converged
+    prop = {r["v"]: r["lbl"] for r in labels.collect()}
+    assert len(prop) == n  # every id is an endpoint of the spanning chains
     star = {
         r["doc_id"]: r["component"]
         for r in connected_components_star(e, v).collect()
@@ -1773,9 +1799,10 @@ def test_connected_components_star_matches_propagation_random(spark):
 
 def test_connected_components_star_deep_chain(spark):
     """A 200-node chain (diameter 199): label propagation's bounded
-    25 rounds CANNOT finish it, the star algorithm converges in
-    O(log n) rounds — this is the deep-graph case that makes it the
-    production path."""
+    round budget CANNOT finish it, the star algorithm converges in
+    O(log n) rounds — so ``connected_components`` (the entry point
+    ``q_entity_clusters`` and ``resolve_entities`` call) must still
+    return a single component."""
     from ubeardw_databricks_lakehouse_spark.operators.dedup import (
         connected_components,
         connected_components_star,
@@ -1788,18 +1815,17 @@ def test_connected_components_star_deep_chain(spark):
     v = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
     star = connected_components_star(e, v)
     assert star.where("component != 0").count() == 0  # one component, min id 0
-    # the propagation twin with its default cap does NOT converge here
-    prop = connected_components(e, v, max_iter=25)
-    assert prop.where("component != 0").count() > 0
+    got = connected_components(e, v)
+    assert got.count() == n
+    assert got.where("component != 0").count() == 0
 
 
-def test_connected_components_auto_engine_selection(spark):
-    """The auto engine: shallow graphs resolve inside the propagation
+def test_connected_components_engine_selection(spark):
+    """Engine selection: shallow graphs resolve inside the propagation
     budget; a graph deeper than the budget flips to the star engine
-    instead of returning unconverged labels (the silent hazard plain
-    propagation has at its cap)."""
+    instead of returning unconverged labels."""
     from ubeardw_databricks_lakehouse_spark.operators.dedup import (
-        connected_components_auto,
+        connected_components,
     )
 
     # deep chain (diameter 199 >> prop_budget): auto must converge
@@ -1808,7 +1834,7 @@ def test_connected_components_auto_engine_selection(spark):
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
     v = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-    got = connected_components_auto(e, v)
+    got = connected_components(e, v)
     assert got.where("component != 0").count() == 0
     # shallow blob + singleton: same labels as ground truth
     e2 = spark.createDataFrame(
@@ -1817,7 +1843,7 @@ def test_connected_components_auto_engine_selection(spark):
     v2 = spark.createDataFrame([(i,) for i in (1, 2, 3, 7, 8, 9)], "doc_id long")
     got2 = {
         r["doc_id"]: r["component"]
-        for r in connected_components_auto(e2, v2).collect()
+        for r in connected_components(e2, v2).collect()
     }
     assert got2 == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7, 9: 9}
 
@@ -1839,21 +1865,30 @@ def test_connected_components_star_singletons_and_self_loops(spark):
 
 
 def test_dedup_clusters_star_engine_equivalent(spark):
-    """All three cc engines (auto default, propagation, star) produce
-    identical clusters on the sf0.001 corpus."""
-    from ubeardw_databricks_lakehouse_spark.operators.dedup import dedup_clusters
+    """dedup_clusters equals clusters built by the star engine from the
+    same verified pairs on the sf0.001 corpus."""
+    from ubeardw_databricks_lakehouse_spark.operators.dedup import (
+        connected_components_star,
+        dedup_clusters,
+    )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    base = {
+    got = {
         r["doc_id"]: (r["cluster_id"], r["cluster_size"], r["is_canonical"])
-        for r in dedup_clusters(docs).collect()  # auto default
+        for r in dedup_clusters(docs).collect()
     }
-    for engine in ("propagation", "star"):
-        got = {
-            r["doc_id"]: (r["cluster_id"], r["cluster_size"], r["is_canonical"])
-            for r in dedup_clusters(docs, cc=engine).collect()
-        }
-        assert got == base, engine
+    comp = {
+        r["doc_id"]: r["component"]
+        for r in connected_components_star(
+            neardup_verified_pairs(docs).select("id_a", "id_b"), docs
+        ).collect()
+    }
+    sizes = {}
+    for c in comp.values():
+        sizes[c] = sizes.get(c, 0) + 1
+    want = {d: (c, sizes[c], d == c) for d, c in comp.items()}
+    assert got == want
+    assert any(size > 1 for size in sizes.values())  # non-trivial clusters
 
 
 def test_resize_raw_images_exact_gather(spark):
@@ -2790,7 +2825,7 @@ def test_cc_upsert_equals_batch_over_waves(spark):
 
     from ubeardw_databricks_lakehouse_spark.operators.dedup import (
         cc_upsert,
-        connected_components_auto,
+        connected_components,
     )
 
     rnd = random.Random(31)
@@ -2811,7 +2846,7 @@ def test_cc_upsert_equals_batch_over_waves(spark):
         ).distinct()
         want = {
             (r.doc_id, r.component)
-            for r in connected_components_auto(ed, verts).collect()
+            for r in connected_components(ed, verts).collect()
         }
         assert set(state.items()) == want and want
 

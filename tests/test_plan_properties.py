@@ -885,6 +885,26 @@ def test_broadcast_rows_degrade_without_jvm_and_bound_by_smaller_heap():
         assert resolve_broadcast_rows(asym, 16) == 32 * mib // 64
 
 
+def test_broadcast_gate_decides_from_budget_and_rows():
+    """Broadcasts disabled: identity, and ``rows`` is never called (no
+    count job). Enabled: broadcast when ``rows`` is None or within the
+    budget, identity past it."""
+    from pyspark.sql import functions as F
+
+    from ubeardw_databricks_lakehouse_spark.core.session import broadcast_gate
+
+    def no_count():
+        raise AssertionError("the gate counted with broadcasts disabled")
+
+    off = _JvmlessSession(threshold="-1")
+    assert broadcast_gate(off, no_count)("df") == "df"
+    assert broadcast_gate(off)("df") == "df"
+    on = _JvmlessSession(threshold="1m")  # 32 MiB budget -> 524,288 rows
+    assert broadcast_gate(on) is F.broadcast
+    assert broadcast_gate(on, lambda: 524_288) is F.broadcast
+    assert broadcast_gate(on, lambda: 524_289)("df") == "df"
+
+
 def test_broadcast_rows_unchanged_on_the_shipped_local_session(spark):
     """local[n]: no executor memory conf, so the heap is the driver
     JVM's own maxMemory — the budget the gate always derived here."""

@@ -16,7 +16,7 @@ most new pairs join an existing dup group. Per rung:
   relabel scan of the stored table short-circuits to zero rows).
   Expect FLAT in corpus size.
 - ``batch_s``: the alternative a one-shot pipeline forces —
-  connected_components_auto over the ENTIRE grown edge set. Expect
+  connected_components over the ENTIRE grown edge set. Expect
   linear-or-worse in corpus.
 
 A merge-heavy rung at the largest corpus then pins the OTHER cost
@@ -59,7 +59,7 @@ def main() -> None:
     )
     from ubeardw_databricks_lakehouse_spark.operators.dedup import (
         cc_upsert,
-        connected_components_auto,
+        connected_components,
     )
 
     spark = get_spark(app_name="stress-cc-upsert")
@@ -114,7 +114,7 @@ def main() -> None:
             edges.selectExpr("id_b as doc_id")
         ).distinct()
         t0 = time.perf_counter()
-        n_batch = connected_components_auto(edges, verts).count()
+        n_batch = connected_components(edges, verts).count()
         batch_s = time.perf_counter() - t0
         results.append({
             "n_components": n_comp, "corpus_rows": n_comp * S,

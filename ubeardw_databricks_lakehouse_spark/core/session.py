@@ -26,6 +26,7 @@ import threading
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -256,13 +257,17 @@ def _heap_bytes(spark) -> int:
     return min(driver, executor)
 
 
-def resolve_broadcast_rows(spark, bytes_per_row: int, hydration: int = 4) -> int:
-    """Session-derived ROW budget for the iterative operators' explicit
-    broadcasts (pagerank's rank vector, LPA's label vector, the
-    triangle wedge probes, CC's endpoint labels) — r13 verdict #7: the
-    former 4M-row literals assumed one memory geometry; derive the gate
-    from the session the way ``resolve_auto_join_hint`` does, so small
-    executors shrink it and big ones relax it.
+_HYDRATION = 4  # hash-relation bytes per unsafe-row byte on narrow rows
+
+
+def resolve_broadcast_rows(spark, bytes_per_row: int) -> int:
+    """Session-derived ROW budget behind ``broadcast_gate``, the
+    iterative operators' explicit broadcasts (pagerank's rank vector,
+    LPA's label vector, the triangle wedge probes, CC's endpoint
+    labels) — r13 verdict #7: the former 4M-row literals assumed one
+    memory geometry; derive the gate from the session the way
+    ``resolve_auto_join_hint`` does, so small executors shrink it and
+    big ones relax it.
 
     Derivation (guide §3.1/§5):
 
@@ -277,8 +282,8 @@ def resolve_broadcast_rows(spark, bytes_per_row: int, hydration: int = 4) -> int
       relation must coexist with execution memory; guide §3.1 "a few
       hundred MB is usually fine, multiple GB is asking for OOMs"),
       capped well under Spark's 8 GB broadcast hard limit.
-    - rows = budget / (``bytes_per_row`` × ``hydration``): hydration 4x
-      covers the unsafe-row + hash-relation overhead on narrow rows.
+    - rows = budget / (``bytes_per_row`` × ``_HYDRATION``): 4x covers
+      the unsafe-row + hash-relation overhead on narrow rows.
 
     Only public session APIs plus an optional JVM heap probe are used,
     so a session without a JVM handle (Spark Connect) degrades to the
@@ -290,7 +295,33 @@ def resolve_broadcast_rows(spark, bytes_per_row: int, hydration: int = 4) -> int
     if thr < 0:
         return 0
     budget = min(max(thr, _heap_bytes(spark) // 32), 2 << 30)
-    return budget // (bytes_per_row * max(1, hydration))
+    return budget // (bytes_per_row * _HYDRATION)
+
+
+def broadcast_gate(spark, rows=None):
+    """The iterative operators' one broadcast decision: returns
+    ``F.broadcast`` or the identity, to wrap the small side of a join.
+
+    Checkpointed frames are ExistingRDDs whose size the planner cannot
+    see, so without an explicit hint every round sort-merges the big
+    side (an edge set, a wedge set) against a table that is noise next
+    to it. The gate forces the broadcast only when the session allows
+    it: with ``spark.sql.autoBroadcastJoinThreshold`` < 0 it returns
+    the identity without calling ``rows`` (a disabled session pays no
+    count job). Otherwise ``rows`` — a zero-argument callable giving
+    the small side's row count, typically a ``count`` of
+    just-materialized checkpoint blocks — is checked against
+    ``resolve_broadcast_rows(spark, 16)``; ``rows=None`` declares the
+    side bounded by contract (an ingest delta) and broadcasts it.
+    Join strategy never changes a join's rows."""
+    budget = resolve_broadcast_rows(spark, 16)
+    if budget and (rows is None or rows() <= budget):
+        return F.broadcast
+    return _identity
+
+
+def _identity(df: DataFrame) -> DataFrame:
+    return df
 
 
 def resolve_auto_join_hint(build_df) -> str | None:

@@ -49,8 +49,7 @@ exactly, and the batched algorithm itself is pinned against its own
 pure-Python reference (``train_bpe_reference`` with the same
 ``batch``/``max_candidates``).
 
-The driver loop is bounded by ``ceil(n_merges / batch)`` passes — the
-same bounded-iteration precedent as dedup.connected_components.
+The driver loop is bounded by ``ceil(n_merges / batch)`` passes.
 """
 
 from __future__ import annotations

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..core.session import checkpoint, release_local_checkpoint, resolve_broadcast_rows
+from ..core.session import broadcast_gate, checkpoint, release_local_checkpoint
 from .text import fingerprint, tokens
 
 
@@ -499,7 +499,6 @@ def neardup_upsert(
     shingle_n: int = 2,
     threshold: float = 0.5,
     hash_fn: str = "md5",
-    broadcast_delta: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental near-dup: new docs against a MATERIALIZED LSH band
     index, O(new), never O(corpus).
@@ -536,12 +535,13 @@ def neardup_upsert(
     as the ``signatures`` param of ``neardup_verified_pairs``) — a
     mismatch silently changes recall.
 
-    Scale: with ``broadcast_delta`` (default) the delta's band rows
-    broadcast to the index join, so the stored index is scanned but
-    never SHUFFLED — per-batch cost is O(new bands + collision buckets
-    + touched docs), flat in corpus size (measured flat on the stress
-    ladder; disable for a giant backfill delta where the planner
-    should pick the join side itself).
+    Scale: the delta's band rows broadcast to the index join (the delta
+    is O(batch) by contract), so the stored index is scanned but never
+    SHUFFLED — per-batch cost is O(new bands + collision buckets +
+    touched docs), flat in corpus size (measured flat on the stress
+    ladder). Both broadcasts go through ``broadcast_gate``: a giant
+    backfill that must not broadcast runs in a session with broadcasts
+    disabled, and the planner picks the join sides.
 
     Three intermediates every later stage re-references are eagerly
     ``checkpoint``-ed: the delta's band rows (referenced by the index
@@ -563,7 +563,8 @@ def neardup_upsert(
     delta_bands = checkpoint(
         lsh_band_index(new_sigs, id_col, n_hashes, band_size, hash_fn)
     )
-    nb = F.broadcast(delta_bands) if broadcast_delta else delta_bands
+    brd = broadcast_gate(new_docs.sparkSession)
+    nb = brd(delta_bands)
 
     # new-vs-base: delta bands probe the stored index
     base_side = base_index.select(
@@ -602,16 +603,14 @@ def neardup_upsert(
     # exact-Jaccard verify against only the docs the candidates touch:
     # the semi-join keeps the corpus read O(touched), and on a real
     # id-clustered table prunes to the touched files. cand_ids is
-    # O(collision buckets) — broadcast it (same size contract as the
-    # delta-band broadcast, same opt-out) so the corpus side of the
-    # semi-join is scanned map-side, never shuffled+sorted.
-    cand_ids = (
+    # O(collision buckets) — broadcast it (same size contract and gate
+    # as the delta bands) so the corpus side of the semi-join is
+    # scanned map-side, never shuffled+sorted.
+    cand_ids = brd(
         cands.select(F.col("id_a").alias(id_col))
         .union(cands.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
-    if broadcast_delta:
-        cand_ids = F.broadcast(cand_ids)
     touched_base = base_docs.join(cand_ids, id_col, "left_semi")
     verify_docs = new_docs.select(id_col, text_col).unionByName(
         touched_base.select(id_col, text_col)
@@ -821,27 +820,47 @@ def embedding_neardup_pairs_clustered(
     return _tiled_pair_grid(blocked, ["cell"], threshold, n_blocks).distinct()
 
 
+# min-label propagation rounds (the seed included) before a graph counts
+# as deep and the star engine finishes it
+PROPAGATION_ROUNDS = 8
+
+
 def connected_components(
     edges: DataFrame,
     vertices: DataFrame,
     id_col: str = "doc_id",
-    max_iter: int = 25,
 ) -> DataFrame:
-    """Min-label propagation to a fixpoint: (id, component) per vertex.
+    """Connected components: (id, component) per vertex, component =
+    the min id reachable from it, converged at any graph depth.
 
     ``edges`` is an undirected pair list (id_a, id_b); ``vertices``
     supplies every node (singletons keep their own id as component).
-    Each round ships every vertex's current label across its edges and
-    takes the min — converges in graph-diameter rounds, and near-dup
-    components are shallow (pairs already had to collide in LSH bands),
-    so 3-4 rounds is typical. Per round: one shuffle join + one
-    groupBy-min, both on the vertex key — no driver-side state beyond
-    the single converged? aggregate. At 100 TB this is the standard
-    large-graph CC recipe (GraphX/Pregel does the same message flow);
-    ``connected_components_star`` below is the large-star/small-star
-    twin for deep components (O(log n) rounds, diameter-free).
+    Endpoints absent from ``vertices`` still relay messages (they are
+    dropped only from the output), so callers must pass
+    vertices ⊇ endpoints for strict subgraph semantics — every caller
+    in this repo does.
 
-    Two structural economies (r10, the curation-capstone stage-4 fix):
+    The engine is picked by behavior, not by the caller: min-label
+    propagation runs for ``PROPAGATION_ROUNDS`` rounds, and a graph
+    that has not reached a fixpoint by then is finished by
+    ``connected_components_star``. Propagation converges in
+    graph-diameter rounds; near-dup collision graphs are shallow by
+    construction (pairs already had to collide in LSH bands — 3-4
+    rounds on the sf0.1 corpus, where it beats star ~1.2 s vs ~1.9 s),
+    so the common case never leaves it. No cheap ex-ante statistic
+    separates the regimes — mean degree confuses isolated pairs
+    (shallow) with long chains (deep), and diameter is exactly what
+    cannot be afforded — but a propagation run that exhausts its
+    budget has itself proven the graph deep, and the O(log n) star
+    engine's converged labels are identical (pytest-pinned). The star
+    engine reads the propagation's own checkpointed edge set, so the
+    shallow path pays nothing for the fallback and the deep path pays
+    only the budget's cheap rounds.
+
+    Per propagation round: one join + one groupBy-min, both on the
+    vertex key — no driver-side state beyond the single changed?
+    probe (the GraphX/Pregel message flow). Two structural economies
+    (r10, the curation-capstone stage-4 fix):
 
     - the iterated label frame holds EDGE ENDPOINTS only, not every
       vertex — a near-dup corpus is overwhelmingly singletons, which
@@ -853,42 +872,54 @@ def connected_components(
       label seed: round 1 of min-label propagation from identity
       labels is exactly min(self ∪ neighbors), one map-side-combinable
       groupBy over the symmetrized edges, no join.
-
-    Endpoints absent from ``vertices`` still relay messages (they are
-    dropped only from the output), so callers must pass
-    vertices ⊇ endpoints for strict subgraph semantics — every caller
-    in this repo does.
-
-    If the graph is deeper than ``max_iter`` the returned labels are
-    NOT converged — use ``connected_components_auto`` when the shape
-    is not known to be shallow (it detects budget exhaustion and
-    finishes with the diameter-free star engine).
     """
-    labels, _ = _min_label_propagation(edges, max_iter)
-    verts = vertices.select(F.col(id_col).alias("v")).distinct()
-    return verts.join(labels, "v", "left").select(
-        F.col("v").alias(id_col),
-        F.coalesce("lbl", F.col("v")).alias("component"),
-    )
+    sym = _symmetrized(edges)
+    labels, converged = _min_label_propagation(sym, PROPAGATION_ROUNDS)
+    if converged:
+        verts = vertices.select(F.col(id_col).alias("v")).distinct()
+        out = verts.join(labels, "v", "left").select(
+            F.col("v").alias(id_col),
+            F.coalesce("lbl", F.col("v")).alias("component"),
+        )
+    else:
+        release_local_checkpoint(labels, allow_projection=True)  # partial labels: garbage
+        # each undirected edge once; star materializes its own
+        # normalized copy at entry, and its result reads its final
+        # checkpoint
+        out = connected_components_star(
+            sym.where(F.col("v") < F.col("u")).select(
+                F.col("v").alias("id_a"), F.col("u").alias("id_b")
+            ),
+            vertices,
+            id_col,
+        )
+    # the result reads the labels (or star's) checkpoint, never sym
+    release_local_checkpoint(sym, allow_projection=True)
+    return out
 
 
-def _min_label_propagation(
-    edges: DataFrame, max_iter: int
-) -> tuple[DataFrame, bool]:
-    """The propagation core: endpoint labels plus a converged flag (so
-    callers can tell a fixpoint from budget exhaustion)."""
-    # materialize the symmetrized edge set ONCE: it is re-read by the
-    # seed and by every round's join, and the caller's edge lineage is
-    # often the expensive part (dedup_clusters hands over the whole
-    # MinHash->LSH->verify pipeline — before this checkpoint, each CC
-    # round silently re-ran it end to end)
-    sym = (
+def _symmetrized(edges: DataFrame) -> DataFrame:
+    """Both directions of every (id_a, id_b) edge as (v, u), materialized
+    ONCE: it is re-read by the seed, by every propagation round's join
+    and by a star fallback, and the caller's edge lineage is often the
+    expensive part (dedup_clusters hands over the whole
+    MinHash->LSH->verify pipeline — before this checkpoint, each CC
+    round silently re-ran it end to end)."""
+    return (
         edges.select(F.col("id_a").alias("v"), F.col("id_b").alias("u"))
         .unionByName(
             edges.select(F.col("id_b").alias("v"), F.col("id_a").alias("u"))
         )
         .transform(checkpoint)
     )
+
+
+def _min_label_propagation(
+    sym: DataFrame, max_iter: int
+) -> tuple[DataFrame, bool]:
+    """The propagation core over a ``_symmetrized`` edge set: endpoint
+    labels plus a converged flag (so callers can tell a fixpoint from
+    budget exhaustion). ``sym`` stays the caller's to release."""
     # seed = round 1 fused into the edge pass (duplicate edges are
     # harmless under min)
     labels = (
@@ -897,21 +928,11 @@ def _min_label_propagation(
         .transform(checkpoint)
     )
     # Broadcast the endpoint-label vector into each round's edge join
-    # when it fits the session budget (the LPA/pagerank pattern, r13
-    # verdict / r14 item #4): both per-round frames are checkpointed
-    # ExistingRDDs whose stats the planner cannot see, so without the
-    # hint every round pays a full shuffle+sort of the SYMMETRIZED
-    # EDGE SET against a label vector that is noise next to it. With
-    # it, a round's only exchange is the min-label aggregation. The
-    # endpoint count is corpus duplication mass, not corpus size —
-    # usually tiny — and join strategy never changes the min. A zero
-    # budget (broadcasts disabled) skips the count job.
-    budget = resolve_broadcast_rows(edges.sparkSession, 16)
-    brd = (
-        F.broadcast
-        if budget and labels.count() <= budget
-        else (lambda df: df)
-    )
+    # (the LPA/pagerank pattern): with it, a round's only exchange is
+    # the min-label aggregation instead of a shuffle+sort of the
+    # SYMMETRIZED EDGE SET. The endpoint count is corpus duplication
+    # mass, not corpus size — usually tiny.
+    brd = broadcast_gate(sym.sparkSession, labels.count)
     converged = False
     for _ in range(max_iter - 1):
         msgs_min = (
@@ -946,61 +967,7 @@ def _min_label_propagation(
         if changed == 0:
             converged = True
             break
-    # the final labels are a materialized checkpoint — the symmetrized
-    # edge set is no longer needed by anything downstream
-    release_local_checkpoint(sym, allow_projection=True)
     return labels, converged
-
-
-def connected_components_auto(
-    edges: DataFrame,
-    vertices: DataFrame,
-    id_col: str = "doc_id",
-    prop_budget: int = 8,
-    max_iter: int = 20,
-) -> DataFrame:
-    """Engine selection as behavior (not a caller decision): run
-    min-label propagation with a SMALL round budget; if the graph
-    turns out deep, finish with the large-star/small-star engine.
-
-    No cheap ex-ante statistic separates the two regimes — mean degree
-    confuses isolated pairs (degree 1, shallow, propagation's best
-    case) with long chains (degree 2, propagation's worst case), and
-    diameter is exactly the quantity you cannot afford to compute. The
-    shape detector that IS free: near-dup collision graphs are shallow
-    by construction (3-4 propagation rounds, measured on the sf0.1
-    corpus where propagation beats star ~1.2 s vs ~1.9 s), so a
-    propagation run that exhausts ``prop_budget`` rounds without a
-    fixpoint has itself proven the graph deep — switch to the
-    O(log n) engine, whose converged labels are identical
-    (pytest-pinned). This also closes a silent-correctness hazard:
-    plain ``connected_components`` returns UNCONVERGED labels when the
-    budget runs out; auto never does.
-
-    Cost accounting: the common (shallow) path pays one extra eager
-    checkpoint of the pair list (tiny — it is the collision graph, not
-    the corpus); the deep path pays ``prop_budget`` wasted cheap
-    rounds before the star engine takes over from the checkpoint.
-    """
-    # pin the caller's (often expensive) edge lineage once so a star
-    # fallback re-reads a cache, never re-runs MinHash->LSH->verify
-    edges = checkpoint(edges)
-    labels, converged = _min_label_propagation(edges, prop_budget)
-    if not converged:
-        release_local_checkpoint(labels, allow_projection=True)  # partial labels: garbage
-        out = connected_components_star(edges, vertices, id_col, max_iter)
-        # star materialized its own normalized copy at entry, and its
-        # result reads its final checkpoint — the entry pin is dead
-        release_local_checkpoint(edges, allow_projection=True)
-        return out
-    # converged: the labels checkpoint is materialized — neither the
-    # edge pin nor the (already released) sym is needed downstream
-    release_local_checkpoint(edges, allow_projection=True)
-    verts = vertices.select(F.col(id_col).alias("v")).distinct()
-    return verts.join(labels, "v", "left").select(
-        F.col("v").alias(id_col),
-        F.coalesce("lbl", F.col("v")).alias("component"),
-    )
 
 
 def connected_components_star(
@@ -1011,7 +978,8 @@ def connected_components_star(
 ) -> DataFrame:
     """Large-star/small-star connected components (Kiveris et al. 2014,
     "Connected Components in MapReduce and Beyond") — the deep-graph
-    production twin of ``connected_components``.
+    engine ``connected_components`` finishes with once propagation
+    proves a graph deep.
 
     Min-label propagation converges in graph-DIAMETER rounds: fine for
     shallow near-dup graphs (3-4), quadratic wall-clock on chains. The
@@ -1030,11 +998,11 @@ def connected_components_star(
     one tiny agg per round, no edge-set collect).
 
     Equivalence with the propagation path is pytest-pinned on random
-    graphs and on a 200-node chain the propagation cap can't finish.
+    graphs and on a 200-node chain the propagation budget cannot finish.
     """
     # materialize the normalized edge set once: _large_star references
     # it twice (groupBy + join) and the caller's edge lineage can be
-    # expensive (see connected_components)
+    # expensive (see _symmetrized)
     e = (
         edges.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
         .where(F.col("a") != F.col("b"))
@@ -1056,27 +1024,29 @@ def connected_components_star(
     # round loop tracks from its own convergence checksum — edge
     # counts are monotonically non-increasing, so the gate only ever
     # relaxes as rounds shrink the graph.
-    def _brd(mins: DataFrame, n_edges: int, budget: int):
-        return F.broadcast(mins) if 2 * n_edges <= budget else mins
+    spark = edges.sparkSession
 
-    def _large_star(df: DataFrame, n_edges: int, budget: int) -> DataFrame:
+    def _brd(mins: DataFrame, n_edges: int) -> DataFrame:
+        return broadcast_gate(spark, lambda: 2 * n_edges)(mins)
+
+    def _large_star(df: DataFrame, n_edges: int) -> DataFrame:
         sym = _sym(df)
         mins = sym.groupBy("a").agg(F.min("b").alias("mn"))
         m = F.least(F.col("a"), F.col("mn"))
         return (
-            sym.join(_brd(mins, n_edges, budget), "a")
+            sym.join(_brd(mins, n_edges), "a")
             .where(F.col("b") > F.col("a"))
             .select(F.col("b").alias("a"), m.alias("b"))
             .where(F.col("a") != F.col("b"))
             .distinct()
         )
 
-    def _small_star(df: DataFrame, n_edges: int, budget: int) -> DataFrame:
+    def _small_star(df: DataFrame, n_edges: int) -> DataFrame:
         # orient every edge large -> small, then rewire each node's
         # small neighborhood (plus itself) to its min
         oriented = _sym(df).where(F.col("b") <= F.col("a"))
         mins = oriented.groupBy("a").agg(F.min("b").alias("mn"))
-        rewired = oriented.join(_brd(mins, n_edges, budget), "a").select(
+        rewired = oriented.join(_brd(mins, n_edges), "a").select(
             F.col("b").alias("a"), F.col("mn").alias("b")
         )
         self_edges = mins.select(F.col("a"), F.col("mn").alias("b"))
@@ -1095,14 +1065,11 @@ def connected_components_star(
             F.coalesce(F.bit_xor(F.xxhash64("a", "b")), F.lit(0)).alias("h"),
         ).first()
 
-    budget = resolve_broadcast_rows(edges.sparkSession, 16)
     n_edges = e.count()  # scans the just-materialized checkpoint blocks
     prev = None
     for _ in range(max_iter):
         prev_e = e
-        e = _small_star(
-            _large_star(e, n_edges, budget), n_edges, budget
-        ).transform(checkpoint)
+        e = _small_star(_large_star(e, n_edges), n_edges).transform(checkpoint)
         release_local_checkpoint(prev_e, allow_projection=True)  # superseded round — free now
         cur = _checksum(e)
         n_edges = cur["n"]
@@ -1134,7 +1101,6 @@ def dedup_clusters(
     band_size: int = 2,
     shingle_n: int = 2,
     threshold: float = 0.5,
-    cc: str = "auto",
 ) -> DataFrame:
     """Near-duplicate clusters: LSH-verified pairs -> connected
     components -> canonical pick (min id per cluster).
@@ -1143,18 +1109,11 @@ def dedup_clusters(
     gets (cluster_id, cluster_size, is_canonical); filtering to
     ``is_canonical`` yields the deduplicated corpus with exactly one
     representative per near-dup group.
-
-    ``cc``: "auto" (default — propagation with a small round budget,
-    star fallback when the graph proves deep; see
-    ``connected_components_auto``), "propagation" (near-dup graphs are
-    shallow and the oracle replays it; unconverged past the cap) or
-    "star" (large-star/small-star — O(log n) rounds regardless of
-    diameter; identical labels, pytest-pinned).
     """
     pairs = neardup_verified_pairs(
         df, id_col, text_col, n_hashes, band_size, shingle_n, threshold
     )
-    return _clusters_from_pairs(pairs, df, id_col, cc)
+    return _clusters_from_pairs(pairs, df, id_col)
 
 
 def embedding_dedup_clusters(
@@ -1175,15 +1134,8 @@ def embedding_dedup_clusters(
     return _clusters_from_pairs(pairs, df, id_col)
 
 
-def _clusters_from_pairs(
-    pairs: DataFrame, df: DataFrame, id_col: str, cc: str = "auto"
-) -> DataFrame:
-    cc_fn = {
-        "star": connected_components_star,
-        "propagation": connected_components,
-        "auto": connected_components_auto,
-    }[cc]
-    comp = cc_fn(pairs.select("id_a", "id_b"), df, id_col)
+def _clusters_from_pairs(pairs: DataFrame, df: DataFrame, id_col: str) -> DataFrame:
+    comp = connected_components(pairs.select("id_a", "id_b"), df, id_col)
     sizes = comp.groupBy("component").agg(F.count("*").alias("cluster_size"))
     return (
         comp.join(sizes, "component")
@@ -1206,7 +1158,6 @@ def embedding_dedup_clusters_fast(
     nprobe: int = 6,
     dim: int = 64,
     n_blocks: int = 2,
-    cc: str = "auto",
     assign: str = "auto",
 ) -> DataFrame:
     """Production twin of ``embedding_dedup_clusters``: pairs form only
@@ -1223,7 +1174,7 @@ def embedding_dedup_clusters_fast(
         cell_col=cell_col, n_cells=n_cells, nprobe=nprobe,
         dim=dim, n_blocks=n_blocks, assign=assign,
     )
-    return _clusters_from_pairs(pairs, df, id_col, cc)
+    return _clusters_from_pairs(pairs, df, id_col)
 
 
 def cc_upsert(
@@ -1239,7 +1190,7 @@ def cc_upsert(
 
     ``labels`` is the stored state: one row per edge-endpoint seen so
     far, ``component`` = the min id reachable from it — exactly what
-    ``connected_components*`` emit over the historical edge set (docs
+    ``connected_components`` emits over the historical edge set (docs
     never seen in a pair are implicit singletons and need no row).
     ``delta_edges`` is the new batch (id_a, id_b).
 
@@ -1249,7 +1200,7 @@ def cc_upsert(
     needs only (1) each delta endpoint's current label (a lookup),
     (2) the transitive closure over the LABELS the delta connects —
     a graph with one node per touched component, O(delta) edges,
-    resolved by ``connected_components_auto`` on that tiny frame —
+    resolved by ``connected_components`` on that tiny frame —
     and (3) a single map of old label -> min(merged labels). Since
     each old label was the min of its sub-component, the min over
     merged labels IS the min over the merged membership, so the
@@ -1306,7 +1257,7 @@ def cc_upsert(
         )
         # (3) old label -> merged min label, changed rows only
         mapping = (
-            connected_components_auto(label_edges, label_nodes, id_col="lbl")
+            connected_components(label_edges, label_nodes, id_col="lbl")
             .where(F.col("lbl") != F.col("component"))
             .select("lbl", F.col("component").alias("new_lbl"))
             .transform(checkpoint)
@@ -1314,15 +1265,16 @@ def cc_upsert(
         try:
             # relabel the losers: stored rows whose component lost its
             # label (broadcast — the mapping is delta-bounded)
+            brd = broadcast_gate(labels.sparkSession)
             relabeled = stored.join(
-                F.broadcast(mapping), stored["lbl"] == mapping["lbl"]
+                brd(mapping), stored["lbl"] == mapping["lbl"]
             ).select(
                 F.col("v").alias(id_col), F.col("new_lbl").alias("component")
             )
             # previously-unseen endpoints enter with their final label
             fresh = (
                 ends.join(stored.select("v"), "v", "left_anti")
-                .join(F.broadcast(mapping), "lbl", "left")
+                .join(brd(mapping), "lbl", "left")
                 .select(
                     F.col("v").alias(id_col),
                     F.coalesce("new_lbl", F.col("lbl")).alias("component"),

@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..core.session import checkpoint, release_local_checkpoint, resolve_broadcast_rows
+from ..core.session import broadcast_gate, checkpoint, release_local_checkpoint
 
 DAMPING = 0.85
 
@@ -81,12 +81,10 @@ def pagerank(
     # (a graph with fewer edges than nodes isn't worth iterating on).
     # Broadcasting it makes each iteration map-only over the edges plus
     # ONE groupBy shuffle. The cutoff is the session-derived broadcast
-    # budget (core.session.resolve_broadcast_rows — r13 verdict #7:
-    # derived from autoBroadcastJoinThreshold + executor heap instead
-    # of a 4M-row literal); past it the vector would OOM executors, so
-    # the plain shuffle join (with AQE free to re-plan) takes over.
-    small = n <= resolve_broadcast_rows(edges.sparkSession, 16)
-    brd = F.broadcast if small else (lambda df: df)
+    # budget (core.session.broadcast_gate); past it the vector would
+    # OOM executors, so the plain shuffle join (with AQE free to
+    # re-plan) takes over.
+    brd = broadcast_gate(edges.sparkSession, lambda: n)
     # out-degree is one row per SOURCE node (<= n) — same broadcast
     # budget as the rank vector, so folding it into the edge table is
     # a map-only join, not a shuffle of the (much larger) edge set.
@@ -210,7 +208,6 @@ def triangle_counts(
     hub_cap: int | None = None,
     on_hub: str = "drop",
     hub_seed: int = 0,
-    broadcast_edges: int | str | None = "auto",
 ) -> DataFrame:
     """Per-node triangle participation counts: (node, triangles).
 
@@ -265,27 +262,23 @@ def triangle_counts(
     row_number window shuffles on the same pivot key `u` the wedge
     self-join uses, so it adds no new partitioning.
 
-    ``broadcast_edges``: when the oriented edge count is at or under
-    this threshold, the wedge-join probe side and the closing edge set
-    are BROADCAST instead of shuffled. The planner cannot do this
-    itself — the checkpointed edge table is an ExistingRDD with
-    unknown stats, so it falls back to sort-merge, and the expensive
-    SMJ input is the WEDGE set (C(d,2) rows per pivot — always ≥ the
-    edge set, often 10-100x it on dense graphs), which then gets
-    shuffled AND sorted by (x, y) just to probe against the far
-    smaller edge table. Broadcasting the edge side makes wedge
+    When the oriented edge count fits the session's broadcast budget
+    (``core.session.broadcast_gate``), the wedge-join probe side and
+    the closing edge set are BROADCAST instead of shuffled. The
+    planner cannot do this itself — the checkpointed edge table is an
+    ExistingRDD with unknown stats, so it falls back to sort-merge, and
+    the expensive SMJ input is the WEDGE set (C(d,2) rows per pivot —
+    always ≥ the edge set, often 10-100x it on dense graphs), which
+    then gets shuffled AND sorted by (x, y) just to probe against the
+    far smaller edge table. Broadcasting the edge side makes wedge
     enumeration + closure one map-only pass over the oriented edges;
     the only remaining exchange is the final per-node count groupBy.
     The sizing count() is a scan of already-checkpointed blocks
-    (cheap), and join strategy never changes counts. The default
-    ``"auto"`` derives the row cap from the session's broadcast budget
-    (``core.session.resolve_broadcast_rows`` — threshold + executor
-    heap, the same budget as ``pagerank``'s rank vector; r13 verdict
-    #7: the former 4M literal assumed one memory geometry, and a
-    session with broadcasts disabled now flips this path to shuffle
-    too). Pass None to force the shuffle path, or an explicit row cap
-    to override. At 100 TB the edge set of a THRESHOLDED projection is
-    routinely under the cap even when the input is not.
+    (cheap), and join strategy never changes counts. The budget is the
+    same as ``pagerank``'s rank vector (threshold + executor heap); a
+    session with broadcasts disabled takes the shuffle path without
+    the count. At 100 TB the edge set of a THRESHOLDED projection is
+    routinely under the budget even when the input is not.
     """
     if hub_cap is not None and hub_cap < 2 and on_hub == "estimate":
         raise ValueError(f"on_hub='estimate' needs hub_cap >= 2, got {hub_cap}")
@@ -296,15 +289,8 @@ def triangle_counts(
     # reused 3x below (wedge x2 + closure)
     oriented = checkpoint(_oriented_edges(edges, src, dst, orient))
     # size-gated broadcast of the edge side (see docstring): the count
-    # scans the just-materialized checkpoint blocks, no recompute; a
-    # zero budget (broadcasts disabled) skips it
-    if broadcast_edges == "auto":
-        broadcast_edges = resolve_broadcast_rows(edges.sparkSession, 16)
-    brd = (
-        F.broadcast
-        if broadcast_edges and oriented.count() <= broadcast_edges
-        else (lambda df: df)
-    )
+    # scans the just-materialized checkpoint blocks, no recompute
+    brd = broadcast_gate(edges.sparkSession, oriented.count)
     # weighted only when capped: the exact path counts corner rows
     # (count(*), the r8 hot path); drop mode is an unweighted count
     # too; only the estimator carries real weights
@@ -651,14 +637,8 @@ def community_lpa(
     # EDGE TABLE by v (the round's dominant cost; the label side is
     # noise). With it the join is map-side and each round's only
     # shuffles are the two label aggregations. Join strategy never
-    # changes the picked labels. A zero budget (broadcasts disabled)
-    # skips the count job.
-    budget = resolve_broadcast_rows(edges.sparkSession, 16)
-    brd = (
-        F.broadcast
-        if budget and labels.count() <= budget
-        else (lambda df: df)
-    )
+    # changes the picked labels.
+    brd = broadcast_gate(edges.sparkSession, labels.count)
     for _ in range(n_iter):
         joined = und.join(
             brd(labels.select(F.col("node").alias("v"), "community")), "v"

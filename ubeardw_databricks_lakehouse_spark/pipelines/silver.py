@@ -60,6 +60,22 @@ def _latest_per_key(df: DataFrame, pk: str) -> DataFrame:
         .drop("_rn")
     )
 
+
+def _silver_tail(
+    df: DataFrame, entity: str, pk: str, dedup: bool, quarantine_sink
+) -> DataFrame:
+    """Every builder's last steps: apply the entity's expectations, hand
+    the dropped rows to ``quarantine_sink``, then keep the latest row
+    per ``pk`` (``dedup``)."""
+    applied = apply_expectations(df, SILVER_RULES[entity])
+    if quarantine_sink is not None and applied.quarantine is not None:
+        quarantine_sink(applied.quarantine)
+    out = applied.df
+    if dedup:
+        out = _latest_per_key(out, pk)
+    return out
+
+
 def _entity_common(df: DataFrame) -> DataFrame:
     """Upstream deletes drop out of silver (op='d' has no after image)."""
     return df.filter((F.col("cdc_operation") != "d") | F.col("cdc_operation").isNull())
@@ -106,13 +122,7 @@ def silver_trip_events(bronze: DataFrame, dedup: bool = True, quarantine_sink=No
         F.col("payload").alias("raw_payload"),
         *_cdc_meta(),
     )
-    applied = apply_expectations(out, SILVER_RULES["trip_events"])
-    if quarantine_sink is not None and applied.quarantine is not None:
-        quarantine_sink(applied.quarantine)
-    out = applied.df
-    if dedup:
-        out = _latest_per_key(out, "event_id")
-    return out
+    return _silver_tail(out, "trip_events", "event_id", dedup, quarantine_sink)
 
 
 def silver_eater(bronze: DataFrame, dedup: bool = True, quarantine_sink=None) -> DataFrame:
@@ -135,13 +145,7 @@ def silver_eater(bronze: DataFrame, dedup: bool = True, quarantine_sink=None) ->
         epoch_ms_to_ts("updated_at").alias("updated_at"),
         *_cdc_meta(),
     )
-    applied = apply_expectations(out, SILVER_RULES["eater"])
-    if quarantine_sink is not None and applied.quarantine is not None:
-        quarantine_sink(applied.quarantine)
-    out = applied.df
-    if dedup:
-        out = _latest_per_key(out, "eater_id")
-    return out
+    return _silver_tail(out, "eater", "eater_id", dedup, quarantine_sink)
 
 
 def silver_merchant(bronze: DataFrame, dedup: bool = True, quarantine_sink=None) -> DataFrame:
@@ -165,13 +169,7 @@ def silver_merchant(bronze: DataFrame, dedup: bool = True, quarantine_sink=None)
         epoch_ms_to_ts("updated_at").alias("updated_at"),
         *_cdc_meta(),
     )
-    applied = apply_expectations(out, SILVER_RULES["merchant"])
-    if quarantine_sink is not None and applied.quarantine is not None:
-        quarantine_sink(applied.quarantine)
-    out = applied.df
-    if dedup:
-        out = _latest_per_key(out, "merchant_id")
-    return out
+    return _silver_tail(out, "merchant", "merchant_id", dedup, quarantine_sink)
 
 
 def silver_courier(bronze: DataFrame, dedup: bool = True, quarantine_sink=None) -> DataFrame:
@@ -190,13 +188,7 @@ def silver_courier(bronze: DataFrame, dedup: bool = True, quarantine_sink=None) 
         epoch_ms_to_ts("updated_at").alias("updated_at"),
         *_cdc_meta(),
     )
-    applied = apply_expectations(out, SILVER_RULES["courier"])
-    if quarantine_sink is not None and applied.quarantine is not None:
-        quarantine_sink(applied.quarantine)
-    out = applied.df
-    if dedup:
-        out = _latest_per_key(out, "courier_id")
-    return out
+    return _silver_tail(out, "courier", "courier_id", dedup, quarantine_sink)
 
 
 SILVER_BUILDERS = {

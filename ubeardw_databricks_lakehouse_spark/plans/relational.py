@@ -2329,8 +2329,9 @@ ORDER BY name_a, name_b
 # strings — "red widget" / "blue widget" / "hot widget" collapse to one
 # canonical product line.
 #
-# Scale: the pair list is block-bounded (never all-pairs); min-label CC
-# converges in diameter rounds (entity-variant clusters are shallow);
+# Scale: the pair list is block-bounded (never all-pairs); CC converges
+# at any depth (propagation for shallow entity-variant clusters, the
+# star engine past its round budget);
 # cluster size + canonical pick are one groupBy + window over |entities|
 # rows. Oracle replays the clustering as a recursive reachability CTE.
 # ---------------------------------------------------------------------------

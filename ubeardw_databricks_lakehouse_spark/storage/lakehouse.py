@@ -211,9 +211,7 @@ class Lakehouse:
                 f"ALTER TABLE delta.`{self.path(name)}` SET TBLPROPERTIES "
                 "('delta.autoOptimize.autoCompact' = 'true')"
             )
-        meta = {**self.read_table_meta(name), "auto_compact_max_files": int(max_files)}
-        with open(os.path.join(self.path(name), "_graft_meta.json"), "w") as f:
-            json.dump(meta, f)
+        self._update_meta(name, auto_compact_max_files=int(max_files))
 
     def set_optimize_write(self, name: str, enabled: bool = True) -> None:
         """Table property: shuffle rows onto the table's partition
@@ -240,7 +238,12 @@ class Lakehouse:
                 f"ALTER TABLE delta.`{self.path(name)}` SET TBLPROPERTIES "
                 f"('delta.autoOptimize.optimizeWrite' = '{str(enabled).lower()}')"
             )
-        meta = {**self.read_table_meta(name), "optimize_write": bool(enabled)}
+        self._update_meta(name, optimize_write=bool(enabled))
+
+    def _update_meta(self, name: str, **props) -> None:
+        """Read-modify-write of the sidecar meta: set ``props``, keep
+        every other key."""
+        meta = {**self.read_table_meta(name), **props}
         with open(os.path.join(self.path(name), "_graft_meta.json"), "w") as f:
             json.dump(meta, f)
 
@@ -316,7 +319,6 @@ class Lakehouse:
         update_condition: str | None = None,
         partition_by: list[str] | None = None,
         allow_schema_evolution: bool = False,
-        prune: bool = True,
     ) -> None:
         """MERGE: update matched (optionally guarded), insert unmatched.
 
@@ -342,14 +344,15 @@ class Lakehouse:
         Pruning factor is honest hash math: ``delta_rows`` uniformly
         hashed rows touch ``B*(1-(1-1/B)^delta_rows)`` of ``B`` buckets
         — real wins need ``delta_rows`` below ``B`` (at 100 TB, B is
-        sized to ~128 MB buckets, i.e. large). Set ``prune=False`` to
-        force the full-table rewrite. Crash note: the pruned swap
-        promotes per-partition (each directory individually
-        trash-aside-renamed), so a mid-swap crash leaves a mix of
-        old/new partitions — safe under this module's MERGE contract
-        (replayed MERGEs are idempotent), unlike a torn ARBITRARY
-        write; schema evolution always falls back to the full rewrite
-        (untouched partitions must be rewritten to carry new columns).
+        sized to ~128 MB buckets, i.e. large). An unpartitioned table
+        (or one failing the gate) takes the full-table rewrite. Crash
+        note: the pruned swap promotes per-partition (each directory
+        individually trash-aside-renamed), so a mid-swap crash leaves a
+        mix of old/new partitions — safe under this module's MERGE
+        contract (replayed MERGEs are idempotent), unlike a torn
+        ARBITRARY write; schema evolution always falls back to the full
+        rewrite (untouched partitions must be rewritten to carry new
+        columns).
 
         **Insert-only fast path.** Within the pruned path, if NO source
         key matches a row in the touched partitions (one semi-join
@@ -391,8 +394,7 @@ class Lakehouse:
         full = self.read(name)
         pcols = self.partitioning(name)
         pruned = (
-            prune
-            and bool(pcols)
+            bool(pcols)
             and set(pcols) <= set(keys)
             and set(pcols) <= set(source.columns)
             # schema evolution must rewrite untouched partitions too

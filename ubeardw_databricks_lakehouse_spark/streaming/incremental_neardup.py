@@ -80,7 +80,6 @@ def start_incremental_neardup(
     threshold: float = 0.5,
     hash_fn: str = "md5",
     available_now: bool = True,
-    broadcast_delta: bool = True,
     state_buckets: int = 0,
     groups_table: str | None = None,
 ) -> StreamingQuery:
@@ -91,10 +90,11 @@ def start_incremental_neardup(
     replacing an existing doc must be deleted from the index first) —
     which is also what makes source-level redelivery harmless.
 
-    ``broadcast_delta`` forwards to ``neardup_upsert``: keep the
-    default for steady micro-batches (the stored index is scanned,
-    never shuffled); pass False for a giant backfill delta where a
-    forced broadcast would OOM and the planner should pick the side.
+    Steady micro-batches broadcast the delta into the index probe (the
+    stored index is scanned, never shuffled); run a giant backfill,
+    where a forced broadcast would OOM, in a session with broadcasts
+    disabled (``spark.sql.autoBroadcastJoinThreshold=-1``) and the
+    planner picks the join sides.
 
     ``state_buckets=B > 0`` bucket-partitions the three state tables
     (module docstring) so each MERGE rewrites only touched buckets.
@@ -103,7 +103,7 @@ def start_incremental_neardup(
 
     ``groups_table`` (opt-in) additionally maintains the dup-GROUPS
     table — (id, component) with component = min reachable id, the
-    ``connected_components*`` contract — via ``dedup.cc_upsert``: the
+    ``connected_components`` contract — via ``dedup.cc_upsert``: the
     batch's verified pairs fold into the stored labels O(delta +
     relabeled), so group membership is always current without ever
     re-running CC over the historical pair set. Write order: groups
@@ -161,7 +161,6 @@ def start_incremental_neardup(
             id_col=id_col, text_col=text_col, n_hashes=n_hashes,
             band_size=band_size, shingle_n=shingle_n,
             threshold=threshold, hash_fn=hash_fn,
-            broadcast_delta=broadcast_delta,
         )
         _merge_all(batch, pairs, delta_bands)
 

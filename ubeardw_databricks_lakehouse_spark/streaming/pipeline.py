@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..pipelines.silver import SILVER_BUILDERS
-from ..sources.debezium import parse_debezium_envelope
+from ..sources.debezium import to_bronze
 
 RAW_STREAM_SCHEMA = (
     "kafka_key string, raw_value string, kafka_topic string, "
@@ -46,10 +46,6 @@ def file_cdc_stream(spark: SparkSession, source_dir: str) -> DataFrame:
     columns project_kafka_record produces from a live Kafka source.
     """
     return spark.readStream.schema(RAW_STREAM_SCHEMA).json(source_dir)
-
-
-def bronze_stream(raw: DataFrame, entity: str) -> DataFrame:
-    return parse_debezium_envelope(raw, entity)
 
 
 def silver_stream(
@@ -118,7 +114,7 @@ def run_entity_pipeline(
     ck_silver = os.path.join(out_root, f"_ck_silver_{entity}")
 
     raw = file_cdc_stream(spark, source_dir)
-    bronze_df = bronze_stream(raw, entity)
+    bronze_df = to_bronze(raw, entity)
     # static bronze schema (derived from the transform, not the written
     # files) so the silver query can subscribe without waiting for data
     bronze_schema = bronze_df.schema
