@@ -135,24 +135,26 @@ def test_assign_cells_lsh_fallback_covers_all(spark):
     assert out.select("vec_id").distinct().count() == 20
 
 
-def test_resolve_assign_mode_routing():
-    """The auto-route contract: exact within the broadcast-scoring
-    budget, LSH past it; explicit modes pass through untouched."""
-    from ubeardw_databricks_lakehouse_spark.operators.similarity import (
-        AUTO_LSH_MIN_CELLS,
-        resolve_assign_mode,
-    )
+def test_coarse_assignment_routing(monkeypatch):
+    """The routing contract: exact within the broadcast-scoring budget,
+    LSH past it."""
+    from ubeardw_databricks_lakehouse_spark.operators import similarity
 
-    assert resolve_assign_mode("auto", 8) == "exact"
-    assert resolve_assign_mode("auto", AUTO_LSH_MIN_CELLS) == "exact"
-    assert resolve_assign_mode("auto", AUTO_LSH_MIN_CELLS + 1) == "lsh"
-    assert resolve_assign_mode("exact", 10**9) == "exact"
-    assert resolve_assign_mode("lsh", 2) == "lsh"
+    monkeypatch.setattr(similarity, "assign_cells", lambda *a, **kw: "exact")
+    monkeypatch.setattr(similarity, "assign_cells_lsh", lambda *a, **kw: "lsh")
+    k_max = similarity.AUTO_LSH_MIN_CELLS
+
+    def route(k):
+        return similarity._assign_coarse(None, None, k, "id", "v", 8, 1)
+
+    assert route(8) == "exact"
+    assert route(k_max) == "exact"
+    assert route(k_max + 1) == "lsh"
 
 
 def test_kmeans_assign_auto_small_k_equals_exact(spark):
-    """Default assign='auto' with a small centroid set must reproduce
-    the exact scorer bit-for-bit (it routes to it)."""
+    """A small centroid set must reproduce the exact scorer
+    bit-for-bit (it routes to it)."""
     df, _ = _planted(spark, n_clusters=3, per=20, dim=8, noise=0.05)
     from ubeardw_databricks_lakehouse_spark.operators.similarity import (
         _centroids_fast,
@@ -174,9 +176,10 @@ def test_kmeans_assign_auto_small_k_equals_exact(spark):
     assert auto == exact
 
 
-def test_clustered_pairs_lsh_assignment_recall(spark):
-    """assign='lsh' routing must recover nearly all the exact-routing
-    pairs on the real sf0.001 embedding corpus."""
+def test_clustered_pairs_lsh_assignment_recall(spark, monkeypatch):
+    """LSH routing must recover nearly all the exact-routing pairs on
+    the real sf0.001 embedding corpus."""
+    from ubeardw_databricks_lakehouse_spark.operators import similarity
     from ubeardw_databricks_lakehouse_spark.operators.dedup import (
         embedding_neardup_pairs_clustered,
     )
@@ -188,10 +191,12 @@ def test_clustered_pairs_lsh_assignment_recall(spark):
             emb, threshold=0.4, n_cells=8, nprobe=4
         ).collect()
     }
+    # a zero budget routes even K=8 to the LSH scorer
+    monkeypatch.setattr(similarity, "AUTO_LSH_MIN_CELLS", 0)
     lsh = {
         (r["id_a"], r["id_b"])
         for r in embedding_neardup_pairs_clustered(
-            emb, threshold=0.4, n_cells=8, nprobe=4, assign="lsh"
+            emb, threshold=0.4, n_cells=8, nprobe=4
         ).collect()
     }
     assert exact, "exact routing found no pairs — test data changed?"

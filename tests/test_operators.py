@@ -965,14 +965,21 @@ def test_range_join_binned_boundaries(spark):
     assert got == {(1, 100), (2, 100), (2, 200), (3, 200)}
     # bin_width="auto" derives the median span and must produce the
     # SAME match set (bin width changes the plan, never the result);
-    # SHUFFLE_HASH_AUTO likewise changes only the physical join
-    for kwargs in ({"bin_width": "auto"},
-                   {"bin_width": "auto", "join_hint": "SHUFFLE_HASH_AUTO"}):
-        auto = {
-            (r["pid"], r["iid"])
-            for r in range_join_binned(pts, ivs, "x", "lo", "hi", **kwargs).collect()
-        }
-        assert auto == got, kwargs
+    # the sized hash build (broadcasts disabled) likewise changes only
+    # the physical join
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        for threshold in (old, "-1"):
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+            auto = {
+                (r["pid"], r["iid"])
+                for r in range_join_binned(
+                    pts, ivs, "x", "lo", "hi", bin_width="auto"
+                ).collect()
+            }
+            assert auto == got, threshold
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="bin_width"):

@@ -228,28 +228,32 @@ def test_join_strategy_hints_are_honored(spark):
     assert "ShuffledHashJoin" in p and "SortMergeJoin" not in p
 
 
-def test_bm25_broadcasts_stats_and_prunes_tf(spark):
+def test_bm25_broadcasts_stats_and_prunes_tf(spark, monkeypatch):
     """BM25's corpus-side work must be the hit-filtered tf aggregation:
     idf and the (N, avgdl) scalar join back by broadcast, the final
     top-k compiles to TakeOrderedAndProject (never a global sort), and
     the term filter sits below the first aggregation. The shipping
     query pins the hit-filtered tf frame (its subtree then executes at
     build time), so the filter-below-aggregation property is asserted
-    on the lazy twin (materialize=False — same code path, pin off)."""
-    from ubeardw_databricks_lakehouse_spark.plans.llm_q import (
-        _BM25_TERMS, q_bm25_search,
-    )
-    from ubeardw_databricks_lakehouse_spark.operators.retrieval import (
-        bm25_topk,
-    )
+    on the plan of the frame handed to that checkpoint."""
+    from ubeardw_databricks_lakehouse_spark.operators import retrieval
+    from ubeardw_databricks_lakehouse_spark.plans.llm_q import q_bm25_search
 
+    pinned = []
+    real = retrieval.checkpoint
+
+    def recording(df):
+        pinned.append(_plan(df))
+        return real(df)
+
+    monkeypatch.setattr(retrieval, "checkpoint", recording)
     p = _plan(q_bm25_search(spark, SF))
     assert "TakeOrderedAndProject" in p
     assert "BroadcastHashJoin" in p  # idf / dl joins
 
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    lazy = _plan(bm25_topk(docs, _BM25_TERMS, k=20, materialize=False))
-    assert "array_contains" in lazy  # hit filter exists pre-shuffle
+    (tf,) = pinned
+    # hit filter exists pre-aggregation: printed below the first aggregate
+    assert tf.index("array_contains") > tf.index("HashAggregate"), tf
 
 
 def test_pagerank_iteration_is_equi_join(spark):
@@ -610,11 +614,12 @@ def test_training_export_amortized_status(spark):
     assert n <= 2, f"amortized export still scans {n} times"
 
 
-def test_auto_join_hint_resolves_by_size(spark):
-    """join_hint="AUTO" (the shipping default for the exploded joins):
-    a build side under the broadcast threshold stays unhinted — the
-    executed plan BROADCASTS — and one over it engages the sized
-    shuffle-hash build; the pair set never changes (r12 verdict #4)."""
+def test_exploded_joins_size_their_build_side(spark):
+    """The exploded joins pick their join strategy from size: a build
+    side under the broadcast threshold stays unhinted — the executed
+    plan BROADCASTS — and one over it (or with broadcasts disabled)
+    engages the sized shuffle-hash build; the pair set never changes
+    (r12 verdict #4)."""
     from pyspark.sql import functions as F
 
     from ubeardw_databricks_lakehouse_spark.operators.rangejoin import (
@@ -623,27 +628,17 @@ def test_auto_join_hint_resolves_by_size(spark):
     from ubeardw_databricks_lakehouse_spark.operators.spatial import radius_join
 
     # stats-bearing source (range -> accurate sizeInBytes); an
-    # ExistingRDD would carry the default huge estimate and AUTO would
-    # (correctly) refuse to assume broadcast
+    # ExistingRDD would carry the default huge estimate and the join
+    # would (correctly) refuse to assume broadcast
     df = spark.range(300).select(
         "id",
         (F.pmod(F.xxhash64("id"), F.lit(100000)) / 2500.0 - 20).alias("x"),
         (F.pmod(F.xxhash64("id", F.lit(1)), F.lit(100000)) / 2500.0 - 20).alias("y"),
     )
-    base = {(a, b): d for a, b, d in radius_join(df, "id", "x", "y", 2.0).collect()}
-
-    auto = radius_join(df, "id", "x", "y", 2.0, join_hint="AUTO")
-    assert "BroadcastHashJoin" in _plan(auto)  # small build -> broadcast
-    assert {(a, b): d for a, b, d in auto.collect()} == base
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
-        big = radius_join(df, "id", "x", "y", 2.0, join_hint="AUTO")
-        assert "ShuffledHashJoin" in _plan(big)  # over threshold -> sized build
-        assert {(a, b): d for a, b, d in big.collect()} == base
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    small = radius_join(df, "id", "x", "y", 2.0)
+    assert "BroadcastHashJoin" in _plan(small)  # small build -> broadcast
+    base = {(a, b): d for a, b, d in small.collect()}
+    assert base
 
     # same trigger on the binned range join
     rpts = spark.range(1000).select(F.col("id").alias("pid"), (F.col("id") * 7).alias("x"))
@@ -653,14 +648,24 @@ def test_auto_join_hint_resolves_by_size(spark):
         (F.col("id") * 11 + 20).alias("hi"),
     )
     want = {(r.pid, r.iid) for r in range_join_binned(rpts, ivs, "x", "lo", "hi", bin_width=20).collect()}
-    j = range_join_binned(rpts, ivs, "x", "lo", "hi", bin_width="auto", join_hint="AUTO")
+    assert want
+    j = range_join_binned(rpts, ivs, "x", "lo", "hi", bin_width="auto")
     assert "BroadcastHashJoin" in _plan(j)
     assert {(r.pid, r.iid) for r in j.collect()} == want
+
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
-        j2 = range_join_binned(rpts, ivs, "x", "lo", "hi", bin_width="auto", join_hint="AUTO")
-        assert "ShuffledHashJoin" in _plan(j2)
-        assert {(r.pid, r.iid) for r in j2.collect()} == want
+        # over the threshold, then broadcasts disabled -> sized build
+        for threshold in ("1024", "-1"):
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+            big = radius_join(df, "id", "x", "y", 2.0)
+            j2 = range_join_binned(rpts, ivs, "x", "lo", "hi", bin_width="auto")
+            for plan in (_plan(big), _plan(j2)):
+                assert "ShuffledHashJoin" in plan, threshold
+                if threshold == "-1":
+                    assert "BroadcastExchange" not in plan
+            assert {(a, b): d for a, b, d in big.collect()} == base
+            assert {(r.pid, r.iid) for r in j2.collect()} == want
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
@@ -903,6 +908,65 @@ def test_broadcast_gate_decides_from_budget_and_rows():
     assert broadcast_gate(on) is F.broadcast
     assert broadcast_gate(on, lambda: 524_288) is F.broadcast
     assert broadcast_gate(on, lambda: 524_289)("df") == "df"
+
+
+class _SizedBuild:
+    """A build frame without a JVM: Catalyst's estimate is ``size``
+    bytes (``None``: the estimate fails), plan calls are recorded."""
+
+    def __init__(self, size=None, threshold="10m"):
+        self.sparkSession = _JvmlessSession(threshold=threshold)
+        self.sparkSession.conf.values["spark.sql.shuffle.partitions"] = "8"
+        self.size = size
+        self.calls = []
+
+    @property
+    def _jdf(self):
+        if self.size is None:
+            raise RuntimeError("no JVM handle on this frame")
+        from types import SimpleNamespace as N
+
+        stats = N(sizeInBytes=lambda: self.size)
+        return N(queryExecution=lambda: N(optimizedPlan=lambda: N(stats=lambda: stats)))
+
+    def repartition(self, n, *keys):
+        self.calls.append(("repartition", n, keys))
+        return self
+
+    def hint(self, name):
+        self.calls.append(("hint", name))
+        return self
+
+
+def test_sized_hash_build_decides_from_estimate_and_rows():
+    """An estimate within the threshold returns the build unchanged and
+    never calls ``rows`` (no count job); a failed estimate, one past
+    the threshold or a disabled session counts and repartitions to
+    max(shuffle.partitions, ceil(rows / TARGET_BUILD_ROWS))."""
+    from ubeardw_databricks_lakehouse_spark.core.session import (
+        TARGET_BUILD_ROWS,
+        sized_hash_build,
+    )
+
+    def no_count():
+        raise AssertionError("a broadcast-sized build was counted")
+
+    small = _SizedBuild(size=1024)
+    assert sized_hash_build(small, ["k"], no_count) is small
+    assert small.calls == []
+
+    for build, rows, parts in (
+        (_SizedBuild(), 10, 8),  # failed estimate, few rows
+        (_SizedBuild(), 20 * TARGET_BUILD_ROWS + 1, 21),  # failed estimate
+        (_SizedBuild(size=20 << 20), 9 * TARGET_BUILD_ROWS, 9),  # > 10m
+        (_SizedBuild(size=1024, threshold="-1"), 10, 8),  # disabled
+    ):
+        counted = []
+        out = sized_hash_build(build, ["k", "j"], lambda: counted.append(1) or rows)
+        assert out is build and counted == [1]
+        assert build.calls == [
+            ("repartition", parts, ("k", "j")), ("hint", "SHUFFLE_HASH"),
+        ]
 
 
 def test_broadcast_rows_unchanged_on_the_shipped_local_session(spark):

@@ -4,9 +4,11 @@ behavior, and pure-Python replays."""
 
 from __future__ import annotations
 
+import contextlib
 import itertools
 import math
 import random
+import re
 from collections import Counter, defaultdict
 
 import pytest
@@ -407,7 +409,7 @@ def test_kcore_fixed_round_cap_is_partial_peel(spark):
     # and a converged run equals the unbounded replay (empty)
     edges = [(i, i + 1) for i in range(9)]
     df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    got1 = dict(kcore(df, k=2, n_iter=1, converge=False).collect())
+    got1 = dict(kcore(df, k=2, n_iter=1).collect())
     assert got1 == _kcore_py(edges, 2, n_iter=1)
     assert kcore(df, k=2, n_iter=50).count() == 0
     # fixpoint stability: extra rounds past convergence change nothing
@@ -431,46 +433,51 @@ def test_kcore_validation(spark):
         kcore(dfs, k=2)
 
 
+@contextlib.contextmanager
+def _broadcasts_disabled(spark):
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
 def test_radius_join_shuffle_hash_hint_identical_pairs(spark):
-    # the opt-in SHUFFLE_HASH hint changes the physical join, never
-    # the pair set (the 64M spill-wall fix; see operator docstring)
+    # the sized SHUFFLE_HASH build changes the physical join, never
+    # the pair set (the 64M spill-wall fix; see sized_hash_build)
     random.seed(97)
     pts = [(i, random.uniform(-20, 20), random.uniform(-20, 20)) for i in range(300)]
     df = spark.createDataFrame(pts, "id bigint, x double, y double")
     base = {(a, b): d for a, b, d in radius_join(df, "id", "x", "y", 2.0).collect()}
-    hinted = {
-        (a, b): d
-        for a, b, d in radius_join(
-            df, "id", "x", "y", 2.0, join_hint="SHUFFLE_HASH"
-        ).collect()
-    }
+    with _broadcasts_disabled(spark):
+        hashed = radius_join(df, "id", "x", "y", 2.0)
+        assert "ShuffledHashJoin" in hashed._jdf.queryExecution().executedPlan().toString()
+        hinted = {(a, b): d for a, b, d in hashed.collect()}
     assert hinted == base == _brute_pairs(pts, 2.0)
 
 
-def test_radius_join_shuffle_hash_auto_sizes_and_matches(spark):
-    # SHUFFLE_HASH_AUTO derives the build-side partition count
-    # (r11 verdict #3): pair set identical to the default plan, the
-    # physical join is a ShuffledHashJoin, and the derived count is
-    # max(shuffle.partitions, ceil(build_rows / target_build_rows))
+def test_radius_join_shuffle_hash_auto_sizes_and_matches(spark, monkeypatch):
+    # the sized hash build derives the build-side partition count
+    # (r11 verdict #3): pair set identical to the broadcast plan, the
+    # physical join is a ShuffledHashJoin, and the repartition width
+    # is max(shuffle.partitions, ceil(build_rows / TARGET_BUILD_ROWS))
+    from ubeardw_databricks_lakehouse_spark.core import session
+
     random.seed(41)
     pts = [(i, random.uniform(-20, 20), random.uniform(-20, 20)) for i in range(300)]
     df = spark.createDataFrame(pts, "id bigint, x double, y double")
     base = {(a, b): d for a, b, d in radius_join(df, "id", "x", "y", 2.0).collect()}
-    auto = radius_join(
-        df, "id", "x", "y", 2.0,
-        join_hint="SHUFFLE_HASH_AUTO", target_build_rows=50,
-    )
-    plan = auto._jdf.queryExecution().executedPlan().toString()
-    assert "ShuffledHashJoin" in plan
-    got = {(a, b): d for a, b, d in auto.collect()}
-    assert got == base == _brute_pairs(pts, 2.0)
-    # the sizing count() can be skipped via build_rows_estimate; an
-    # estimate forcing more partitions than shuffle.partitions must
-    # surface in the plan's repartition width
-    auto2 = radius_join(
-        df, "id", "x", "y", 2.0,
-        join_hint="SHUFFLE_HASH_AUTO",
-        build_rows_estimate=10_000_000, target_build_rows=100_000,
-    )
-    assert "ShuffledHashJoin" in auto2._jdf.queryExecution().executedPlan().toString()
-    assert {(a, b): d for a, b, d in auto2.collect()} == base
+    # 300 build rows: 50 per build -> the 8 shuffle partitions win;
+    # 10 per build -> 30 partitions, more than shuffle.partitions
+    for target, parts in ((50, 8), (10, 30)):
+        monkeypatch.setattr(session, "TARGET_BUILD_ROWS", target)
+        with _broadcasts_disabled(spark):
+            auto = radius_join(df, "id", "x", "y", 2.0)
+            plan = auto._jdf.queryExecution().executedPlan().toString()
+            assert "ShuffledHashJoin" in plan
+            assert re.search(
+                rf"hashpartitioning\(_cx#\d+L, _cy#\d+L, {parts}\)", plan
+            ), plan
+            got = {(a, b): d for a, b, d in auto.collect()}
+        assert got == base == _brute_pairs(pts, 2.0)

@@ -154,7 +154,7 @@ def main() -> None:
             embedding_dedup_clusters_fast,
         )
         from ubeardw_databricks_lakehouse_spark.operators.similarity import (
-            resolve_assign_mode,
+            AUTO_LSH_MIN_CELLS,
         )
 
         def timed_scalek(n_vecs: int) -> float:
@@ -165,16 +165,16 @@ def main() -> None:
                     os.path.join(d, "embeddings.parquet"))
                 emb = spark.read.parquet(os.path.join(d, "embeddings.parquet"))
                 t0 = time.time()
-                # default assign="auto" — the production routing under
-                # measurement: past AUTO_LSH_MIN_CELLS it swaps the
-                # exact N×K coarse scorer for the LSH probe scorer
+                # the production routing under measurement: past
+                # AUTO_LSH_MIN_CELLS it swaps the exact N×K coarse
+                # scorer for the LSH probe scorer
                 embedding_dedup_clusters_fast(
                     emb, threshold=0.9, n_cells=k, nprobe=4
                 ).write.mode("overwrite").format("noop").save()
                 dt = time.time() - t0
             print(json.dumps(
                 {"scale": [n_vecs], "k": k, "query": "dedup_fast_scalek",
-                 "assign": resolve_assign_mode("auto", k),
+                 "assign": "lsh" if k > AUTO_LSH_MIN_CELLS else "exact",
                  "sec": round(dt, 1)}), flush=True)
             return dt
 

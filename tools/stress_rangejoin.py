@@ -9,17 +9,15 @@ occupancy is constant — the fixed-density regime, same protocol as
 tools/stress_spatial.py. Measures wall per rung, checks the match
 count against the analytic expectation, asserts the plan is the
 binned equi-join (no nested loop), and optionally emits an
-order-independent pair-set checksum so two runs (default vs hinted)
-can be proven bit-identical in one agg pass.
-
-The question this answers (r11 verdict #4): the spatial 64M wall was
-the external SORT of the exploded side, fixed by an opt-in
-SHUFFLE_HASH. This join has the identical exploded-side sort-merge
-shape — is its large rung also sort-bound, and does the same hint pay?
+order-independent pair-set checksum so two runs (say, two
+``--shuffle-partitions`` settings) can be proven bit-identical in one
+agg pass. Past the broadcast threshold the point side is the sized
+SHUFFLE_HASH build (``core.session.sized_hash_build``), so the large
+rungs measure that path.
 
 Usage:
   python tools/stress_rangejoin.py --scales 8000000,32000000
-  python tools/stress_rangejoin.py --scales 64000000 --hint SHUFFLE_HASH_AUTO --checksum
+  python tools/stress_rangejoin.py --scales 64000000 --checksum
 """
 
 from __future__ import annotations
@@ -49,7 +47,6 @@ def main() -> None:
                     help="domain = N * this (sets point density so "
                          "matches stay ~N; 1 would make output volume "
                          "the wall instead of the join)")
-    ap.add_argument("--hint", default=None)
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     ap.add_argument("--checksum", action="store_true")
     args = ap.parse_args()
@@ -90,7 +87,6 @@ def main() -> None:
 
         joined = range_join_binned(
             pts, ivs, "x", "lo", "hi", bin_width=args.bin_width,
-            join_hint=args.hint,
         )
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan
@@ -129,7 +125,6 @@ def main() -> None:
             "metric": "range_join_wall_exponent",
             "value": round(exponent, 2),
             "scales": [r["n_points"] for r in results],
-            "hint": args.hint,
             "loadavg": list(os.getloadavg()),
         }))
 

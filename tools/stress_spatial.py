@@ -38,10 +38,6 @@ def main() -> None:
     ap.add_argument("--scales", default="1000000,4000000")
     ap.add_argument("--radius", type=float, default=1.0)
     ap.add_argument("--density", type=float, default=4.0, help="points per unit area")
-    ap.add_argument("--hint", default=None,
-                    help="join_hint for radius_join (SHUFFLE_HASH with "
-                         "--shuffle-partitions sized by hand, or "
-                         "SHUFFLE_HASH_AUTO to derive the partition count)")
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     ap.add_argument("--checksum", action="store_true",
                     help="also emit bit_xor(xxhash64(id_a, id_b)) over the "
@@ -76,8 +72,7 @@ def main() -> None:
              / F.lit(1_000_000_007.0) * F.lit(side)).alias("y"),
         ).localCheckpoint(eager=True)  # time the JOIN, not the generator
 
-        pairs = radius_join(pts, "id", "x", "y", args.radius,
-                            join_hint=args.hint)
+        pairs = radius_join(pts, "id", "x", "y", args.radius)
         plan = pairs._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 

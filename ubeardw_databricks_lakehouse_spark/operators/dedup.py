@@ -750,7 +750,6 @@ def embedding_neardup_pairs_clustered(
     n_iter: int = 2,
     dim: int = 64,
     n_blocks: int = 2,
-    assign: str = "auto",
 ) -> DataFrame:
     """Cluster-blocked embedding near-dup pairs — SemDeDup as published
     (Abbas et al. 2023): coarse-cluster first, compare only WITHIN
@@ -761,10 +760,12 @@ def embedding_neardup_pairs_clustered(
     column exists (the IVF precedent in ``similarity.topk_ivf``), else
     ``n_iter`` deterministic Lloyd rounds from hash-seeded vectors —
     every step is the repo's own IVF machinery (``_centroids_fast``
-    partial sums + ``assign_cells`` broadcast scoring), no new shuffle
-    shapes. Vectors probe their ``nprobe`` nearest cells so boundary
-    pairs split across two cells are still compared; a pair probing two
-    SHARED cells dedups via ``distinct()`` on the (cell-grid) output.
+    partial sums + ``assign_cells`` broadcast scoring, or the sub-N×K
+    ``assign_cells_lsh`` past ``similarity.AUTO_LSH_MIN_CELLS`` cells),
+    no new shuffle shapes. Vectors probe their ``nprobe`` nearest cells
+    so boundary pairs split across two cells are still compared; a pair
+    probing two SHARED cells dedups via ``distinct()`` on the
+    (cell-grid) output.
 
     Recall < 1 by design (a true pair can hide in two unprobed-in-
     common cells) — the all-pairs grid stays as the oracle-exact twin
@@ -777,24 +778,18 @@ def embedding_neardup_pairs_clustered(
     with K — defaults (K=32, nprobe=6, 2 Lloyd rounds) hold recall
     >= 0.95 at sf0.1, pinned in tests.
     """
-    from .similarity import (
-        _centroids_fast,
-        assign_cells,
-        assign_cells_lsh,
-        resolve_assign_mode,
-    )
+    from .similarity import _assign_coarse, _centroids_fast
 
     if cell_col is not None:
         cents = _centroids_fast(
             df.select(F.col(cell_col).alias("cell"), F.col(vec_col)),
             vec_col, "cell", dim,
         )
-        if assign == "auto":
-            # K unknown until the category centroids materialize — the
-            # centroid frame is tiny (one row per category), so the
-            # count is a cheap job, paid once per call
-            cents = checkpoint(cents)
-            assign = resolve_assign_mode(assign, cents.count())
+        # K unknown until the category centroids materialize — the
+        # centroid frame is tiny (one row per category), so the count
+        # is a cheap job, paid once per call
+        cents = checkpoint(cents)
+        k = cents.count()
     else:
         # the shared Lloyd trainer (one copy of the seeding/update rule
         # — `operators/kmeans`, also used by pq_train)
@@ -804,16 +799,11 @@ def embedding_neardup_pairs_clustered(
             df, id_col=id_col, vec_col=vec_col, k=n_cells, n_iter=n_iter,
             dim=dim,
         )
-        assign = resolve_assign_mode(assign, n_cells)
-    if assign == "lsh":
-        # sub-N×K probe routing for large K (SCALING.md r4: exact
-        # assignment is the quadratic term once K scales with n) —
-        # "auto" lands here once K exceeds AUTO_LSH_MIN_CELLS
-        probed = assign_cells_lsh(
-            df, cents, id_col, vec_col, dim=dim, nprobe=nprobe
-        )
-    else:
-        probed = assign_cells(df, cents, id_col, vec_col, nprobe)
+        k = n_cells
+    # exact N×K scoring up to AUTO_LSH_MIN_CELLS cells, the sub-N×K LSH
+    # probe scorer past it (SCALING.md r4: exact assignment is the
+    # quadratic term once K scales with n)
+    probed = _assign_coarse(df, cents, k, id_col, vec_col, dim, nprobe)
     blocked = probed.select(
         F.col("cell"), F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
     )
@@ -1158,21 +1148,19 @@ def embedding_dedup_clusters_fast(
     nprobe: int = 6,
     dim: int = 64,
     n_blocks: int = 2,
-    assign: str = "auto",
 ) -> DataFrame:
     """Production twin of ``embedding_dedup_clusters``: pairs form only
     within coarse cells (``embedding_neardup_pairs_clustered``), so
     compute is O(n^2/K) instead of all-pairs — real SemDeDup shape.
     Same keep/drop contract; recall vs the exact twin is pytest-pinned
     (a cross-cell pair can be missed, which splits — never merges —
-    a cluster). ``assign`` defaults to "auto": exact N×K scoring up to
-    ``similarity.AUTO_LSH_MIN_CELLS`` cells, the sub-N×K LSH scorer
-    beyond it (SCALING.md r6 measured the exponent drop); "exact"/
-    "lsh" force a mode."""
+    a cluster). Coarse assignment scores exactly (N×K) up to
+    ``similarity.AUTO_LSH_MIN_CELLS`` cells and by the sub-N×K LSH
+    scorer beyond it (SCALING.md r6 measured the exponent drop)."""
     pairs = embedding_neardup_pairs_clustered(
         df, id_col, vec_col, threshold,
         cell_col=cell_col, n_cells=n_cells, nprobe=nprobe,
-        dim=dim, n_blocks=n_blocks, assign=assign,
+        dim=dim, n_blocks=n_blocks,
     )
     return _clusters_from_pairs(pairs, df, id_col)
 

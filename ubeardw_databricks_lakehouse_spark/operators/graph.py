@@ -691,7 +691,6 @@ def kcore(
     dst: str = "dst",
     k: int = 2,
     n_iter: int = 10,
-    converge: bool = True,
 ) -> DataFrame:
     """k-core of an UNDIRECTED reading of ``edges`` by synchronous
     degree peeling: each round drops EVERY node whose current degree
@@ -719,9 +718,10 @@ def kcore(
     monotonically SHRINKING edge set, checkpointed eagerly (bounded
     plan depth, the bounded-iteration policy). The convergence probe
     is an edge count on the just-materialized frame: the edge set
-    only shrinks, so count-unchanged ⇔ fixpoint. Node ids must be
-    integral (hash strings with xxhash64 first — same contract and
-    same loud TypeError as community_lpa).
+    only shrinks, so count-unchanged ⇔ fixpoint, where the rounds
+    stop (peeling a fixpoint again would return the same rows). Node
+    ids must be integral (hash strings with xxhash64 first — same
+    contract and same loud TypeError as community_lpa).
 
     Reference scope: no counterpart (the reference has no graph
     surface); public-algorithm implementation (Seidman 1983 cores;
@@ -774,7 +774,7 @@ def kcore(
         # (waiting for the ContextCleaner OOMed the 32M-node ladder)
         release_local_checkpoint(sym, allow_projection=True)
         sym = nxt
-        if converge and n_next == n_edges:
+        if n_next == n_edges:
             break
         n_edges = n_next
     return (

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..core.session import checkpoint
-from .similarity import _centroids_fast, assign_cells
+from .similarity import _assign_coarse, _centroids_fast, assign_cells
 
 
 def hash_seed_ranks(df: DataFrame, id_col: str, k: int) -> DataFrame:
@@ -100,21 +100,14 @@ def kmeans_assign(
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign: str = "auto",
     dim: int = 64,
 ) -> DataFrame:
     """(id, vec, cell): nearest learned centroid per vector — the
-    label-free drop-in for a `label`-derived cell column. ``assign``
-    defaults to "auto": exact N×K scoring while K fits the
-    broadcast-scoring budget (`similarity.AUTO_LSH_MIN_CELLS`), the
-    sub-N×K LSH bucketed scorer beyond it — the K-count probe is one
-    cheap job over the (small) centroid frame. "exact"/"lsh" force."""
-    from .similarity import resolve_assign_mode
-
-    if assign == "auto":
-        assign = resolve_assign_mode(assign, centroids.count())
-    if assign == "lsh":
-        from .similarity import assign_cells_lsh
-
-        return assign_cells_lsh(df, centroids, id_col, vec_col, dim=dim)
-    return assign_cells(df, centroids, id_col, vec_col, 1)
+    label-free drop-in for a `label`-derived cell column. Exact N×K
+    scoring while K fits the broadcast-scoring budget
+    (`similarity.AUTO_LSH_MIN_CELLS`), the sub-N×K LSH bucketed scorer
+    beyond it — K is one cheap count job over the (small) centroid
+    frame."""
+    return _assign_coarse(
+        df, centroids, centroids.count(), id_col, vec_col, dim, 1
+    )

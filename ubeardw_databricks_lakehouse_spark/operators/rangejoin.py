@@ -13,30 +13,23 @@ the equi-join unlocks broadcast/bucketing like any other join.
 Pick ``bin_width`` near the median interval span: wider bins cut
 interval replication, narrower bins cut residual-filter waste.
 
-Sort-vs-hash at scale: this join has the same exploded-side
-sort-merge shape whose 64M wall the spatial A/B root-caused to the
-external SORT, not the join itself (operators/spatial.py,
-SCALING.md r11). The same opt-in escape hatch is exposed here:
-``join_hint="SHUFFLE_HASH"`` (caller sizes partitions) or
-``"SHUFFLE_HASH_AUTO"`` (partition count derived as
-``max(shuffle.partitions, ceil(points / target_build_rows))`` via a
-cheap count or a caller estimate — an AVERAGE-case bound: hash
-partitioning on the bin keys puts a hot BIN whole in one partition,
-so bin-skewed data can exceed target_build_rows per build; shrink
-``bin_width`` for known-hot bins). The hint is applied to the BINNED
-POINT side — the un-replicated side, the analogue of the spatial
-home-cell side — and the exploded interval side streams as the
-probe. Ladder A/B recorded in SCALING.md r12; the hint stays opt-in
-because an under-partitioned hash build OOMs outright where
-sort-merge degrades gracefully (the spatial lesson, measured).
+Join strategy follows size, as in the spatial join
+(``core.session.sized_hash_build``): the BINNED POINT side — the
+un-replicated side, the analogue of the spatial home-cell side — is
+broadcast while Catalyst estimates it under the broadcast threshold;
+above it the point side is repartitioned on the bin keys to
+``max(shuffle.partitions, ceil(points / TARGET_BUILD_ROWS))`` and
+hash-built, and the exploded interval side streams as the probe
+(ladder A/B in SCALING.md r12: the exploded-side sort-merge wall is
+the external SORT, as in the spatial join).
 """
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..core.session import sized_hash_build
 
 
 def range_join_binned(
@@ -47,9 +40,6 @@ def range_join_binned(
     hi_col: str,
     bin_width: int | str,
     extra_on: list[str] | None = None,
-    join_hint: str | None = None,
-    build_rows_estimate: int | None = None,
-    target_build_rows: int = 250_000,
 ) -> DataFrame:
     """Inner join of left points to right intervals [lo, hi] (inclusive),
     optionally also equi-keyed on ``extra_on``. Numeric (long) range
@@ -62,20 +52,12 @@ def range_join_binned(
     MEASURED, not folklore: at the 64M rung, bin = span vs span/8 cut
     the exploded-side shuffle 9x -> 2x rows for a 1.54x wall win with
     a bit-identical match set (SCALING.md r12) — a bigger lever than
-    the join hint. Auto pays one extra job over the interval side;
+    the join strategy. Auto pays one extra job over the interval side;
     pass an explicit width when the span distribution is known or the
     intervals frame is expensive to traverse twice.
 
-    ``join_hint``: None (default — planner picks broadcast/sort-merge),
-    ``"SHUFFLE_HASH"`` (hash-build the point side; caller must size
-    ``spark.sql.shuffle.partitions`` so points/partitions rows fit one
-    map's memory), ``"SHUFFLE_HASH_AUTO"`` (derives that partition
-    count from ``build_rows_estimate`` or a ``left.count()``, then
-    repartitions the point side on the join keys so only the exploded
-    interval side re-shuffles), or ``"AUTO"`` (the shipping-plan
-    default: Catalyst's free size estimate picks None — the planner
-    broadcasts — below ``spark.sql.autoBroadcastJoinThreshold`` and
-    SHUFFLE_HASH_AUTO above it; ``core.session.resolve_auto_join_hint``)."""
+    The point side is broadcast or hash-built by size (module
+    docstring); the hash build is sized from a ``left.count()``."""
     extra_on = extra_on or []
     if bin_width == "auto":
         bin_width = int(
@@ -95,23 +77,7 @@ def range_join_binned(
             F.sequence(F.floor(F.col(lo_col) / w), F.floor(F.col(hi_col) / w))
         ),
     )
-    if join_hint == "AUTO":
-        # size-triggered: None (planner broadcasts) below the broadcast
-        # threshold, the sized hash build above it (core/session.py)
-        from ..core.session import resolve_auto_join_hint
-
-        join_hint = resolve_auto_join_hint(binned_l)
-    if join_hint == "SHUFFLE_HASH_AUTO":
-        n_build = (
-            build_rows_estimate if build_rows_estimate is not None else left.count()
-        )
-        base_parts = int(left.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        n_parts = max(base_parts, math.ceil(n_build / max(1, target_build_rows)))
-        binned_l = binned_l.repartition(n_parts, "_bin", *extra_on).hint(
-            "SHUFFLE_HASH"
-        )
-    elif join_hint:
-        binned_l = binned_l.hint(join_hint)
+    binned_l = sized_hash_build(binned_l, ["_bin", *extra_on], left.count)
     return binned_l.join(exploded_r, ["_bin", *extra_on]).where(
         F.col(point_col).between(F.col(lo_col), F.col(hi_col))
     ).drop("_bin")

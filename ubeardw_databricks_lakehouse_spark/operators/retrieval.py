@@ -138,15 +138,12 @@ def bm25_topk(
     b: float = B,
     tf_index: DataFrame | None = None,
     doc_stats: DataFrame | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Top-``k`` documents by BM25 against ``query_terms``.
 
-    ``materialize`` (default True) checkpoints the corpus path's
-    hit-filtered tf frame once — see the inline comment; False keeps
-    the plan fully lazy (plan-shape tests inspect the pre-execution
-    tree). The returned frame reads that checkpoint, so its lifetime
-    is the caller's ``checkpoint_scope``.
+    The corpus path checkpoints its hit-filtered tf frame once — see
+    the inline comment. The returned frame reads that checkpoint, so
+    its lifetime is the caller's ``checkpoint_scope``.
 
     Returns (doc_id, n_terms_hit, bm25) ordered by score desc with a
     doc-id tie-break; ``bm25`` is DOUBLE, produced as a deterministic
@@ -194,8 +191,7 @@ def bm25_topk(
         # bound — so pin it once (guide §2.4). Index-path queries
         # (tf_index=) never reach here: their hits frame reads the
         # materialized index, no corpus pass to save.
-        if materialize:
-            tf = checkpoint(tf)
+        tf = checkpoint(tf)
     # N docs and avg length — two scalar aggregates, broadcast back.
     stats = F.broadcast(
         dl.agg(

@@ -525,7 +525,7 @@ def dequantize_expr(qvec, q_min, q_scale):
     )
 
 
-# Broadcast-scoring budget for coarse assignment: below this K the
+# Broadcast-scoring budget of ``_assign_coarse``: below this K the
 # exact N×K scorer beats the LSH probe machinery's fixed costs
 # (signature hashing, probe explode, per-vector ranking window, exact
 # fallback); above it the expected N·(n_planes+1)·K/2^n_planes probe
@@ -538,13 +538,24 @@ def dequantize_expr(qvec, q_min, q_scale):
 AUTO_LSH_MIN_CELLS = 128
 
 
-def resolve_assign_mode(assign: str, k: int) -> str:
-    """Resolve the ``assign`` knob: "auto" routes to the sub-N×K LSH
-    scorer once the cell count exceeds the broadcast-scoring budget,
-    else the exact N×K scorer. Explicit "exact"/"lsh" pass through."""
-    if assign == "auto":
-        return "lsh" if k > AUTO_LSH_MIN_CELLS else "exact"
-    return assign
+def _assign_coarse(
+    df: DataFrame,
+    centroids: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    nprobe: int,
+) -> DataFrame:
+    """Nearest-``nprobe`` cells per vector against ``k`` centroids, by
+    the scorer K calls for: the sub-N×K LSH probe scorer past
+    ``AUTO_LSH_MIN_CELLS`` cells, the exact N×K broadcast scorer
+    within it."""
+    if k > AUTO_LSH_MIN_CELLS:
+        return assign_cells_lsh(
+            df, centroids, id_col, vec_col, dim=dim, nprobe=nprobe
+        )
+    return assign_cells(df, centroids, id_col, vec_col, nprobe)
 
 
 def assign_cells_lsh(

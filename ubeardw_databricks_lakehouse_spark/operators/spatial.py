@@ -67,6 +67,9 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..core.session import sized_hash_build
+
+
 def _celled(
     df: DataFrame,
     x_col: str,
@@ -114,9 +117,6 @@ def radius_join(
     other: DataFrame | None = None,
     metric: str = "euclidean",
     max_abs_lat: float = 70.0,
-    join_hint: str | None = None,
-    build_rows_estimate: int | None = None,
-    target_build_rows: int = 250_000,
 ) -> DataFrame:
     """Pairs of points within ``radius`` of each other.
 
@@ -136,43 +136,11 @@ def radius_join(
     so antimeridian pairs (lon 179.9 vs -179.9) are found like any
     others. NULL and NaN coordinates drop the row (both metrics).
 
-    ``join_hint``: optional Spark join hint applied to the home-cell
-    (build) side of the candidate join — pass ``"SHUFFLE_HASH"`` when
-    the point set is too big to broadcast AND partitions are sized so
-    each per-partition hash build fits memory (points/partitions rows
-    per map). Measured at the 64M-point / 8g single-box spill wall:
-    the default SortMergeJoin's wall is the SORT of the exploded side
-    (177-199 s, spill-bound — which is also why halving the exploded
-    rows barely moved it), while SHUFFLE_HASH at 256 partitions runs
-    129 s (1.4x) with no sort at all. Left None (default) the planner
-    picks broadcast at small scale and the spill-robust sort-merge
-    beyond it — the hint trades that graceful degradation for speed,
-    so it is opt-in: an under-partitioned hash build OOMs outright
-    (measured at 32 partitions).
-
-    ``join_hint="SHUFFLE_HASH_AUTO"`` removes the manual sizing step
-    (r11 verdict #3): the build side is repartitioned on the cell keys
-    to ``max(shuffle.partitions, ceil(build_rows / target_build_rows))``
-    partitions and hinted SHUFFLE_HASH; the join reuses that
-    partitioning (Spark's EnsureRequirements shuffles only the exploded
-    probe side to match), so each per-map hash build holds
-    ~``target_build_rows`` points ON AVERAGE (default 250k — the
-    64M/256-partition rung that ran OOM-free at 8g; each point row is
-    ~24 bytes payload, so 250k rows is single-digit MB per build).
-    Skew caveat: hash partitioning on the cell keys puts a hot CELL
-    entirely in one partition, so a dataset concentrated in few cells
-    can exceed the average bound arbitrarily — exactly the
-    optimizeWrite hot-partition note; for known-hot cells shrink
-    ``cell_size`` (more, smaller cells) or size partitions manually.
-    ``build_rows_estimate`` skips the sizing ``count()`` when the
-    caller already knows the cardinality (a catalog rowcount, a
-    previous stage's count).
-
-    ``join_hint="AUTO"`` (the shipping-plan default, r12 verdict #4)
-    resolves per size using Catalyst's free estimate: build side at or
-    under ``spark.sql.autoBroadcastJoinThreshold`` stays unhinted (the
-    planner broadcasts — optimal, zero shuffle), above it behaves as
-    ``SHUFFLE_HASH_AUTO`` (see ``core.session.resolve_auto_join_hint``).
+    Join strategy follows size (``core.session.sized_hash_build``):
+    a home-cell (build) side Catalyst estimates at or under
+    ``spark.sql.autoBroadcastJoinThreshold`` is broadcast; a bigger
+    one is repartitioned on the cell keys and hash-built, sized from a
+    ``count()`` of the build-side input.
     """
     if metric not in ("euclidean", "haversine"):
         raise ValueError(f"unknown metric {metric!r}")
@@ -275,32 +243,8 @@ def radius_join(
         F.col(y_col).alias("_yb"),
         "_cx", "_cy",
     )
-    if join_hint == "AUTO":
-        # size-triggered: None (planner broadcasts) below the broadcast
-        # threshold, the sized hash build above it — the shipping
-        # default that needs no per-site judgement
-        from ..core.session import resolve_auto_join_hint
-
-        join_hint = resolve_auto_join_hint(b)
-    if join_hint == "SHUFFLE_HASH_AUTO":
-        build_src = other if other is not None else points
-        n_build = (
-            build_rows_estimate
-            if build_rows_estimate is not None
-            else build_src.count()
-        )
-        base_parts = int(
-            build_src.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-        n_parts = max(base_parts, math.ceil(n_build / max(1, target_build_rows)))
-        # explicit repartition on the join keys: the join reuses this
-        # partitioning, so only the 5x/9x exploded probe side shuffles
-        # to n_parts and the AVERAGE per-map hash build is
-        # ~target_build_rows regardless of total N (a hot cell still
-        # lands whole in one partition — see the docstring skew caveat)
-        b = b.repartition(n_parts, "_cx", "_cy").hint("SHUFFLE_HASH")
-    elif join_hint:
-        b = b.hint(join_hint)
+    build_src = other if other is not None else points
+    b = sized_hash_build(b, ["_cx", "_cy"], build_src.count)
     cand = a.join(b, ["_cx", "_cy"])
     if self_mode:
         if half:

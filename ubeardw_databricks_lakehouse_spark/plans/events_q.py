@@ -692,10 +692,10 @@ def q_error_after_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros("ts").alias("p_lo"),
         (F.unix_micros("ts") + F.lit(21_600_000_000)).alias("p_hi"),
     )
-    # derived knobs as the shipping default (r12 verdict #4): every
-    # interval spans exactly 6h, so bin_width="auto" derives the same
-    # 21_600_000_000 the hand-set constant carried (pinned in pytest),
-    # and join_hint="AUTO" broadcasts at sf scale / hash-builds at 64M+
+    # derived bin width (r12 verdict #4): every interval spans exactly
+    # 6h, so bin_width="auto" derives the same 21_600_000_000 the
+    # hand-set constant carried (pinned in pytest); the join broadcasts
+    # the error side at sf scale and hash-builds it at 64M+
     joined = range_join_binned(
         errors,
         purchases,
@@ -704,7 +704,6 @@ def q_error_after_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         hi_col="p_hi",
         bin_width="auto",
         extra_on=["user_id"],
-        join_hint="AUTO",
     )
     return joined.select(
         "user_id",

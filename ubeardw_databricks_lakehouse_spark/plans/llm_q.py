@@ -2747,10 +2747,10 @@ def q_spatial_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.element_at("embedding", 1).cast("double") * 45).alias("x"),
         (F.element_at("embedding", 2).cast("double") * 90).alias("y"),
     )
-    # AUTO: at sf scale the build side is under the broadcast
-    # threshold -> planner broadcast (plan-pinned in pytest); at 64M+
-    # it resolves to the sized SHUFFLE_HASH build, no per-site tuning
-    pairs = radius_join(pts, "vec_id", "x", "y", 1.5, join_hint="AUTO").select(
+    # at sf scale the build side is under the broadcast threshold ->
+    # planner broadcast (plan-pinned in pytest); at 64M+ it is the
+    # sized SHUFFLE_HASH build, no per-site tuning
+    pairs = radius_join(pts, "vec_id", "x", "y", 1.5).select(
         F.col("vec_id_a").alias("vec_a"),
         F.col("vec_id_b").alias("vec_b"),
         "dist_sq",

@@ -5,140 +5,20 @@ Every entry pairs a Spark implementation with its DuckDB oracle SQL
 (None only for genuinely non-SQL-reproducible ops, e.g. ANN with
 recall<1 — the driver then records a rows-only check).
 
-ORDERING CONTRACT (evidence rotation): the correctness driver evaluates
-only the FIRST 50 entries each round. Entries are DEFINED below grouped
-by theme (the r1-r3 tier layout, kept for history), and the effective
-order is set by the explicit ``_WINDOW`` list at the bottom: its 50
-names become positions 1-50 for the next driver run; everything else
-keeps its definition order behind them.
-
-Rotation rule (enforced by tests/test_registry_order.py; the next
-window is computed mechanically by tools/rotation_plan.py — run it
-right after the driver drops a CORRECTNESS report): no query may
-go two consecutive rounds unchecked — every entry whose latest green
-evidence is two or more CORRECTNESS reports old, plus every entry with
-no green evidence at all, must be inside the window. Entries whose
-underlying operator code changed in the current round should be
-re-windowed too (judgment call, noted per round below).
-
-CAPACITY NOTE for r5+: at 120 registry entries the strict 2-round rule
-exceeds the 50-slot/round budget (steady state needs ceil(120/50)=3
-rounds per full pass). From r5 the window rotates on a 3-round cycle
-(oldest-evidence-first), and the per-round staleness backstop is the
-IN-REPO full gate mirror: `tools/oracle_sweep.py` runs EVERY
-oracle-paired entry vs DuckDB at sf0.01 (the driver's scale) each
-round — 113/113 green on 2026-08-14. test_registry_order's two-report
-freshness horizon widens to three when the constraint first binds.
-r7 UPDATE (168 entries at round close): the horizon is now the
-steady-state minimum ceil(|registry|/50) — 4 at 151-200 entries. The
-simulated ledger after CORRECTNESS_r07 lands: cohorts r5=44, r6=50,
-r7=50, never-graded=24 (_DEFERRED_NEW); under horizon 4 the per-round
-demand sequence is r8: 24 (+26 free slots pulling the oldest r5
-cohort forward), r9: <=44, r10: 50, r11: 50 — always satisfiable.
-Under the old horizon 3 the r8 demand would have been 44+17=61 > 50,
-structurally red. Sweeps on 2026-08-15: 147/147, then 150/150, then
-152/152 green at sf0.01 as the batches landed; 153/153 at close.
-r8 UPDATE: window rotated per the r7 verdict (#1) — 24 deferred + 26
-oldest-r5; _DEFERRED_NEW emptied then refilled with exactly ONE
-genuinely-new-class entry (q_seasonal_decomposition — the
-decomposition/forecast class) under the verdict's <=5 budget;
-registry closes r8 at 169 entries, horizon still 4 (#2).
-r8 sweep on 2026-08-15: 154/154 green at sf0.01 (367 s) on the tree
-carrying the review fixes (containment prefix bound, benford >= 1,
-bfs seed filter) and the linkage/graph-amortization work; full pytest
-421 passed.
-Note the accepted cadence: the forward-looking staleness test goes red
-the moment CORRECTNESS_r08.json lands (the 18 unrotated r5 entries'
-evidence falls off the horizon) and the r9 rotation — 18 + up to 32
-oldest-r6 pulled forward — fixes it first thing, exactly as r6→r7 and
-r7→r8 did.
-r9 UPDATE: rotation delivered exactly as prescribed (18 r5-stale +
-q_seasonal_decomposition + 31 oldest-r6; _DEFERRED_NEW emptied then
-refilled with ONE genuinely-new-class entry, q_peak_concurrency — the
-interval-algebra / sweep-line class). Registry closes r9 at 170
-entries, horizon still 4; r10 demand = 19 remaining-r6 + 1 deferred +
-30 free slots pulling the oldest-r7 cohort forward. r9 sweeps:
-156/156 green at sf0.01 (194-206 s across three full-gate runs);
-full pytest 460→463 green as the round's tests landed.
-r10 UPDATE: rotation delivered exactly as prescribed (19 r6-stale +
-q_peak_concurrency + 30 oldest-r7 in definition order; _DEFERRED_NEW
-emptied). Ledger after r09 mechanically recomputed this round:
-r6=19, r7=50, r8=50, r9=50, never-graded=1 — matches the r9 verdict
-and the staleness test's printed list element-for-element. Horizon
-stays 4 = ceil(|registry|/50); demand r11 = 20 remaining-r7 +
-deferred + free slots. Registry closes r10 at 174 entries (four
-additions in the deferred lane, inside the <=5 budget:
-q_quantile_sketch, q_weighted_sample, q_spatial_neighbors,
-q_lpa_communities).
-r10 gates on the final tree: oracle sweep 159/159 exact at sf0.01
-(203 s) AND 159/159 exact at sf0.1 (2,088 s — first full-battery
-bench-scale sweep; earlier full-gate runs 157/157 as the additions
-landed; final HEAD gates after the NaN-coordinate fix and the
-weighted-LPA extension: sweep 159/159 at 187 s, full pytest 505),
-full pytest 474→478→498→499→501→505 green as the round's tests
-landed;
-BENCH_REPS=3 medians committed as BENCH_MEDIANS_r10.json (39 entries,
-suite 69.3 s with the two new bench entries; the CC edge-recompute
-fix took q_curated_corpus 10.33 -> 5.93 s mid-round, and the final
-sample's uniform 1.09x common-37 drift is host load, analyzed in
-SCALING.md).
-r11 UPDATE: rotation delivered exactly as prescribed (20 r7-stale +
-the four r10 deferred additions at positions 21-24 + 26 oldest-r8 in
-definition order; _DEFERRED_NEW emptied) — after first FIXING
-tools/rotation_plan.py, whose one-extra-report lookahead demanded an
-unsatisfiable 74 slots and truncated the never-graded lane out of
-the window (see the tool's docstring note). Ledger after r10:
-r7=20, r8=50, r9=50, r10=50, never=4. Registry closes r11 at 175
-entries (ONE addition in the deferred lane, inside the <=5 budget:
-q_kcore_parts — the density-filtering graph class; fixpoint-stable
-peel makes its fixed-R CTE replay exact at any R). Horizon stays
-4 = ceil(175/50); demand r12 = 24 remaining-r8 + 1 deferred + 25
-free slots pulling the oldest-r9 cohort forward.
-r11 gates on the final tree: oracle sweep 160/160 exact at sf0.01
-(281 s) AND 160/160 exact at sf0.1 (2,232 s — the bench-scale
-certification, the r10 precedent repeated), full pytest 515 green
-(the r11 tests: kcore battery, CC-auto engine selection, LPA input
-guards, spatial half-neighborhood + SHUFFLE_HASH equivalence,
-release_local_checkpoint shape pins); BENCH_MEDIANS_r11.json
-committed at 5 reps (41 entries incl. the new t-digest
-merge-vs-rebuild pair), diffed vs r10 with tools/bench_diff.py.
-r12 UPDATE: rotation delivered exactly as prescribed by
-tools/rotation_plan.py run first thing (24 r8-stale + q_kcore_parts +
-25 oldest-r9 in definition order; _DEFERRED_NEW emptied then refilled
-with ONE genuinely-new-class entry, q_neardup_incremental — the
-incremental/continuous-ingest near-dup class: delta bands probe a
-materialized LSH band index, O(delta) candidates where the existing
-signature-reuse entry still self-joins all corpus bands). Ledger
-after r11: r8=24, r9=50, r10=50, r11=50, never=1. Registry closes
-r12 at 176 entries; horizon stays 4 = ceil(176/50); demand r13 = 25
-remaining-r9 + 1 deferred + 24 free slots pulling the oldest-r10
-cohort forward.
-r12 gates on the final tree: oracle sweep 161/161 exact at sf0.01
-(222 s) AND 161/161 exact at sf0.1 (2,198 s — the bench-scale
-certification, third round running), full pytest 525 green (519 at
-the mid-round gate; the r12 tests: neardup_upsert batch-equivalence
-+ planted cross-split pair, streaming incremental-neardup
-convergence + crash-replay idempotence, SHUFFLE_HASH_AUTO pair-set
-equality + derived-width plan pin, release_local_checkpoint
-allow_projection gate, optimizeWrite file layout, bench tooling);
-BENCH_MEDIANS_r12 committed at 5 reps from a final-HEAD run
-(shared-41 vs r11 = 1.07x, max entry 1.33x), diffed vs r11 with
-tools/bench_diff.py (which now prints both runs' loadavg, and
-bench.py stamps degraded:true when the start load exceeds
-BENCH_MAX_START_LOAD); the anomalous first medians run stays
-committed as BENCH_MEDIANS_r12_run1.json with its adjudication in
-SCALING.md.
-
-r4 window rationale: the 45 entries that held tier-5 positions 51-95 in
-r3 carry CORRECTNESS_r02 evidence (two rounds stale after r4) -> all in.
-q_token_stats was r3's one red row (oracle HUGEINT cast, fixed) -> in.
-Four r4-new queries (q_embedding_dedup_fast, q_repetition_profile,
-q_unigram_lm, q_dsir) have no evidence -> in. q_time_travel /
-q_ivm_refresh / q_sequence_packing are r3-green with operators changed
-in r4 (CDF _commit_version, IVM watermark, ROWS-frame cumsum); no
-window slots remain, so their re-confirmation is the in-repo simulated
-gate (all 50 window entries + these three green vs DuckDB at sf0.01 on
-2026-08-14) plus the new unit tests — they rotate back in next round.
+Ordering contract: the correctness driver evaluates only the FIRST 50
+entries each round. Entries are defined below grouped by theme; the
+effective order is the 50 names of ``_WINDOW`` (positions 1-50), then
+``_DEFERRED_NEW`` (entries added after the window was set: they
+rotate in next round and the list empties), then everything else in
+definition order. Rotation rule: every entry whose newest green driver
+evidence is about to fall off the freshness horizon of
+max(2, ceil(|registry| / 50)) CORRECTNESS reports, and every entry
+with no green evidence, must sit inside the window; free slots go to
+the oldest-evidence cohort in definition order.
+``tools/rotation_plan.py`` computes the next window mechanically (run
+it when a CORRECTNESS report lands), ``tests/test_registry_order.py``
+enforces the rule, and ``tools/oracle_sweep.py`` checks every
+oracle-paired entry against DuckDB at sf0.01 between driver rounds.
 """
 
 from __future__ import annotations
@@ -843,26 +723,8 @@ QUERIES: list[QueryDef] = [
              "it — fully oracle-paired"),
 ]
 
-# Driver window for the CURRENT round (see module docstring): these 50
-# names are promoted to positions 1-50, in this order; the remaining
-# entries follow in definition order.
-#
-# r13 window rationale (from CORRECTNESS_r01-r12 evidence; r12 verdict
-# "Next round #1" — mechanically generated by tools/rotation_plan.py,
-# run first thing this round; ledger after r12 is r9=25, r10=50,
-# r11=50, r12=50, never=1):
-# - the 25 entries whose newest green is CORRECTNESS_r09 promote
-#   first: their evidence falls off the 4-report horizon now that
-#   CORRECTNESS_r12 is on disk (exactly the list the staleness test
-#   prints).
-# - q_neardup_incremental (the r12 _DEFERRED_NEW addition — the
-#   never-driver-graded lane) promotes per test_deferred_new_queue.
-# - the remaining 24 slots pull the oldest-evidence cohort forward:
-#   24 of the 50 entries whose newest green is CORRECTNESS_r10, in
-#   registry definition order (round-tie tiebreak — same policy as
-#   every prior rotation). The other 26 r10 entries head the r14
-#   window (demand r14 floor = 26, well under 50).
-# 25 + 1 + 24 = 50/50: exactly full.
+# Driver window for the current round (module docstring: ordering
+# contract and rotation rule), as printed by tools/rotation_plan.py.
 _WINDOW: list[str] = [
     # r15 window (tools/rotation_plan.py, oldest evidence first).
     # r11-latest-green lane: falls off the 4-report horizon now that
@@ -897,189 +759,9 @@ _WINDOW: list[str] = [
     "q_multimodal_features", "q_chunking",
 ]
 
-# End-of-round full-gate mirror: ALL 130 oracle-paired entries swept
-# green vs DuckDB at sf0.01 (the driver's grading scale) on 2026-08-14
-# (r6 final, incl. the TPC-H completions and the late-r6 analytics
-# batch) — `tools/oracle_sweep.py`, 0 failures in 273 s, under the
-# HARDENED criteria (values + dtype_match + driver_safe: no
-# DECIMAL/HUGEINT final kinds anywhere — the r5 hash-red class is now
-# structurally unreachable). Re-confirmed after the post-sweep review
-# fixes (triangle checkpoint, shared fuzzy helper): 130/130 again,
-# full pytest 347 passed.
-# Queries ADDED mid-round after the window was already saturated: they
-# carry in-repo differential evidence (pytest sf0.001 sweep + sf0.01
-# oracle_sweep run) and MUST rotate into the window next round —
-# test_registry_order enforces that they sit immediately after the
-# window so the next rotation promotes them, and that this list is
-# emptied at each rotation. r5: the r4 backlog of 24 rotated into the
-# window (contract honored). r6: q_bpe_encode (the encoder leg of the
-# BPE trainer, rows-only) plus the eight late-r6 operators — hybrid RRF
-# search, bigram LM, MMR re-rank, CCNet quality buckets, duplicate-
-# substring removal, Count-Min heavy hitters, winsorization, KMV
-# distinct (all but MMR oracle-paired; every one green in the sf0.001 +
-# sf0.01 differentials this round) — added after the r6 window locked.
-# ... and the four adapted TPC-H completions (q02/q11/q16/q20 — the
-# battery now covers the classic 22 end-to-end), likewise added after
-# the lock and green in both differentials.
-# ... and the late-r6 analytics batch 2 (triangle counting, fuzzy
-# record linkage, Markov event transitions, equi-width histograms,
-# entity-resolution clustering) — all five oracle-paired and green in
-# both differentials.
-# r7 rotation: the 19-entry r6 queue promoted into the window above
-# and this list emptied (contract honored — r5 rotated 24, r6 rotated
-# none because the staleness tiers saturated the window). Queries added
-# mid-r7 after the window locked go here, in addition order.
-# r7 additions (tier 9): containment dedup, Pareto skyline, column
-# profile, k-anonymity audit, Benford profile — all oracle-paired,
-# green in the sf0.001 + sf0.01 differentials this round; they rotate
-# into the r8 window.
-# r7 additions batch 2 (statistics/analytics family): brand co-purchase
-# CF, Gini concentration, MAD outliers, gaps-and-islands streaks,
-# chi-square drift — likewise oracle-paired and green in both
-# differentials.
-# r7 additions batch 3 (funnel latency, FK audit, Lorenz concentration,
-# exact-sufficient-statistics correlation, bounded-hop BFS).
-# Rotation math, CORRECTED by mechanical simulation (the earlier "33
-# r5-stale" count was wrong): 44 entries are r5-latest-green, so under
-# the old 3-report horizon the r8 demand would be 44 + 17 = 61 > 50 —
-# unsatisfiable. The staleness horizon is therefore the steady-state
-# minimum ceil(161/50) = 4 (see CAPACITY NOTE and
-# test_no_query_goes_stale_unchecked): r8 must window these 17 plus
-# (by the oldest-evidence-first policy) 33 of the 44 r5 entries; the
-# remaining 11 r5 entries head r9's window.
-# r7 additions batch 4 (agreement / spatial / serial-dependence /
-# hypothesis-testing / weighted-quantile / regression / changepoint):
-# Cohen's kappa, grid-blocked radius join, lag-1 autocorrelation,
-# Mann-Whitney rank-sum, weighted median, OLS trend, CUSUM changepoint
-# — seven capability classes the battery lacked. Rotation math at 168
-# entries (horizon stays 4 = ceil(168/50)): r8 windows these 24
-# deferred + 26 of the 44 r5-stale entries (oldest-evidence-first);
-# the remaining 18 head r9 — every round's demand stays under 50.
-# r8 rotation: the 24-entry r7 queue promoted into the window above and
-# this list emptied (contract honored — r5 rotated 24, r7 rotated 19).
-# Registry growth is NEAR-FROZEN per the r7 verdict (#2, budget <=5 for
-# genuinely new classes): r8 adds exactly ONE entry —
-# q_seasonal_decomposition, the decomposition/forecast class the
-# battery lacked (OLS/autocorr/CUSUM cover trend, serial dependence
-# and changepoints; nothing covered seasonality). At 169 entries the
-# horizon stays 4 = ceil(169/50) and the demand sequence is r9: 18
-# r5-stale + 1 deferred (+31 free slots pulling the oldest-r6 cohort
-# forward), r10: <=50, r11: 50 — always satisfiable.
-# r9 rotation: q_seasonal_decomposition promoted into the window above
-# and this list emptied (contract honored — every prior queue rotated
-# on schedule: r5: 24, r7: 19, r8: 24, r9: 1). Ledger after r08 is
-# r5=18, r6=50, r7=50, r8=50, never=1; the r9 window takes 18+1+31 and
-# the demand sequence stays satisfiable: r10 = 19 remaining-r6 + free
-# slots, r11 <= 50.
-# r9 addition (budget <=5, genuinely new classes only): exactly ONE —
-# q_peak_concurrency, the interval-algebra / sweep-line class (peak
-# simultaneous sessions). Nothing in the battery computed concurrency
-# over intervals; the operator also lands the distributed running-sum
-# primitive (global_running_sum). At 170 entries the horizon stays
-# 4 = ceil(170/50); demand r10 = 19 r6-stale + 1 deferred + 30 free.
-# r10 rotation: q_peak_concurrency promoted into the window above and
-# this list emptied (contract honored — every prior queue rotated on
-# schedule: r5: 24, r7: 19, r8: 24, r9: 1, r10: 1). Ledger after r09 is
-# r6=19, r7=50, r8=50, r9=50, never=1; the r10 window takes 19+1+30 and
-# the demand sequence stays satisfiable: r11 = 20 remaining-r7 +
-# deferred + free slots, r12 <= 50.
-# r10 additions (budget <=5, genuinely new classes only): TWO —
-# 1. q_quantile_sketch, the mergeable-quantile-summary class
-#    (t-digest). The battery had exact grouped quantiles
-#    (applyInPandas) and one-shot percentile_approx, plus mergeable
-#    sketches for counts/cardinality (CMS/KMV/HLL) — but no
-#    bounded-size MERGEABLE quantile summary, the standard 100 TB
-#    percentile primitive (build per shard, merge summaries, never
-#    re-scan).
-# 2. q_weighted_sample, the row-level weighted-sampling class
-#    (systematic PPS). The sampling family was uniform at the row
-#    level (hash/stratified/reservoir) and weighted only at the
-#    STRATUM level (sqrt-mixing); nothing selected individual rows
-#    with probability proportional to a weight — the "sample docs
-#    proportional to token budget / quality mass" mixing primitive.
-#    Exactness-first design: no pow/ln priority keys (u^(1/w)
-#    orderings are libm-dependent); hash order + integer prefix sum
-#    (global_running_sum) + integer-division interval test, so the
-#    entry is fully oracle-PAIRED, not rows-only.
-# 3. q_spatial_neighbors, the spatial SELF-join pair primitive —
-#    honestly labeled: the grid-cell technique itself is NOT new
-#    (q_geo_radius_join carries it inline, two-table + aggregated);
-#    this addition OPERATORIZES it (`operators/spatial.radius_join`:
-#    self-join emitting each unordered pair once, haversine metric
-#    with exact spherical cell bounds + modular antimeridian ring,
-#    Catalyst-proof loudness guards) and grades the pair-LEVEL
-#    output the inline form never exposed. Squared-distance residual
-#    uses only IEEE-exact double ops (no sqrt/libm), so the entry is
-#    fully oracle-PAIRED vs DuckDB's brute-force cross join.
-# 4. q_lpa_communities, the community-detection class. The graph
-#    family had connectivity (CC = min-label transitive closure),
-#    centrality (PageRank), reachability (BFS), and density
-#    (triangles) — but no clustering: LPA spreads the MODE of
-#    neighbor labels, keeping dense pockets distinct. Synchronous
-#    rounds + total tie-break (count DESC, label ASC) + fixed
-#    iterations = all-integer and fully oracle-PAIRED (DuckDB chains
-#    the rounds as CTEs), which async/random-tie-break LPA never is.
-# At 174 entries the horizon stays 4 = ceil(174/50); demand
-# r11 = 20 r7-stale + 4 deferred + 26 free.
-# r11 rotation: the four-entry r10 queue promoted into the window above
-# and this list emptied (contract honored — every prior queue rotated
-# on schedule: r5: 24, r7: 19, r8: 24, r9: 1, r10: 1, r11: 4). Ledger
-# after r10 is r7=20, r8=50, r9=50, r10=50, never=4; the r11 window
-# takes 20+4+26 and the demand sequence stays satisfiable: r12 = 24
-# remaining-r8 + deferred + free slots, r13 <= 50.
-# r11 addition (budget <=5, genuinely new classes only — the r10
-# verdict's named highest-value gap): exactly ONE — q_kcore_parts,
-# the density-based graph FILTERING class (iterative degree peel).
-# The family had connectivity/centrality/reachability/density/
-# clustering but nothing that FILTERS by density — the standard
-# spam/bot-subgraph primitive of a web-scale curation pipeline. The
-# peel is fixpoint-stable, making the fixed-round DuckDB replay exact
-# at any round count (one property stronger than LPA's pairing). At
-# 175 entries the horizon stays 4 = ceil(175/50); demand r12 = 24
-# r8-stale + 1 deferred + 25 free.
-# r12 rotation: q_kcore_parts promoted into the window above and this
-# list emptied (contract honored — every prior queue rotated on
-# schedule: r5: 24, r7: 19, r8: 24, r9: 1, r10: 1, r11: 4, r12: 1).
-# Ledger after r11 is r8=24, r9=50, r10=50, r11=50, never=1; the r12
-# window takes 24+1+25 and the demand sequence stays satisfiable:
-# r13 = 25 remaining-r9 + deferred + free slots, r14 <= 50.
-# r12 addition (budget <=5, genuinely new classes only — the r11
-# verdict's named highest-value gap, #5): exactly ONE —
-# q_neardup_incremental, the streaming/incremental near-dup class.
-# The batch MinHash->LSH battery was complete, but a corpus that GROWS
-# re-ran the full pipeline per ingest; the band-index upsert
-# (operators/dedup.neardup_upsert) makes the per-batch cost O(delta)
-# — the operator a continuously-ingesting 100 TB curation pipeline
-# actually runs (the storage/ivm.py pattern applied to near-dup
-# state). At 176 entries the horizon stays 4 = ceil(176/50); demand
-# r13 = 25 r9-stale + 1 deferred + 24 free.
-# r13 rotation: q_neardup_incremental promoted into the window above
-# and this list emptied (contract honored — every prior queue rotated
-# on schedule: r5: 24, r7: 19, r8: 24, r9: 1, r10: 1, r11: 4, r12: 1,
-# r13: 1). Ledger after r12 is r9=25, r10=50, r11=50, r12=50, never=1;
-# the r13 window takes 25+1+24 and the demand sequence stays
-# satisfiable: r14 = 26 remaining-r10 + deferred + free slots,
-# r15 <= 50.
-# r13 addition (budget <=5, genuinely new classes only — the r12
-# verdict's named highest-value gap, #5): exactly ONE — q_ivf_upsert,
-# the incremental ANN index-maintenance class. The ANN family's builds
-# (IVF/IVF-fast/IVFPQ) were one-shot: a continuously-ingesting corpus
-# re-trained and re-assigned per batch. similarity.ivf_upsert assigns
-# only the delta against the existing centroids (O(delta·K) broadcast,
-# corpus assignment never re-read) with an ivf_distortion drift guard
-# that signals the rare retrain; ivf_search (split out of topk_ivf)
-# searches the maintained state. The same IVM shape as neardup_upsert
-# (r12) and storage/ivm.py, applied to ANN state. At 177 entries the
-# horizon stays 4 = ceil(177/50); demand r14 = 26 r10-stale + 1
-# deferred + 23 free.
-# r14 rotation: q_ivf_upsert promoted into the window above and this
-# list emptied (contract honored — every prior queue rotated on
-# schedule: r5: 24, r7: 19, r8: 24, r9: 1, r10: 1, r11: 4, r12: 1,
-# r13: 1, r14: 1). Ledger after r13 is r10=26, r11=50, r12=50, r13=50
-# (less the 5 no_oracle rows, which count as graded for rotation);
-# the r14 window takes 26+1+23 (fill = 5 verdict-priority rewritten
-# queries + 18 oldest-r11). r14 is an OPTIMIZATION round: no new
-# registry entries.
+# Entries added after the current window was set (module docstring);
+# tests/test_registry_order.py pins that they follow the window and
+# that the next rotation empties this list.
 _DEFERRED_NEW: list[str] = []
 
 _by_name = {q.name: q for q in QUERIES}

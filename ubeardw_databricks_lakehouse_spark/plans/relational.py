@@ -3630,7 +3630,7 @@ def q_kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("m") >= 2)
         .select("src", "dst")
     )
-    core = kcore(e0, k=3, n_iter=4, converge=True)
+    core = kcore(e0, k=3, n_iter=4)
     return core.select(
         F.col("node").alias("part"), "core_degree"
     ).orderBy("part")
