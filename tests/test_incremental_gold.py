@@ -174,3 +174,98 @@ def test_incremental_scd2_matches_batch_history(spark, tmp_path):
     alice = {r["version_number"]: r for r in got if r["id"] == 1}
     assert alice[1]["city"] == "lyon" and alice[2]["city"] == "marseille"
     assert not alice[1]["is_current"] and alice[2]["is_current"]
+
+
+def _lakehouse_day(spark, root):
+    """Day 1 gold job, one incremental trip_fact micro-batch, then a
+    day-2 gold job in which one eater moved (one SCD2 change). Returns
+    the final trip_fact and dim rows, and the executed plan of every
+    frame committed through ``Lakehouse.upsert`` / ``overwrite``."""
+    from ubeardw_databricks_lakehouse_spark.pipelines.gold import run_gold_job
+    from ubeardw_databricks_lakehouse_spark.pipelines.silver import silver_courier
+    from ubeardw_databricks_lakehouse_spark.testing.fixtures import EATERS
+
+    plans = []
+
+    def recording(method):
+        def run(self, name, df, *args, **kwargs):
+            plans.append(
+                (name, df._jdf.queryExecution().executedPlan().toString())
+            )
+            return method(self, name, df, *args, **kwargs)
+
+        return run
+
+    def silver(entity, builder, rows=None, updates=()):
+        raw = raw_kafka_df(spark, entity, rows=rows)
+        if updates:
+            raw = raw.unionByName(
+                raw_kafka_df(spark, entity, rows=list(updates), op="u")
+            )
+        return builder(to_bronze(raw, entity))
+
+    wave1_ids = {1, 2, 3, 4, 15, 16, 17}
+    day1_events = [e for e in TRIP_EVENTS if e["event_id"] in wave1_ids]
+    batch_events = [e for e in TRIP_EVENTS if e["event_id"] not in wave1_ids]
+    moved = dict(EATERS[0], address_line_1="1 Quai Nouveau",
+                 updated_at=EATERS[0]["updated_at"] + 86_400_000)
+    lake = Lakehouse(spark, str(root / "gold"))
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(Lakehouse, "upsert", recording(Lakehouse.upsert))
+        mp.setattr(Lakehouse, "overwrite", recording(Lakehouse.overwrite))
+        eater = silver("eater", silver_eater)
+        merchant = silver("merchant", silver_merchant)
+        courier = silver("courier", silver_courier)
+        run_gold_job(lake, eater, merchant, courier,
+                     silver("trip_events", silver_trip_events, day1_events),
+                     effective_ts="2024-12-02 02:00:00")
+
+        # the micro-batch joins full silver and static parquet entities
+        silver_path = str(root / "silver_trip_events")
+        silver("trip_events", silver_trip_events).write.parquet(silver_path)
+        static = {}
+        for name, df in (("eater", eater), ("merchant", merchant)):
+            df.write.parquet(str(root / name))
+            static[name] = spark.read.parquet(str(root / name))
+        src = str(root / "wave")
+        silver("trip_events", silver_trip_events, batch_events).write.parquet(src)
+        start_incremental_trip_fact(
+            spark,
+            spark.readStream.schema(spark.read.parquet(silver_path).schema)
+            .parquet(src),
+            silver_path, static["eater"], static["merchant"],
+            lake.read("dim_location"), lake, checkpoint=str(root / "ck"),
+        ).awaitTermination()
+
+        run_gold_job(lake, silver("eater", silver_eater, updates=[moved]),
+                     merchant, courier,
+                     silver("trip_events", silver_trip_events),
+                     effective_ts="2024-12-03 02:00:00")
+    tables = {
+        name: sorted(
+            repr(tuple(r))
+            for r in lake.read(name).drop("silver_load_time").collect()
+        )
+        for name in ("trip_fact", "dim_location", "dim_eater",
+                     "dim_merchant", "dim_courier")
+    }
+    return tables, plans
+
+
+def test_lakehouse_day_respects_disabled_broadcasts(spark, tmp_path):
+    """A session that disables broadcasts gets none on the write path:
+    day 1, a trip_fact micro-batch and an SCD2 day 2 commit frames
+    whose executed plans hold no BroadcastExchange, with the same
+    trip_fact and dimension rows as at the default threshold."""
+    want, plans = _lakehouse_day(spark, tmp_path / "default")
+    assert {name for name, _ in plans} >= {"trip_fact", "dim_eater"}
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        got, plans = _lakehouse_day(spark, tmp_path / "off")
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert got == want
+    assert len(want["dim_eater"]) == 6  # the moved eater's two versions
+    broadcast = sorted({n for n, p in plans if "BroadcastExchange" in p})
+    assert not broadcast, f"broadcasts with broadcasts disabled: {broadcast}"

@@ -284,12 +284,15 @@ def test_incremental_neardup_releases_per_batch_pins(spark, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "name", ["q_bm25_search", "q_hybrid_search_rrf", "q_triangle_suppliers"]
+    "name",
+    ["q_bm25_search", "q_hybrid_search_rrf", "q_triangle_suppliers",
+     "q_embedding_topk_ivfpq"],
 )
 def test_scoped_bench_reps_release_query_checkpoints(spark, name):
     """Scope tripwire, the one-shot twin of the streaming tripwire
     above: registry queries take query-private checkpoints (BM25's
-    hit-filtered tf, the triangle edge sets) that GC never frees. Run
+    hit-filtered tf, the triangle edge sets, the one-shot IVFADC
+    index's centroids and codebook rounds) that GC never frees. Run
     the way bench.py times a multi-rep entry — each rep materialized to
     the noop sink inside its own checkpoint_scope — the session's
     persisted-RDD count must not grow."""

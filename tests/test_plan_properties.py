@@ -979,3 +979,127 @@ def test_broadcast_rows_unchanged_on_the_shipped_local_session(spark):
     heap = spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
     thr = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold").rstrip("b"))
     assert resolve_broadcast_rows(spark, 16) == min(max(thr, heap // 32), 2 << 30) // 64
+
+
+def _registry_names() -> list[str]:
+    from ubeardw_databricks_lakehouse_spark.plans.registry import QUERIES
+
+    return [q.name for q in QUERIES]
+
+
+@pytest.mark.parametrize("name", _registry_names())
+def test_registry_plans_respect_disabled_broadcasts(registry_builds, name):
+    """One broadcast rule, registry-wide: with
+    ``spark.sql.autoBroadcastJoinThreshold=-1`` no entry's executed
+    plan holds a BroadcastExchange. Every broadcast in the package is
+    the planner's (which honours the threshold) or ``broadcast_gate``'s
+    (which returns the identity when broadcasts are disabled). The
+    plans come from the session's shared ``registry_builds``, each
+    built inside a ``checkpoint_scope`` at sf0.001."""
+    _schema, plan = registry_builds[name]
+    assert "BroadcastExchange" not in plan, (
+        f"{name} broadcasts in a session with broadcasts disabled:\n{plan}"
+    )
+
+
+_GATED_SIDES = [
+    "contamination_bloom",
+    "contamination_report",
+    "dsir_importance",
+    "sqrt_mixing_sample",
+    "fuzzy_block_pairs",
+    "cms_estimate",
+    "bm25_topk",
+    "with_global_row_number",
+    "topk_lsh",
+]
+
+
+def _gated_side_frame(spark, name):
+    from pyspark.sql import functions as F
+
+    from ubeardw_databricks_lakehouse_spark.operators import (
+        curation,
+        linkage,
+        ranking,
+        retrieval,
+        sampling,
+        similarity,
+        sketches,
+    )
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    evalset = docs.where("doc_id % 7 = 0")
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    keys = docs.select(F.col("lang").alias("key"))
+    build = {
+        "contamination_bloom": lambda: curation.contamination_bloom(docs, evalset, n=3),
+        "contamination_report": lambda: curation.contamination_report(docs, evalset, n=3),
+        "dsir_importance": lambda: curation.dsir_importance(docs, F.col("lang") == "en"),
+        "sqrt_mixing_sample": lambda: sampling.sqrt_mixing_sample(docs, "doc_id", "source"),
+        "fuzzy_block_pairs": lambda: linkage.fuzzy_block_pairs(
+            docs.select(F.substring("text", 1, 12).alias("name")), max_dist=2, block_cap=2
+        ),
+        "cms_estimate": lambda: sketches.cms_estimate(sketches.cms_build(keys), keys),
+        "bm25_topk": lambda: retrieval.bm25_topk(docs, ["the", "data"]),
+        "with_global_row_number": lambda: ranking.with_global_row_number(
+            docs, [F.col("doc_id")]
+        ),
+        "topk_lsh": lambda: similarity.topk_lsh(emb, emb.where("vec_id % 10 = 0")),
+    }
+    return build[name]()
+
+
+@pytest.mark.parametrize("name", _GATED_SIDES)
+def test_small_sides_broadcast_above_the_threshold(spark, name):
+    """The sides that are small by construction but that Catalyst sizes
+    at their big input (a grouped aggregate — the Bloom bitmap, the
+    bucket weights, the strata thresholds, the block cells, the CMS
+    cells, BM25's idf —, an eval or query slice of a corpus table, a
+    parallelized offsets table) broadcast through ``broadcast_gate``.
+    With ``spark.sql.autoBroadcastJoinThreshold`` at 1 byte every
+    input is above it, as at scale, so the planner broadcasts nothing
+    on its own; each operator must still plan a BroadcastHashJoin."""
+    from ubeardw_databricks_lakehouse_spark.core.session import checkpoint_scope
+
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
+        with checkpoint_scope():
+            p = _plan(_gated_side_frame(spark, name))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert "BroadcastHashJoin" in p, f"{name} lost its broadcast:\n{p}"
+
+
+def test_only_broadcast_gate_forces_a_broadcast():
+    """Source tripwire for the same rule, covering operator and
+    pipeline code no registry plan reaches. Spark honours an explicit
+    broadcast hint even when the session disables broadcasts, so the
+    package's only explicit broadcast is ``broadcast_gate`` in
+    ``core/session.py``: no ``F.broadcast`` / ``functions.broadcast``
+    call or ``broadcast`` import elsewhere, and no broadcast join hint
+    (``.hint``, SQL ``/*+ ... */``) anywhere. Needs no Spark session."""
+    import pathlib
+    import re
+
+    import ubeardw_databricks_lakehouse_spark as pkg
+
+    forced = re.compile(
+        r"\bF\.broadcast\(|\bfunctions\.broadcast\b|\bimport\b.*\bbroadcast\b"
+    )
+    hinted = re.compile(
+        r"""\.hint\(\s*["'](broadcast|broadcastjoin|mapjoin)\b"""
+        r"|/\*\+\s*(broadcast|broadcastjoin|mapjoin)\b",
+        re.IGNORECASE,
+    )
+    root = pathlib.Path(pkg.__file__).parent
+    bad = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for n, line in enumerate(path.read_text().splitlines(), 1):
+            if hinted.search(line) or (
+                rel != "core/session.py" and forced.search(line)
+            ):
+                bad.append(f"{rel}:{n}: {line.strip()}")
+    assert not bad, "explicit broadcasts outside broadcast_gate:\n" + "\n".join(bad)

@@ -58,22 +58,24 @@ def test_every_query_has_fn_and_doc() -> None:
         assert q.doc, q.name
 
 
-def test_all_query_outputs_are_scalar_columns(spark) -> None:
+def test_all_query_outputs_are_scalar_columns(registry_builds) -> None:
     """The driver canonicalizes results with pandas sort_values over
     ALL columns — list/struct/map/binary cells are unhashable and
     crash the harness even for rows-only checks (round-2
     q_user_event_arrays / q_approx_profile). Every registry query must
     therefore emit only scalar columns; typed-array surfaces live on
-    the operators and their pytests, not in the registry."""
+    the operators and their pytests, not in the registry. The schemas
+    come from the session's shared sf0.001 registry builds (a join
+    strategy never changes an output schema)."""
     from pyspark.sql import types as T
 
     banned = (T.ArrayType, T.MapType, T.StructType, T.BinaryType)
+    assert set(registry_builds) == {q.name for q in QUERIES}
     offenders = []
-    for q in QUERIES:
-        df = q.fn(spark, str(REPO.parent / "testdata" / "sf0.001"))
-        for f in df.schema.fields:
+    for name, (schema, _plan) in registry_builds.items():
+        for f in schema.fields:
             if isinstance(f.dataType, banned):
-                offenders.append((q.name, f.name, f.dataType.simpleString()))
+                offenders.append((name, f.name, f.dataType.simpleString()))
     assert not offenders, offenders
 
 

@@ -300,21 +300,33 @@ def resolve_broadcast_rows(spark, bytes_per_row: int) -> int:
 
 
 def broadcast_gate(spark, rows=None):
-    """The iterative operators' one broadcast decision: returns
-    ``F.broadcast`` or the identity, to wrap the small side of a join.
+    """The package's only explicit broadcast: returns ``F.broadcast``
+    or the identity, to wrap the small side of a join.
 
-    Checkpointed frames are ExistingRDDs whose size the planner cannot
-    see, so without an explicit hint every round sort-merges the big
-    side (an edge set, a wedge set) against a table that is noise next
-    to it. The gate forces the broadcast only when the session allows
-    it: with ``spark.sql.autoBroadcastJoinThreshold`` < 0 it returns
-    the identity without calling ``rows`` (a disabled session pays no
-    count job). Otherwise ``rows`` — a zero-argument callable giving
-    the small side's row count, typically a ``count`` of
+    The rule: a side whose size Catalyst can see broadcasts when the
+    planner's statistics put it under
+    ``spark.sql.autoBroadcastJoinThreshold`` — no hint. This gate is
+    for the sides it cannot see or overestimates: checkpointed frames
+    (ExistingRDDs: an iterative operator's round state, the IVF
+    centroids, the PQ codebook), joined frames whose estimate
+    multiplies their inputs, and grouped aggregates and filtered slices
+    that Catalyst sizes at the rows they read. Without it the big side
+    (an edge set, a wedge set, a corpus) sort-merges against a table
+    that is noise next to it.
+
+    The gate forces the broadcast only when the session allows it:
+    with ``spark.sql.autoBroadcastJoinThreshold`` < 0 it returns the
+    identity without calling ``rows`` (a disabled session pays no count
+    job), so such a session plans no broadcast anywhere in the package
+    — its equi-joins shuffle, and its keyless joins (a scalar
+    ``crossJoin``, the N×K IVF cell scoring) plan as a
+    CartesianProduct. Otherwise ``rows`` — a zero-argument callable
+    giving the small side's row count, typically a ``count`` of
     just-materialized checkpoint blocks — is checked against
     ``resolve_broadcast_rows(spark, 16)``; ``rows=None`` declares the
-    side bounded by contract (an ingest delta) and broadcasts it.
-    Join strategy never changes a join's rows."""
+    side small by construction (K centroids, a codebook, one row per
+    group, an ingest delta, an eval or query set) and broadcasts it. Join strategy never
+    changes a join's rows."""
     budget = resolve_broadcast_rows(spark, 16)
     if budget and (rows is None or rows() <= budget):
         return F.broadcast

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..core.session import broadcast_gate
 from .dedup import shingles_from_tokens
 from .text import ngram_list, tokens
 
@@ -59,9 +60,11 @@ def contamination_report(
     Returns one row per train document:
       (doc_id, n_ngrams, n_overlap, n_eval_docs, contaminated)
 
-    Scale shape: eval n-grams are broadcast (benchmarks are small by
-    construction); the only wide shuffle is the per-doc groupBy, keyed
-    by doc_id — no skew (each doc contributes its own distinct grams).
+    Scale shape: eval n-grams broadcast through ``broadcast_gate``
+    (benchmarks are small by construction, while an eval slice of a
+    corpus table is sized at the whole table); the only wide shuffle is
+    the per-doc groupBy, keyed by doc_id — no skew (each doc contributes
+    its own distinct grams).
 
     Measured negative result (r13, kept for the record): replacing the
     totals leg's second gram pass with a map-side
@@ -80,7 +83,7 @@ def contamination_report(
         .distinct()
     )
     hits = (
-        train_g.join(F.broadcast(eval_g), "ngram")
+        train_g.join(broadcast_gate(train.sparkSession)(eval_g), "ngram")
         .groupBy(id_col)
         .agg(
             F.countDistinct("ngram").alias("n_overlap"),
@@ -265,7 +268,7 @@ def unigram_logprob_score(
     )
     vocab = toks.groupBy("w").agg(F.count("*").alias("c"))
     total = vocab.agg(F.sum("c").alias("t"))
-    scored = toks.join(vocab, "w").crossJoin(F.broadcast(total)).select(
+    scored = toks.join(vocab, "w").crossJoin(total).select(
         id_col,
         F.round(
             -F.log2(F.col("c").cast("double") / F.col("t").cast("double")), 6
@@ -332,7 +335,7 @@ def bigram_logprob_score(
     )
     scored = (
         grams.join(model, "g")
-        .crossJoin(F.broadcast(vocab_size))
+        .crossJoin(vocab_size)
         .select(
             id_col,
             F.round(
@@ -539,9 +542,11 @@ def dsir_importance(
     its n-grams. Resampling = keep the top-k / sample proportional to
     exp(score) downstream.
 
-    Shapes: two bucket-level groupBys (B=4096 rows each — broadcast
-    back), one explode-join per doc n-gram, one per-doc fold. No
-    all-pairs anything; the bucket table is tiny by construction.
+    Shapes: two bucket-level groupBys (B=4096 rows each; the weights
+    broadcast back through ``broadcast_gate``, as Catalyst sizes the
+    aggregate at the exploded grams), one explode-join per doc n-gram,
+    one per-doc fold. No all-pairs anything; the bucket table is tiny
+    by construction.
     Same DECIMAL-rounding determinism policy as the other scores.
     """
     grams = df.select(
@@ -562,7 +567,7 @@ def dsir_importance(
     totals = counts.agg(
         F.sum("t_b").alias("T"), F.sum("s_b").alias("S")
     )
-    weights = counts.crossJoin(F.broadcast(totals)).select(
+    weights = counts.crossJoin(totals).select(
         "b",
         F.round(
             F.log2((F.col("t_b") + 1).cast("double") / (F.col("T") + n_buckets).cast("double"))
@@ -573,7 +578,7 @@ def dsir_importance(
         .alias("w_b"),
     )
     return (
-        grams.join(F.broadcast(weights), "b")
+        grams.join(broadcast_gate(df.sparkSession)(weights), "b")
         .groupBy(id_col)
         .agg(
             F.count("*").cast("bigint").alias("n_grams"),
@@ -713,9 +718,10 @@ def bloom_bitmap(
     ``m_bits`` bits packed into ``m_bits/64`` longs, ``k`` xxhash64
     probes per gram. Built with one explode + one bit_or groupBy; the
     result is a table, never a driver-side object, so the filter can be
-    arbitrarily large and still broadcast-join like any small dim
-    (2^30 bits = 16M rows ~ 128 MB: exactly Spark's broadcast sweet
-    spot for a fleet-wide membership gate)."""
+    arbitrarily large and still broadcast through ``broadcast_gate``
+    (m_bits/64 rows by construction, while Catalyst sizes the grouped
+    aggregate at its gram input; 2^30 bits = 16M rows ~ 128 MB:
+    Spark's broadcast sweet spot for a fleet-wide membership gate)."""
     pos = grams.select(
         F.explode(
             F.array(
@@ -781,7 +787,7 @@ def contamination_bloom(
         F.expr("shiftleft(CAST(1 AS BIGINT), CAST(p % 64 AS INT))").alias("mask"),
     )
     hit = (
-        probes.join(F.broadcast(bloom), "word_idx", "left")
+        probes.join(broadcast_gate(train.sparkSession)(bloom), "word_idx", "left")
         .select(
             id_col,
             "ngram",

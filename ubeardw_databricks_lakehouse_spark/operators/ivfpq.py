@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..core.session import checkpoint
+from ..core.session import broadcast_gate, checkpoint
 from .pq import _assign, _l2sq, _subvectors, pq_train
 from .similarity import _centroids_fast, assign_cells
 
@@ -49,8 +49,9 @@ def _residuals(
     assigned: DataFrame, cents: DataFrame, id_col: str, vec_col: str
 ) -> DataFrame:
     """(id, cell, rv): vector minus its cell's centroid (map-only;
-    centroid table broadcast)."""
-    return assigned.join(F.broadcast(cents), "cell").select(
+    the K-row centroid checkpoint broadcast through ``broadcast_gate``)."""
+    brd = broadcast_gate(assigned.sparkSession)
+    return assigned.join(brd(cents), "cell").select(
         F.col(id_col),
         F.col("cell"),
         F.zip_with(
@@ -81,19 +82,18 @@ def ivfpq_build(
     search is what amortizes the bench-visible index cost to zero
     per-query at scale.
 
-    Lifetimes: the O(N) residual table is a call-private ``checkpoint``
-    that the returned lazy ``codes`` still reads — materialize
-    ``codes`` (persist / checkpoint / write) inside the caller's
-    ``checkpoint_scope``, which then frees the residuals. ``cents`` and
-    the codebook are plain ``localCheckpoint``s because they ARE the
-    index (every search broadcasts them); release them when the index
-    itself is retired (``plans.llm_q.invalidate_ivfpq_index`` is the
-    reference caller)."""
+    Lifetimes: ``cents``, the codebook and the O(N) residual table are
+    ``checkpoint``s that belong to the caller's ``checkpoint_scope``,
+    and the returned lazy ``codes`` still reads all three — consume
+    the index (search it, or materialize ``codes``) inside that scope,
+    which then frees it. An owner that keeps the index past its build
+    re-pins the three frames with plain ``localCheckpoint``s inside
+    the build scope and releases them when the index is retired
+    (``plans.llm_q._ivfpq_index`` / ``invalidate_ivfpq_index`` is the
+    reference owner)."""
     dsub = dim // m
     assert dsub * m == dim, "dim must be divisible by m"
-    cents = _centroids_fast(corpus, vec_col, cell_col, dim).localCheckpoint(
-        eager=True
-    )
+    cents = checkpoint(_centroids_fast(corpus, vec_col, cell_col, dim))
     corpus_cells = assign_cells(corpus, cents, id_col, vec_col, 1)
     # resid is a DERIVED pipeline (N×K assignment scoring + window +
     # centroid join) consumed by pq_train (which re-traverses its input
@@ -163,13 +163,14 @@ def ivfpq_search(
             for s in range(m)
         ]
     )
-    # the codebook is m×ksub rows BY CONSTRUCTION (128 at the defaults)
-    # but reaches here as a stats-less checkpoint projection, so the
-    # planner sort-merged this join — the one SMJ left in the r13 plan:
-    # broadcast it explicitly (guide §3.1)
-    lut = F.broadcast(
+    # the codebook (m×ksub rows) and the LUT (|Q|·nprobe·m·ksub rows)
+    # are small BY CONSTRUCTION but stats-less checkpoint projections,
+    # so the planner would sort-merge both joins — broadcast them
+    # through the session's gate (guide §3.1)
+    brd = broadcast_gate(queries.sparkSession)
+    lut = brd(
         qres.select("query_id", "cell", F.inline(entries))
-        .join(F.broadcast(codebook), "sub_id")
+        .join(brd(codebook), "sub_id")
         .select(
             "query_id",
             "cell",

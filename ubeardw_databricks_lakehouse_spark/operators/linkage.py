@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..core.session import broadcast_gate
+
 _LAST_TOKEN_RE = r"([^ ]+)$"
 
 # Corporate stop-suffixes — the canonical hot, non-discriminative last
@@ -184,8 +186,10 @@ def fuzzy_block_pairs(
         )
         join_keys = ["_blk", "_band"]
     else:
-        # cell census: tiny (|block vocab| x |length bands| rows), so
-        # the join back is a broadcast — no extra shuffle of names.
+        # cell census: tiny (|block vocab| x |length bands| rows, while
+        # Catalyst sizes the aggregate at the names), so the join back
+        # broadcasts through the gate — no extra shuffle of names.
+        brd = broadcast_gate(names.sparkSession)
         cells = keyed.groupBy("_blk", "_band").agg(
             F.ceil(F.count("*") / F.lit(block_cap)).cast("int").alias("_nsalt")
         )
@@ -210,7 +214,7 @@ def fuzzy_block_pairs(
                 "_nsalt",
                 F.when(F.col("_nsalt") > 1, F.lit(0)).otherwise(F.lit(1)),
             )
-        sized = keyed.join(F.broadcast(cells), ["_blk", "_band"]).filter(
+        sized = keyed.join(brd(cells), ["_blk", "_band"]).filter(
             F.col("_nsalt") > 0
         )
         # anchor side: salt under its OWN cell's modulus
@@ -232,7 +236,7 @@ def fuzzy_block_pairs(
                 )
             ).alias("_band"),
         )
-        b = probe.join(F.broadcast(cells), ["_blk", "_band"]).filter(
+        b = probe.join(brd(cells), ["_blk", "_band"]).filter(
             F.col("_nsalt") > 0
         ).select(
             "name_b",

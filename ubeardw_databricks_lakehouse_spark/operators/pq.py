@@ -21,7 +21,7 @@ Spark shapes (all reused from the IVF machinery):
   keyed by the composite (sub_id, cell) — O(batches × m × ksub) rows
   shuffled per Lloyd round regardless of corpus size;
 - the driver loop is bounded by ``n_iter`` (connected-components
-  precedent); lineage is truncated per round by the localCheckpoint
+  precedent); lineage is truncated per round by the checkpoint
   inside the loop.
 
 Float k-means is not oracle-hashable (order-sensitive last bits) —
@@ -35,6 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..core.session import broadcast_gate, checkpoint, release_local_checkpoint
 
 
 def _l2sq(a: Column, b: Column) -> Column:
@@ -72,7 +74,9 @@ def _assign(
     sub: DataFrame, cents: DataFrame, id_col: str, carry: tuple[str, ...] = ()
 ) -> DataFrame:
     """Nearest codebook entry per (id, sub_id): broadcast-scored join +
-    groupBy-min with deterministic tie-break on cell id.
+    groupBy-min with deterministic tie-break on cell id. The codebook
+    is m × ksub rows by construction but a stats-less checkpoint, so
+    the broadcast goes through ``broadcast_gate``.
 
     ``carry`` names columns of ``sub`` that are CONSTANT within an
     (id, sub_id) group (the subvector itself, a per-id cell label);
@@ -82,7 +86,7 @@ def _assign(
     sorted both sides just to recover a column the group already had;
     measured as the 2 SortMergeJoin residue in the r13 ivfpq plan).
     """
-    scored = sub.join(F.broadcast(cents), "sub_id").select(
+    scored = sub.join(broadcast_gate(sub.sparkSession)(cents), "sub_id").select(
         id_col,
         "sub_id",
         F.struct(
@@ -131,9 +135,10 @@ def pq_train(
     df is a table, wrong when it is a derived pipeline; materialize
     such inputs first. Centroids (the small frame) are checkpointed
     every round here, and each round's checkpoint releases the
-    previous round's blocks (ADVICE r13 lifecycle rule).
+    previous round's blocks (ADVICE r13 lifecycle rule). The returned
+    codebook is a ``checkpoint``: it belongs to the caller's
+    ``checkpoint_scope``, so a long-lived owner re-pins it.
     """
-    from ..core.session import release_local_checkpoint
     from .kmeans import hash_seed_ranks, seed_override_ranks
     from .similarity import _centroids_fast
 
@@ -147,9 +152,7 @@ def pq_train(
         else hash_seed_ranks(df, id_col, ksub)
     )
     seeds = sub.join(ranked, id_col).select("sub_id", "cell", "sv")
-    cents = seeds.select(
-        "sub_id", "cell", F.col("sv").alias("cvec")
-    ).localCheckpoint(eager=True)
+    cents = checkpoint(seeds.select("sub_id", "cell", F.col("sv").alias("cvec")))
 
     for _ in range(max(0, n_iter)):
         # the subvector rides through the argmin agg (constant per
@@ -163,11 +166,11 @@ def pq_train(
         )
         folded = _centroids_fast(rows, "sv", "_ck", dsub)
         prev_cents = cents
-        cents = folded.select(
+        cents = checkpoint(folded.select(
             (F.col("cell") / ksub).cast("long").alias("sub_id"),
             F.pmod(F.col("cell"), F.lit(ksub)).alias("cell"),
             F.col("cvec"),
-        ).localCheckpoint(eager=True)
+        ))
         # the superseded round's (m × ksub)-row centroid checkpoint is
         # dead once the new one is materialized — free its blocks now
         # instead of accreting one per round per build (ADVICE r13)

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..core.session import checkpoint
+from ..core.session import broadcast_gate, checkpoint
 
 
 def with_global_row_number(
@@ -96,7 +96,7 @@ def with_global_row_number(
         return (out, 0) if with_total else out
     off_df = spark.createDataFrame(offsets, "_pid int, _off long")
     out = (
-        local.join(F.broadcast(off_df), "_pid")
+        local.join(broadcast_gate(spark)(off_df), "_pid")
         .withColumn(out_col, F.col(out_col) + F.col("_off"))
         .drop("_pid", "_off")
     )
@@ -221,7 +221,7 @@ def global_running_sum(
         return (out, 0) if with_total else out
     off_df = spark.createDataFrame(offsets, "_pid int, _off long")
     out = (
-        local.join(F.broadcast(off_df), "_pid")
+        local.join(broadcast_gate(spark)(off_df), "_pid")
         .withColumn(out_col, F.col(out_col) + F.col("_off"))
         .drop("_pid", "_off")
     )

@@ -19,7 +19,8 @@ Scale shape (the part that matters at 100 TB):
 - document lengths come from a map-only `token_count` column — no
   explode, no shuffle;
 - df/idf and avgdl are tiny aggregates (|Q| rows and 1 row) joined
-  back by broadcast — the corpus is never re-shuffled for them;
+  back by broadcast (avgdl sized by the planner, idf through
+  `broadcast_gate`) — the corpus is never re-shuffled for them;
 - final score is one groupBy(doc) over the filtered tf rows, then a
   global top-k that compiles to TakeOrderedAndProject.
 
@@ -37,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..core.session import checkpoint
+from ..core.session import broadcast_gate, checkpoint
 from .text import token_count, tokens
 
 K1 = 1.2
@@ -192,14 +193,14 @@ def bm25_topk(
         # (tf_index=) never reach here: their hits frame reads the
         # materialized index, no corpus pass to save.
         tf = checkpoint(tf)
-    # N docs and avg length — two scalar aggregates, broadcast back.
-    stats = F.broadcast(
-        dl.agg(
-            F.count("*").cast("double").alias("n_docs"),
-            F.avg("dl").alias("avgdl"),
-        )
+    # N docs and avg length — two scalar aggregates the planner sizes
+    # at one row and broadcasts. idf has |query terms| rows but is sized
+    # at the tf rows it aggregates, so it goes through the gate.
+    stats = dl.agg(
+        F.count("*").cast("double").alias("n_docs"),
+        F.avg("dl").alias("avgdl"),
     )
-    idf = F.broadcast(
+    idf = (
         tf.groupBy("term")
         .agg(F.count("*").cast("double").alias("df"))
         .crossJoin(stats)
@@ -213,7 +214,7 @@ def bm25_topk(
     )
 
     contrib = (
-        tf.join(idf, "term")
+        tf.join(broadcast_gate(tf.sparkSession)(idf), "term")
         .join(dl, id_col)
         .crossJoin(stats)
         .select(

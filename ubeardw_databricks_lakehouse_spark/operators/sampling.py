@@ -20,6 +20,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..core.session import broadcast_gate
+
 #: bucket granularity — rates land on 1/10000 boundaries
 N_BUCKETS = 10_000
 
@@ -140,7 +142,7 @@ def sqrt_mixing_thresholds(
         / (F.col("_w_total") * F.col("n_rows")),
     )
     return (
-        weighted.join(F.broadcast(totals))
+        weighted.join(totals)
         .select(
             strata_col,
             "n_rows",
@@ -157,8 +159,10 @@ def sqrt_mixing_sample(
     seed: str = "",
     thresholds: DataFrame | None = None,
 ) -> DataFrame:
-    """Apply sqrt-temperature mixing: per-stratum thresholds broadcast
-    back onto the corpus; the keep decision stays a codegen'd filter.
+    """Apply sqrt-temperature mixing: the per-stratum thresholds
+    (|strata| rows, an aggregate Catalyst sizes at the corpus) broadcast
+    back onto the corpus through ``broadcast_gate``; the keep decision
+    stays a codegen'd filter.
 
     Pass a precomputed ``thresholds`` table (from
     ``sqrt_mixing_thresholds``, ideally checkpointed/materialized) when
@@ -167,9 +171,9 @@ def sqrt_mixing_sample(
     (the amortization pattern shared with bm25_topk/ivfpq/cosupply)."""
     if thresholds is None:
         thresholds = sqrt_mixing_thresholds(df, strata_col, target_frac)
+    brd = broadcast_gate(df.sparkSession)
     return (
-        df.join(F.broadcast(thresholds.select(strata_col, "bucket_thresh")),
-                strata_col)
+        df.join(brd(thresholds.select(strata_col, "bucket_thresh")), strata_col)
         .filter(hash_bucket(key, seed) < F.col("bucket_thresh"))
         .drop("bucket_thresh")
     )

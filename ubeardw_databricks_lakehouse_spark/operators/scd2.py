@@ -102,12 +102,13 @@ def apply_scd2(
         return 0
 
     # Expire the previous current versions of the changed keys. The changed
-    # key set is small → broadcast to the dim scan, no shuffle.
+    # key set derives from the cached change set, whose size the planner
+    # sees, so it broadcasts to the dim scan under the session threshold.
     changed_keys = changes.select(*business_keys).distinct()
     expired = (
         lake.read(table)
         .filter(F.col("is_current"))
-        .join(F.broadcast(changed_keys), on=business_keys, how="left_semi")
+        .join(changed_keys, on=business_keys, how="left_semi")
         .withColumn("is_current", F.lit(False))
         .withColumn("effective_end_date", effective_ts)
     )

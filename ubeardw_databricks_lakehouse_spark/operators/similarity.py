@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..core.session import checkpoint
+from ..core.session import broadcast_gate, checkpoint
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -212,7 +212,7 @@ def topk_lsh(
         hyperplane_signature(F.col(vec_col), dim, n_planes).alias(f"{name}_sig"),
     )
     c = sig(corpus, "neighbor_id")
-    q = F.broadcast(sig(queries, "query_id"))
+    q = broadcast_gate(queries.sparkSession)(sig(queries, "query_id"))
     scored = (
         c.join(
             q,
@@ -315,11 +315,13 @@ def assign_cells(
 ) -> DataFrame:
     """Nearest-``nprobe`` centroid cells per vector (broadcast N x K).
 
-    The centroid table is tiny (K rows), so this is a broadcast
-    nested-loop scored join — the standard IVF assignment cost N*K with
-    zero shuffle of the corpus. Ties break on cell id.
+    The centroid table is tiny (K rows) but a checkpoint or an
+    aggregate Catalyst cannot size, so it broadcasts through
+    ``broadcast_gate`` into a nested-loop scored join — the standard
+    IVF assignment cost N*K with zero shuffle of the corpus. Ties break
+    on cell id.
     """
-    c = F.broadcast(centroids)
+    c = broadcast_gate(df.sparkSession)(centroids)
     scored = df.select(F.col(id_col), F.col(vec_col)).join(c).select(
         id_col,
         vec_col,
@@ -389,14 +391,16 @@ def ivf_search(
     Split out of ``topk_ivf`` (which trains + assigns + searches in
     one shot) so a continuously-ingesting corpus pays only the query
     legs per search: probe assignment is broadcast K-row work, the
-    corpus side is scanned via the cell equi-join, never re-assigned.
+    probe cells (|Q|·nprobe rows, sized by the query batch) broadcast
+    through ``broadcast_gate`` into the cell equi-join, and the corpus
+    side is scanned there, never re-assigned.
     """
     corpus_side = corpus_cells.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("nv"),
         "cell",
     )
-    query_cells = F.broadcast(
+    query_cells = broadcast_gate(queries.sparkSession)(
         assign_cells(queries, cents, id_col, vec_col, nprobe).select(
             F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"), "cell"
         )
@@ -428,7 +432,7 @@ def ivf_distortion(
     None for an empty frame. Store the build-time value and hand it to
     ``ivf_upsert`` as the drift baseline."""
     row = (
-        assigned.join(F.broadcast(cents), "cell")
+        assigned.join(broadcast_gate(assigned.sparkSession)(cents), "cell")
         .agg(
             F.avg(
                 F.lit(1.0) - cosine(F.col(vec_col), F.col("cvec"))
@@ -587,7 +591,7 @@ def assign_cells_lsh(
     as every LSH tier here; pytest pins the agreement rate on
     clustered data.
     """
-    cent_sig = F.broadcast(
+    cent_sig = broadcast_gate(df.sparkSession)(
         centroids.select(
             "cell",
             "cvec",
@@ -653,18 +657,18 @@ def hard_negatives(
     label (the near-misses a contrastive loss learns the most from;
     cf. SimCLR/DPR hard-negative sampling).
 
-    Scale shape: the query set broadcasts (it is the per-batch anchor
-    sample, small by construction); scoring is one map-only pass over
+    Scale shape: the query set broadcasts through ``broadcast_gate``
+    (it is the per-batch anchor sample, small by construction, but a
+    filter Catalyst sizes as its whole input, and the join has no
+    equi key to shuffle on); scoring is one map-only pass over
     the corpus with the label-mismatch filter applied BEFORE the
     ranking window, which partitions by query — never a global sort.
     """
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            F.col(label_col).alias("qlab"),
-        )
-    )
+    q = broadcast_gate(queries.sparkSession)(queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("qv"),
+        F.col(label_col).alias("qlab"),
+    ))
     scored = (
         corpus.select(
             F.col(id_col).alias("neighbor_id"),

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..core.session import broadcast_gate
+
 
 def approx_profile(
     df: DataFrame,
@@ -167,7 +169,8 @@ def cms_estimate(
 ) -> DataFrame:
     """Point-query the sketch for each candidate key: the estimate is
     the MIN over the key's D cells (missing cell -> 0). The cell table
-    is D*W rows — broadcast by construction."""
+    is D*W rows by construction, so it broadcasts through
+    ``broadcast_gate`` (Catalyst sizes it at the sketched stream)."""
     probes = candidates.select(
         key_col,
         F.posexplode(
@@ -176,7 +179,7 @@ def cms_estimate(
             )
         ).alias("row", "bucket"),
     )
-    joined = probes.join(F.broadcast(cells), ["row", "bucket"], "left")
+    joined = probes.join(broadcast_gate(cells.sparkSession)(cells), ["row", "bucket"], "left")
     return probes.select(key_col).distinct().join(
         joined.groupBy(key_col).agg(
             F.min(F.coalesce(F.col("cnt"), F.lit(0)))

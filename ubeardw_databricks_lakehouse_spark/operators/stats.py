@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..core.session import checkpoint
+from ..core.session import broadcast_gate, checkpoint
 
 
 def winsorize_summary(
@@ -34,9 +34,11 @@ def winsorize_summary(
     Scale shape: ``percentile`` is a partial-aggregate sketch-free
     exact implementation — ONE groupBy pass builds the boundaries
     (per-group value buffers; groups are the parallelism unit), the
-    boundary table (|groups| rows) broadcasts back, and the clip +
-    summary is a second map-side-combined groupBy. The value stream is
-    never globally sorted.
+    boundary table (|groups| rows) broadcasts back through
+    ``broadcast_gate`` (the aggregate's estimate is the value stream's
+    size, so the planner alone would broadcast the stream instead), and
+    the clip + summary is a second map-side-combined groupBy. The value
+    stream is never globally sorted.
     """
     bounds = df.groupBy(group_col).agg(
         F.expr(f"percentile({value_col}, {lower})").alias("p_lo"),
@@ -45,7 +47,7 @@ def winsorize_summary(
     v = F.col(value_col)
     clipped = F.least(F.greatest(v, F.col("p_lo")), F.col("p_hi"))
     return (
-        df.join(F.broadcast(bounds), group_col)
+        df.join(broadcast_gate(df.sparkSession)(bounds), group_col)
         .groupBy(group_col)
         .agg(
             F.count("*").cast("bigint").alias("n"),
@@ -87,12 +89,15 @@ def mad_outlier_summary(
 
     Scale shape: two groupBy passes (median, then MAD over deviations),
     each a partial-aggregated exact percentile per group with the group
-    as the parallelism unit; both boundary tables broadcast back
-    (|groups| rows). The value stream is never globally sorted. At
+    as the parallelism unit; both boundary tables (|groups| rows)
+    broadcast back through ``broadcast_gate`` — one is a checkpoint,
+    the other an aggregate over a join, so Catalyst cannot size either.
+    The value stream is never globally sorted. At
     extreme group cardinality swap approx_percentile into the SAME
     frame — the agg expression is the knob, as in q_column_profile.
     """
     v = F.col(value_col)
+    brd = broadcast_gate(df.sparkSession)
     # checkpoint med (|groups| rows): it is re-joined by BOTH the MAD
     # pass and the final pass — without it each downstream branch
     # recomputes the median scan (ReuseExchange does not fire across
@@ -100,14 +105,14 @@ def mad_outlier_summary(
     med = df.groupBy(group_col).agg(
         F.expr(f"percentile({value_col}, 0.5)").alias("med")
     ).transform(checkpoint)
-    dev = df.join(F.broadcast(med), group_col).withColumn(
+    dev = df.join(brd(med), group_col).withColumn(
         "_dev", F.abs(v - F.col("med"))
     )
     mad = dev.groupBy(group_col).agg(
         F.expr("percentile(_dev, 0.5)").alias("mad")
     )
     return (
-        dev.join(F.broadcast(mad), group_col)
+        dev.join(brd(mad), group_col)
         .groupBy(group_col)
         .agg(
             F.count("*").cast("bigint").alias("n"),

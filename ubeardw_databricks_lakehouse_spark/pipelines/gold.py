@@ -19,7 +19,7 @@ builders over a Lakehouse. Functional parity notes:
   upsert guarded on ``source.updated_at > target.updated_at``.
 
 Scale notes: metric aggregations are single-shuffle partial aggs on the
-entity key; dim joins broadcast (dims << fact); trip_fact is
+entity key; dim joins broadcast by size (dims << fact); trip_fact is
 partitioned by (date_partition, region_partition) exactly like the
 reference so partition pruning serves the dashboard queries.
 """
@@ -436,17 +436,20 @@ def build_trip_fact(
 ) -> DataFrame:
     """Event log -> one row per trip (ref :637-771).
 
-    The location joins broadcast dim_location (small); the pivot is one
-    hash aggregation on trip_id.
+    The entity and location joins broadcast when the planner's
+    statistics put the dim side under the session's broadcast threshold
+    (dims << fact; no hint, so a session with broadcasts disabled
+    shuffles them instead); the pivot is one hash aggregation on
+    trip_id.
     """
-    pickup_dim = F.broadcast(
+    pickup_dim = (
         dim_location.filter(F.col("location_type") == "pickup").select(
             F.col("location_id").alias("pickup_location_id"),
             F.col("address_line_1").alias("pickup_addr"),
             F.col("city").alias("pickup_city"),
         )
     )
-    dropoff_dim = F.broadcast(
+    dropoff_dim = (
         dim_location.filter(F.col("location_type") == "dropoff").select(
             F.col("location_id").alias("dropoff_location_id"),
             F.col("address_line_1").alias("dropoff_addr"),
@@ -456,9 +459,7 @@ def build_trip_fact(
     )
     with_pickup = (
         trip_events_silver.join(
-            F.broadcast(
-                merchant_silver.select("merchant_id", "address_line_1", "city")
-            ),
+            merchant_silver.select("merchant_id", "address_line_1", "city"),
             "merchant_id",
             "left",
         )
@@ -472,7 +473,7 @@ def build_trip_fact(
     )
     with_locations = (
         with_pickup.join(
-            F.broadcast(eater_silver.select("eater_id", "address_line_1", "city")),
+            eater_silver.select("eater_id", "address_line_1", "city"),
             "eater_id",
             "left",
         )

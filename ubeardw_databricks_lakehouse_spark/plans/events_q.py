@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..core.session import checkpoint
+from ..core.session import broadcast_gate, checkpoint
 from ..operators.event_pivot import event_pivot
 from .common import dsum, ensure_read_confs, event_ts_expr, t
 
@@ -1188,7 +1188,8 @@ ORDER BY prev_type, next_type
 # edge semantics.
 #
 # Scale: two scans of events (one agg, one bucketize) and a broadcast
-# join on the tiny bounds table; the groupBy output is |types| x 10.
+# join on the tiny bounds table, through ``broadcast_gate`` (the agg's
+# estimate is the events scan's size); the groupBy output is |types| x 10.
 #
 # Degenerate distributions: a type whose values are all identical
 # (mx == mn) has no width to bucket and is DROPPED from the profile —
@@ -1212,7 +1213,7 @@ def q_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(9),
     )
     return (
-        ev.join(F.broadcast(bounds), "event_type")
+        ev.join(broadcast_gate(spark)(bounds), "event_type")
         .filter(F.col("mx") > F.col("mn"))
         .select("event_type", bucket.alias("bucket"))
         .groupBy("event_type", "bucket")
@@ -1308,7 +1309,9 @@ ORDER BY user_id, day
 #
 # Scale: user-distinct pairs via one self-join on user_id — per-user
 # cost is |types-per-user|², bounded by the type vocabulary (not the
-# event count); the per-type counts and the user total broadcast back.
+# event count); the per-type counts broadcast back through
+# ``broadcast_gate`` (one row per type, sized at the pair set), the
+# 1-row user total by the planner.
 # ---------------------------------------------------------------------------
 
 
@@ -1328,6 +1331,7 @@ def q_event_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_type = ut.groupBy("event_type").agg(
         F.count("*").cast("bigint").alias("n_type")
     )
+    brd = broadcast_gate(spark)
     a = ut.select("user_id", F.col("event_type").alias("type_a"))
     b = ut.select("user_id", F.col("event_type").alias("type_b"))
     pairs = (
@@ -1338,20 +1342,20 @@ def q_event_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = (
         pairs.join(
-            F.broadcast(per_type.select(
+            brd(per_type).select(
                 F.col("event_type").alias("type_a"),
                 F.col("n_type").alias("n_a"),
-            )),
+            ),
             "type_a",
         )
         .join(
-            F.broadcast(per_type.select(
+            brd(per_type).select(
                 F.col("event_type").alias("type_b"),
                 F.col("n_type").alias("n_b"),
-            )),
+            ),
             "type_b",
         )
-        .crossJoin(F.broadcast(n_users))
+        .crossJoin(n_users)
     )
     return out.select(
         "type_a",
@@ -1859,8 +1863,9 @@ ORDER BY event_type
 # origin, so neither is used).
 #
 # Scale: one groupBy to |event_type x dates| rows (map-side partial
-# over the raw scan), one to |type x 7|, and a broadcast-sized
-# per-type totals join. Nothing row-scale survives the first partial
+# over the raw scan), one to |type x 7|, and a per-type totals join
+# broadcast through ``broadcast_gate`` (one row per type, sized at the
+# scan). Nothing row-scale survives the first partial
 # aggregation.
 # ---------------------------------------------------------------------------
 
@@ -1884,7 +1889,7 @@ def q_seasonal_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        by_dow.join(F.broadcast(per_type), "event_type")
+        by_dow.join(broadcast_gate(spark)(per_type), "event_type")
         .select(
             "event_type",
             "dow",

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..core.session import checkpoint, checkpoint_scope, release_local_checkpoint
+from ..core.session import broadcast_gate, checkpoint, checkpoint_scope, release_local_checkpoint
 from ..operators.dedup import (
     embedding_neardup_pairs,
     exact_dedup_groups,
@@ -614,12 +614,13 @@ def q_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once, deterministically (the r8 discipline).
     sel = checkpoint(winnow_selections(docs, k=20, w=8))
     # anti-join against the FREQUENT set: stop-grams are few (like
-    # stop-words), so that side broadcasts; broadcasting the rare side
-    # would ship nearly the whole hash universe
+    # stop-words), so that side broadcasts through ``broadcast_gate``
+    # (Catalyst sizes the aggregate at the whole selection table);
+    # broadcasting the rare side would ship nearly the whole hash universe
     frequent = (
         sel.groupBy("h").agg(F.count("*").alias("_df")).where(F.col("_df") > 20)
     )
-    sel = sel.join(F.broadcast(frequent.select("h")), "h", "left_anti")
+    sel = sel.join(broadcast_gate(spark)(frequent.select("h")), "h", "left_anti")
     a = sel.select(F.col("doc_id").alias("id_a"), "h")
     b = sel.select(F.col("doc_id").alias("id_b"), F.col("h").alias("hb"))
     return (
@@ -1867,13 +1868,9 @@ def invalidate_ivfpq_index(spark: SparkSession, sf_dir: str | None = None) -> No
     for key in [k for k in _IVFPQ_INDEX_CACHE if k[0] == app]:
         if sf_dir is not None and key[1] != sf_dir:
             continue
-        cents, codebook, codes = _IVFPQ_INDEX_CACHE.pop(key)
         try:
-            release_local_checkpoint(codes)
-            release_local_checkpoint(cents)
-            # codebook is a rename projection over pq_train's final
-            # checkpoint — single-leaf, owned exclusively by the index
-            release_local_checkpoint(codebook, allow_projection=True)
+            for df in _IVFPQ_INDEX_CACHE.pop(key):
+                release_local_checkpoint(df)
         except Exception:
             pass  # app shutting down — blocks die with it anyway
 
@@ -1884,15 +1881,13 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str):
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _IVFPQ_INDEX_CACHE:
         emb = t(spark, sf_dir, "embeddings")
-        # the build's own scope: its residual checkpoint dies once codes
-        # is materialized; the index frames are plain checkpoints that
+        # the build's own scope frees its checkpoints on exit; the index
+        # frames are re-pinned as plain checkpoints inside it, so they
         # outlive it (and any caller's scope) until invalidation
         with checkpoint_scope():
-            cents, codebook, codes = ivfpq_build(emb, m=8, ksub=16, n_iter=1)
-            _IVFPQ_INDEX_CACHE[key] = (
-                cents,
-                codebook,
-                codes.localCheckpoint(eager=True),
+            _IVFPQ_INDEX_CACHE[key] = tuple(
+                df.localCheckpoint(eager=True)
+                for df in ivfpq_build(emb, m=8, ksub=16, n_iter=1)
             )
     return _IVFPQ_INDEX_CACHE[key]
 
@@ -2234,7 +2229,8 @@ WHERE rank <= 5
 # rate is one division of exact counts (bit-identical cross-engine).
 #
 # Scale: vocab is a distinct over the reference slice (broadcastable
-# for real tokenizer vocabs — 32-256k entries); the join is
+# for real tokenizer vocabs — 32-256k entries — so it goes through
+# ``broadcast_gate``: Catalyst sizes it at the token stream); the join is
 # token-level but map-side with the broadcast, and the per-source agg
 # is map-combinable. No driver-side state.
 # ---------------------------------------------------------------------------
@@ -2259,7 +2255,7 @@ def q_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("_in_vocab", F.lit(1))
     )
     return (
-        tok.join(F.broadcast(vocab), "tk", "left")
+        tok.join(broadcast_gate(spark)(vocab), "tk", "left")
         .groupBy("source")
         .agg(
             F.count("*").cast("bigint").alias("n_tokens"),
@@ -2344,8 +2340,8 @@ def q_chisq_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ct = cells.groupBy("bucket").agg(F.sum("o").alias("col_total"))
     n = cells.agg(F.sum("o").alias("n_total"))
     grid = (
-        rt.crossJoin(F.broadcast(ct))
-        .crossJoin(F.broadcast(n))
+        rt.crossJoin(broadcast_gate(spark)(ct))
+        .crossJoin(n)
         .join(cells, ["source", "bucket"], "left")
         .withColumn("o", F.coalesce(F.col("o"), F.lit(0)))
     )
@@ -2546,7 +2542,7 @@ def q_ranksum_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     sv = docs.groupBy("source", "n_chars").agg(
         F.count("*").cast("bigint").alias("cnt_sv")
     )
-    joined = sv.join(F.broadcast(ranks), "n_chars")
+    joined = sv.join(broadcast_gate(spark)(ranks), "n_chars")
     tot = vc.agg(
         F.sum("cnt").cast("bigint").alias("n"),
         F.sum(
@@ -2572,7 +2568,7 @@ def q_ranksum_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     z = (u - n1 * n2 / F.lit(2.0)) / F.sqrt(var)
     return (
-        per_src.crossJoin(F.broadcast(tot))
+        per_src.crossJoin(tot)
         .select(
             "source",
             "n1",

@@ -6,7 +6,10 @@ query (P=projection/filter, J=join, A=aggregation, W=window, SO=set op,
 F=scalar function — SURVEY.md §2 numbering).
 
 Scale design notes live on each query: which side broadcasts, where the
-single shuffle is, what AQE is expected to do.
+single shuffle is, what AQE is expected to do. A side broadcasts when
+the planner's statistics put it under the session's broadcast
+threshold; only a side whose estimate Catalyst inflates goes through
+``core.session.broadcast_gate``.
 """
 
 from __future__ import annotations
@@ -17,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..core.session import checkpoint
+from ..core.session import broadcast_gate, checkpoint
 from .common import davg, dsum, sql_davg, sql_dsum, t
 
 # ---------------------------------------------------------------------------
@@ -85,7 +88,7 @@ def q03_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(F.sum(revenue).cast("double").alias("revenue"))
     )
@@ -115,8 +118,8 @@ WHERE rn <= 10
 """
 
 # ---------------------------------------------------------------------------
-# q05 local supplier volume (J2 multi-way): 6-table join; region/nation
-# broadcast; the c_nationkey = s_nationkey co-location condition makes the
+# q05 local supplier volume (J2 multi-way): 6-table join; the dims
+# broadcast by size (module docstring); the c_nationkey = s_nationkey co-location condition makes the
 # big join equi on two keys.
 # ---------------------------------------------------------------------------
 
@@ -135,14 +138,14 @@ def q05_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
+        .join(supp, li.l_suppkey == supp.s_suppkey)
         .join(
             cust,
             (orders.o_custkey == cust.c_custkey)
             & (cust.c_nationkey == supp.s_nationkey),
         )
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        .join(nation, cust.c_nationkey == nation.n_nationkey)
+        .join(region, nation.n_regionkey == region.r_regionkey)
         .groupBy("n_name")
         .agg(F.sum(revenue).cast("double").alias("revenue"))
     )
@@ -422,9 +425,9 @@ def q_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = t(spark, sf_dir, "customer")
     nation = t(spark, sf_dir, "nation")
     joined = orders.join(
-        F.broadcast(cust.select("c_custkey", "c_nationkey", "c_mktsegment")),
+        cust.select("c_custkey", "c_nationkey", "c_mktsegment"),
         orders.o_custkey == F.col("c_custkey"),
-    ).join(F.broadcast(nation), F.col("c_nationkey") == nation.n_nationkey)
+    ).join(nation, F.col("c_nationkey") == nation.n_nationkey)
     return joined.rollup("n_name", "c_mktsegment").agg(
         F.count("*").alias("n_orders"), dsum("o_totalprice", "revenue")
     )
@@ -530,7 +533,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = F.col("l_extendedprice").cast("decimal(12,2)") * (
         F.lit(1).cast("decimal(4,2)") - F.col("l_discount").cast("decimal(4,2)")
     )
-    joined = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+    joined = li.join(part, li.l_partkey == part.p_partkey)
     return joined.agg(
         (
             F.lit(100.0)
@@ -561,7 +564,8 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
 
 # ---------------------------------------------------------------------------
 # q10-style returned-item customers (J2, A1, W1): who returned the most
-# value. Fact-side filter pushes down; customer/nation broadcast.
+# value. Fact-side filter pushes down; customer/nation broadcast while
+# the planner sizes them under the threshold.
 # ---------------------------------------------------------------------------
 
 
@@ -575,8 +579,8 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
+        .join(nation, cust.c_nationkey == nation.n_nationkey)
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(F.sum(revenue).cast("double").alias("returned_revenue"),
              F.count("*").alias("n_returned_items"))
@@ -729,7 +733,7 @@ GROUP BY p_brand
 
 # ---------------------------------------------------------------------------
 # q07 nation volume (J2 multi-way, F9): revenue flow between two nations in
-# both directions. supplier/nation broadcast; the one wide shuffle is the
+# both directions. supplier/nation broadcast by size; the one wide shuffle is the
 # lineitem-orders join (both sides keyed on orderkey); the group-by keys are
 # tiny (2 nations x 2 years). Classic TPC-H Q7 on the driver's schema.
 # ---------------------------------------------------------------------------
@@ -758,9 +762,9 @@ def q07_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(n_s), supp.s_nationkey == n_s.s_nk)
-        .join(F.broadcast(n_c), cust.c_nationkey == n_c.c_nk)
+        .join(supp, li.l_suppkey == supp.s_suppkey)
+        .join(n_s, supp.s_nationkey == n_s.s_nk)
+        .join(n_c, cust.c_nationkey == n_c.c_nk)
         .filter(pair)
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
         .agg(F.sum(vol).cast("double").alias("revenue"))
@@ -791,6 +795,8 @@ GROUP BY ns.n_name, nc.n_name, EXTRACT(YEAR FROM l_shipdate)
 # q08 market share (A3 ratio-of-conditional-aggregates): NATION_3's share of
 # PROMO-part revenue delivered into EUROPE, by order year. Share is a
 # ratio of two exact decimal sums surfaced as doubles — the q14 discipline.
+# The EUROPE nation chain broadcasts through ``broadcast_gate`` (a join
+# chain's estimate multiplies its inputs, see q02).
 # ---------------------------------------------------------------------------
 
 
@@ -804,9 +810,9 @@ def q08_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     nat = t(spark, sf_dir, "nation")
     reg = t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     part = t(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
-    n_c = nat.join(
-        F.broadcast(reg), nat.n_regionkey == reg.r_regionkey
-    ).select(F.col("n_nationkey").alias("c_nk"))
+    n_c = nat.join(reg, nat.n_regionkey == reg.r_regionkey).select(
+        F.col("n_nationkey").alias("c_nk")
+    )
     n_s = nat.select(
         F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")
     )
@@ -814,12 +820,12 @@ def q08_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(1).cast("decimal(4,2)") - F.col("l_discount").cast("decimal(4,2)")
     )
     base = (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(n_c), cust.c_nationkey == F.col("c_nk"))
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(n_s), supp.s_nationkey == F.col("s_nk"))
+        .join(broadcast_gate(spark)(n_c), cust.c_nationkey == F.col("c_nk"))
+        .join(supp, li.l_suppkey == supp.s_suppkey)
+        .join(n_s, supp.s_nationkey == F.col("s_nk"))
     )
     return (
         base.groupBy(F.year("o_orderdate").alias("o_year"))
@@ -864,7 +870,7 @@ GROUP BY EXTRACT(YEAR FROM o_orderdate)
 # q09 product profit (adapted Q9 — no partsupp table, so unit cost is a
 # fixed 0.6 fraction of p_retailprice, kept exact in decimals): profit by
 # supplier nation x order year for '%red%' parts. LIKE filter prunes the
-# broadcast part side before the fact join.
+# part side (broadcast by size) before the fact join.
 # ---------------------------------------------------------------------------
 
 
@@ -883,10 +889,10 @@ def q09_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         * F.col("l_quantity").cast("decimal(4,1)")
     )
     return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(nat), supp.s_nationkey == nat.n_nationkey)
+        .join(supp, li.l_suppkey == supp.s_suppkey)
+        .join(nat, supp.s_nationkey == nat.n_nationkey)
         .groupBy(
             F.col("n_name").alias("nation"), F.year("o_orderdate").alias("o_year")
         )
@@ -962,8 +968,8 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     top = rev.agg(F.max("total_revenue").alias("_max_rev"))
     return (
-        rev.join(F.broadcast(top), rev.total_revenue == F.col("_max_rev"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == supp.s_suppkey)
+        rev.join(top, rev.total_revenue == F.col("_max_rev"))
+        .join(supp, F.col("l_suppkey") == supp.s_suppkey)
         .select("s_suppkey", "s_name", "total_revenue")
     )
 
@@ -998,7 +1004,7 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = t(spark, sf_dir, "part").filter(
         (F.col("p_brand") == "Brand#3") & (F.col("p_size") < 15)
     )
-    pa = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+    pa = li.join(part, li.l_partkey == part.p_partkey)
     avgq = pa.groupBy(F.col("l_partkey").alias("_pk")).agg(
         (
             F.sum(F.col("l_quantity").cast("decimal(12,2)")).cast("double")
@@ -1089,7 +1095,7 @@ WHERE rn <= 100
 # ---------------------------------------------------------------------------
 # q19 disjunctive predicates (P4 OR-of-conjunctions): three (brand, size,
 # quantity) windows OR'd together — the predicate-pushdown stress test.
-# Part side broadcasts pre-filtered to the union of brands.
+# Part side is pre-filtered to the union of brands (broadcast by size).
 # ---------------------------------------------------------------------------
 
 
@@ -1124,7 +1130,7 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .filter(cond)
         .agg(F.sum(vol).cast("double").alias("revenue"))
     )
@@ -1175,7 +1181,7 @@ def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_os.l_orderkey == F.col("_ok"),
     )
     return (
-        qual.join(F.broadcast(supp), qual.l_suppkey == supp.s_suppkey)
+        qual.join(supp, qual.l_suppkey == supp.s_suppkey)
         .groupBy("s_name")
         .agg(F.count("*").alias("numwait"))
         .orderBy(F.col("numwait").desc(), F.col("s_name"))
@@ -1224,14 +1230,14 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would be vacuous)
     orders = t(spark, sf_dir, "orders").filter(F.col("o_orderdate") >= "1999-01-01")
     nat = t(spark, sf_dir, "nation").filter(F.col("n_name").isin(_Q22_NATIONS))
-    cust_n = cust.join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
+    cust_n = cust.join(nat, cust.c_nationkey == nat.n_nationkey)
     avgbal = cust_n.filter(F.col("c_acctbal") > 0).agg(
         (
             F.sum(F.col("c_acctbal").cast("decimal(12,2)")).cast("double")
             / F.count("c_acctbal")
         ).alias("_avg_bal")
     )
-    wealthy = cust_n.join(F.broadcast(avgbal)).filter(
+    wealthy = cust_n.join(avgbal).filter(
         F.col("c_acctbal") > F.col("_avg_bal")
     )
     idle = wealthy.join(orders, wealthy.c_custkey == orders.o_custkey, "left_anti")
@@ -1272,7 +1278,7 @@ def q_unpivot_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = t(spark, sf_dir, "customer")
     nat = t(spark, sf_dir, "nation")
     wide = (
-        cust.join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
+        cust.join(nat, cust.c_nationkey == nat.n_nationkey)
         .groupBy("n_name")
         .agg(
             F.count("*").cast("double").alias("n_customers"),
@@ -1867,7 +1873,10 @@ GROUP BY c_mktsegment
 # (SURVEY.md §2.3 J2/W1).
 #
 # Scale: lineitem is the only big table — one groupBy shuffle on
-# (partkey, suppkey); part/supplier/nation/region all broadcast; the
+# (partkey, suppkey); part/supplier/nation/region all broadcast (the
+# supplier x nation x region chain through ``broadcast_gate``: Catalyst
+# multiplies a join chain's input sizes, so its estimate clears the
+# threshold although the chain is one region's suppliers); the
 # per-part window re-uses the partkey hash partitioning (no extra
 # exchange beyond the window sort).
 # ---------------------------------------------------------------------------
@@ -1882,13 +1891,13 @@ def q02_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     nat = t(spark, sf_dir, "nation")
     reg = t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     sup_eu = (
-        supp.join(F.broadcast(nat), supp.s_nationkey == nat.n_nationkey)
-        .join(F.broadcast(reg), nat.n_regionkey == reg.r_regionkey)
+        supp.join(nat, supp.s_nationkey == nat.n_nationkey)
+        .join(reg, nat.n_regionkey == reg.r_regionkey)
         .select("s_suppkey", "s_name", "s_acctbal", "n_name")
     )
     cost = (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(F.broadcast(sup_eu), li.l_suppkey == F.col("s_suppkey"))
+        li.join(part, li.l_partkey == part.p_partkey)
+        .join(broadcast_gate(spark)(sup_eu), li.l_suppkey == F.col("s_suppkey"))
         .groupBy("l_partkey", "p_name", "l_suppkey", "s_name", "s_acctbal", "n_name")
         .agg(
             (
@@ -1945,7 +1954,9 @@ WHERE rk <= 100
 # ASIA-region suppliers, keeping parts above 0.1% of the regional total.
 # The global scalar is a 1-row broadcast cross-join, never a collect.
 #
-# Scale: one groupBy(partkey) shuffle over the filtered lineitem; the
+# Scale: the ASIA supplier chain broadcasts through ``broadcast_gate``
+# (a join chain's estimate multiplies its inputs, see q02); one
+# groupBy(partkey) shuffle over the filtered lineitem; the
 # grand total re-aggregates the small per-part result (second shuffle is
 # over |parts| rows, not |lineitem|); threshold compare is map-side.
 # ---------------------------------------------------------------------------
@@ -1957,8 +1968,8 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     nat = t(spark, sf_dir, "nation")
     reg = t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     sup_asia = (
-        supp.join(F.broadcast(nat), supp.s_nationkey == nat.n_nationkey)
-        .join(F.broadcast(reg), nat.n_regionkey == reg.r_regionkey)
+        supp.join(nat, supp.s_nationkey == nat.n_nationkey)
+        .join(reg, nat.n_regionkey == reg.r_regionkey)
         .select("s_suppkey")
     )
     vol = F.col("l_extendedprice").cast("decimal(12,2)") * (
@@ -1975,7 +1986,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows once costs one small job and halves the big-table work —
     # the decisive trade at 100 TB where lineitem is the 100 TB.
     per_part_dec = (
-        li.join(F.broadcast(sup_asia), li.l_suppkey == F.col("s_suppkey"))
+        li.join(broadcast_gate(spark)(sup_asia), li.l_suppkey == F.col("s_suppkey"))
         .groupBy(F.col("l_partkey").alias("p_partkey"))
         .agg(F.sum(vol).alias("_value_dec"))
         .transform(checkpoint)
@@ -1987,7 +1998,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p_partkey", F.col("_value_dec").cast("double").alias("value")
     )
     return (
-        per_part.crossJoin(F.broadcast(total))
+        per_part.crossJoin(total)
         .filter(F.col("value") > F.lit(0.001) * F.col("_total"))
         .select("p_partkey", "value")
         .orderBy(F.desc("value"), F.asc("p_partkey"))
@@ -2021,8 +2032,8 @@ ORDER BY value DESC, p_partkey
 # suppliers in deficit, s_acctbal < 0): distinct supplier counts per
 # (brand, type, size) for selected sizes, excluding Brand#5 and PROMO.
 #
-# Scale: broadcast the part filter and the (tiny) deficit-supplier
-# denylist as a left-anti join; count_distinct runs as the standard
+# Scale: the part filter and the (tiny) deficit-supplier denylist (a
+# left-anti join) broadcast by size; count_distinct runs as the standard
 # two-level partial-distinct aggregate — one shuffle on the group key.
 # ---------------------------------------------------------------------------
 
@@ -2040,10 +2051,8 @@ def q16_supplier_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s_suppkey"
     )
     return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(
-            F.broadcast(deficit), li.l_suppkey == F.col("s_suppkey"), "left_anti"
-        )
+        li.join(part, li.l_partkey == part.p_partkey)
+        .join(deficit, li.l_suppkey == F.col("s_suppkey"), "left_anti")
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.count_distinct("l_suppkey").alias("supplier_cnt"))
         .orderBy(
@@ -2074,7 +2083,9 @@ ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
 #
 # Scale: one (partkey, suppkey) groupBy shuffle on the date+name-pruned
 # lineitem; the per-part total re-aggregates that small result; the
-# region filter broadcasts. DISTINCT output is over ≤|suppliers| rows.
+# region-filtered supplier chain broadcasts through ``broadcast_gate`` (a
+# join chain's estimate multiplies its inputs, see q02). DISTINCT output
+# is over ≤|suppliers| rows.
 # ---------------------------------------------------------------------------
 
 
@@ -2087,8 +2098,8 @@ def q20_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     nat = t(spark, sf_dir, "nation")
     reg = t(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
     sup_am = (
-        supp.join(F.broadcast(nat), supp.s_nationkey == nat.n_nationkey)
-        .join(F.broadcast(reg), nat.n_regionkey == reg.r_regionkey)
+        supp.join(nat, supp.s_nationkey == nat.n_nationkey)
+        .join(reg, nat.n_regionkey == reg.r_regionkey)
         .select("s_suppkey", "s_name", "n_name")
     )
     # Exact DECIMAL carried through both aggregation levels; doubles
@@ -2097,7 +2108,7 @@ def q20_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one exchange on the grouped keys, no agg-to-agg self-join (the
     # naive decorrelation costs a SortMergeJoin here).
     per_ps_dec = (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .groupBy("l_partkey", "l_suppkey")
         .agg(F.sum(F.col("l_quantity").cast("decimal(12,2)")).alias("_qty_dec"))
     )
@@ -2109,7 +2120,7 @@ def q20_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         shares.filter(F.col("supp_qty") > F.lit(0.5) * F.col("part_qty"))
-        .join(F.broadcast(sup_am), shares.l_suppkey == F.col("s_suppkey"))
+        .join(broadcast_gate(spark)(sup_am), shares.l_suppkey == F.col("s_suppkey"))
         .select("s_name", "n_name")
         .distinct()
         .orderBy("s_name")
@@ -2194,7 +2205,7 @@ def cosupply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum("cnt").cast("double") / F.count("*")).alias("_mean")
     )
     return (
-        pairs.crossJoin(F.broadcast(mean_w))
+        pairs.crossJoin(mean_w)
         .filter(F.col("cnt").cast("double") > F.lit(1.05) * F.col("_mean"))
         .select(F.col("s1").alias("src"), F.col("s2").alias("dst"))
     )
@@ -2628,7 +2639,9 @@ ORDER BY digit
 # discipline of the fuzzy-linkage join. TPC-H baskets are <= 7 items;
 # real carts need the same cap-and-salt treatment as
 # operators/linkage.fuzzy_block_pairs for pathological mega-baskets.
-# The brand-count join is a broadcast (|brands| rows).
+# The brand-count join is a broadcast (|brands| rows) through
+# ``broadcast_gate``: the counts aggregate a checkpoint, which Catalyst
+# sizes as the whole basket table.
 # ---------------------------------------------------------------------------
 
 
@@ -2669,9 +2682,10 @@ def q_copurchase_brands(
     )
     ca = bc.select(F.col("brand").alias("brand_a"), F.col("n_orders").alias("n_a"))
     cb = bc.select(F.col("brand").alias("brand_b"), F.col("n_orders").alias("n_b"))
+    brd = broadcast_gate(spark)
     return (
-        pairs.join(F.broadcast(ca), "brand_a")
-        .join(F.broadcast(cb), "brand_b")
+        pairs.join(brd(ca), "brand_a")
+        .join(brd(cb), "brand_b")
         .select(
             "brand_a", "brand_b", "n_both",
             (F.col("n_both").cast("double")
@@ -2895,7 +2909,7 @@ ORDER BY dist
 # chained left joins against DISTINCT parent keys, then one agg row
 # whose null-counters unpivot into the per-edge report (stack is
 # map-only on a 1-row frame). The dimension parents (nation, region,
-# customer, supplier, part) broadcast; the one big-parent edge
+# customer, supplier, part) broadcast by size; the one big-parent edge
 # (lineitem->orders) is a plain shuffled equi-join AQE can re-plan.
 # ---------------------------------------------------------------------------
 
@@ -3434,7 +3448,8 @@ ORDER BY l_returnflag
 # Envelope: per-row x*y <= ~2.5e12, summed ~1e15 at sf0.1 — inside the
 # probed 2^64 cast bound through ~100x; past it, coarsen y to dollars.
 #
-# Scale: one broadcast join, two partial-aggregating groupBys (to
+# Scale: one join (customer broadcast by size), two partial-aggregating
+# groupBys (to
 # |segments| x |days|, then |segments|). No windows at all.
 # ---------------------------------------------------------------------------
 
@@ -3443,7 +3458,7 @@ def q_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = t(spark, sf_dir, "orders")
     cust = t(spark, sf_dir, "customer")
     daily = (
-        orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
+        orders.join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy(
             "c_mktsegment",
             F.datediff(

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..core.catalog import GOLD_TABLES
+from ..core.session import broadcast_gate
 from ..pipelines.gold import build_trip_fact
 from ..storage.lakehouse import Lakehouse
 
@@ -50,7 +51,7 @@ def start_incremental_trip_fact(
         if touched.isEmpty():
             return
         full_events = spark.read.parquet(silver_trip_events_path)
-        scoped = full_events.join(F.broadcast(touched), "trip_id", "inner")
+        scoped = full_events.join(broadcast_gate(spark)(touched), "trip_id", "inner")
         fact = build_trip_fact(scoped, eater_silver, merchant_silver, dim_location)
         lake.upsert(
             "trip_fact",
