@@ -106,7 +106,7 @@ def test_bucketed_join_eliminates_shuffle(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS bkt_right")
 
 
-def test_vacuum_removes_only_aged_trash(spark, tmp_path):
+def test_vacuum_removes_only_aged_orphan_versions(spark, tmp_path):
     import os
     import time
 
@@ -116,23 +116,47 @@ def test_vacuum_removes_only_aged_trash(spark, tmp_path):
     lake = Lakehouse(spark, str(tmp_path))
     df = spark.range(10).withColumnRenamed("id", "k")
     lake.overwrite("tbl", df)
-    # _swap removes its trash on success — simulate the crash case where
-    # the rename-aside survived but cleanup never ran
-    trash = [".trash-tbl-deadbeef", ".trash-tbl-cafebabe"]
-    for t in trash:
+    live = os.path.join(tmp_path, os.readlink(lake.path("tbl")))
+    # a commit deletes the version it supersedes — simulate the crash
+    # case where a version was left behind unreferenced
+    orphans = [".v-tbl-deadbeef", ".v-tbl-cafebabe"]
+    for t in orphans:
         os.makedirs(os.path.join(tmp_path, t))
         with open(os.path.join(tmp_path, t, "part-0.parquet"), "w") as f:
             f.write("x")
-    # young trash survives the default retention
+    # young orphans survive the default retention
     assert vacuum(lake) == []
-    # age one dir artificially; only it is removed
-    aged = os.path.join(tmp_path, trash[0])
-    os.utime(aged, (time.time() - 8 * 86400, time.time() - 8 * 86400))
+    # age one orphan and the live version artificially; only the orphan
+    # is removed — the version the table link points at never is
+    aged = os.path.join(tmp_path, orphans[0])
+    for d in (aged, live):
+        os.utime(d, (time.time() - 8 * 86400, time.time() - 8 * 86400))
     removed = vacuum(lake)
     assert removed == [aged]
     assert not os.path.exists(aged)
+    assert os.path.isdir(live) and os.path.isdir(os.path.join(tmp_path, orphans[1]))
     # the table itself is untouched and readable
     assert lake.read("tbl").count() == 10
+
+
+def test_failed_meta_write_keeps_the_old_properties(spark, tmp_path, monkeypatch):
+    """The sidecar meta is replaced atomically: a write that dies
+    mid-``json.dump`` leaves the previous properties readable."""
+    from ubeardw_databricks_lakehouse_spark.storage import lakehouse as lh
+
+    lake = lh.Lakehouse(spark, str(tmp_path))
+    lake.overwrite("t", spark.range(3), meta={"last_batch_id": 4})
+
+    def broken_dump(obj, f):
+        f.write('{"last_')
+        raise OSError("disk full")
+
+    monkeypatch.setattr(lh.json, "dump", broken_dump)
+    with pytest.raises(OSError):
+        lake.set_auto_compact("t", max_files=8)
+    monkeypatch.undo()
+    assert lake.read_table_meta("t") == {"last_batch_id": 4}
+    assert lake.read("t").count() == 3
 
 
 def test_partitioned_read_prunes_partitions(spark, tmp_path):

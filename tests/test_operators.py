@@ -124,7 +124,7 @@ def test_upsert_guarded_update(spark, tmp_path):
 
 def test_upsert_partition_pruned_rewrites_only_touched(spark, tmp_path):
     """Bucket-partitioned MERGE (pcols <= keys): only the buckets the
-    source touches are read and swapped; untouched bucket directories
+    source touches are read and rewritten; untouched bucket directories
     keep their exact files, and semantics equal the full rewrite."""
     import os
 
@@ -295,7 +295,167 @@ def test_overwrite_never_loses_the_table(spark, tmp_path, rewrite, raises, expec
     with pytest.raises(Exception) if raises else contextlib.nullcontext():
         lake.overwrite("t", rewrite(lake.read("t")))
     assert sorted(r.id for r in lake.read("t").collect()) == list(expect)
-    assert not [d for d in os.listdir(tmp_path) if d.startswith((".tmp-", ".trash-"))]
+    # the lake root holds the table link and exactly its live version:
+    # no failed or superseded version, no temp link
+    live = os.readlink(lake.path("t"))
+    assert live.startswith(".v-t-") and sorted(os.listdir(tmp_path)) == [live, "t"]
+
+
+class _FaultyModule:
+    """Stands in for ``os`` or ``shutil`` inside ``storage.lakehouse``:
+    logs every call of the commit's filesystem functions and raises on
+    the ``fail = (function, n)``-th one."""
+
+    CALLS = ("os.rename", "os.replace", "os.symlink", "os.link", "shutil.rmtree")
+
+    def __init__(self, module, log, fail=None):
+        self._module, self._log, self._fail = module, log, fail
+
+    def __getattr__(self, attr):
+        fn = getattr(self._module, attr)
+        key = f"{self._module.__name__}.{attr}"
+        if key not in self.CALLS:
+            return fn
+
+        def call(*a, **kw):
+            self._log.append(key)
+            if self._fail == (key, self._log.count(key)):
+                raise OSError(f"injected failure of call {self._fail}")
+            return fn(*a, **kw)
+
+        return call
+
+
+def _faulty_lakehouse_fs(monkeypatch, fail=None) -> list[str]:
+    import os
+    import shutil
+
+    from ubeardw_databricks_lakehouse_spark.storage import lakehouse as lh
+
+    log: list[str] = []
+    monkeypatch.setattr(lh, "os", _FaultyModule(os, log, fail))
+    monkeypatch.setattr(lh, "shutil", _FaultyModule(shutil, log, fail))
+    return log
+
+
+def _crash_points(log: list[str]) -> list[tuple[str, int]]:
+    """The first and the last call of every function in ``log``."""
+    return sorted({(k, n) for k in set(log) for n in (1, log.count(k))})
+
+
+@pytest.mark.parametrize("pruned", [False, True], ids=["full", "pruned"])
+def test_upsert_crash_at_any_commit_call_keeps_the_table(spark, tmp_path, pruned):
+    """A MERGE whose commit dies at the first or the last call of any
+    filesystem function it makes leaves the table present with exactly
+    its old rows or exactly its merged rows, and a clean retry leaves
+    the old rows the source does not touch plus every source row. Both
+    a full-table rewrite and a partition-pruned rewrite (bucket column
+    in the keys, one bucket touched) are covered."""
+    def bucketed(df):
+        return df.withColumn("b", F.pmod(F.xxhash64("k"), F.lit(4)).cast("int"))
+
+    base = bucketed(spark.range(100).select(F.col("id").alias("k"), F.lit("old").alias("v")))
+    updated = [r.k for r in base.where("b = 0").limit(3).collect()]
+    inserted = [
+        r.k for r in bucketed(spark.range(100, 200).withColumnRenamed("id", "k"))
+        .where("b = 0").limit(2).collect()
+    ]
+    src = bucketed(
+        spark.createDataFrame([(k, "new") for k in updated + inserted], "k long, v string")
+    )
+    old = {(r.k, r.v, r.b) for r in base.collect()}
+    merged = {row for row in old if row[0] not in updated} | {
+        (r.k, r.v, r.b) for r in src.collect()
+    }
+    keys, partition_by = (["b", "k"], ["b"]) if pruned else (["k"], None)
+
+    def merge(lake, fail=None):
+        with pytest.MonkeyPatch.context() as mp:
+            log = _faulty_lakehouse_fs(mp, fail)
+            lake.upsert("t", src, keys=keys)
+        return log
+
+    def fresh(case):
+        lake = Lakehouse(spark, str(tmp_path / case))
+        lake.overwrite("t", base, partition_by=partition_by)
+        return lake
+
+    def rows(lake):
+        return {(r.k, r.v, r.b) for r in lake.read("t").collect()}
+
+    clean = fresh("clean")
+    log = merge(clean)
+    assert rows(clean) == merged
+    for fn, n in _crash_points(log):
+        lake = fresh(f"{fn}-{n}")
+        with pytest.raises(OSError, match="injected"):
+            merge(lake, fail=(fn, n))
+        assert lake.exists("t"), (fn, n)
+        assert rows(lake) in (old, merged), (fn, n)
+        merge(lake)
+        assert rows(lake) == merged, (fn, n)
+    # the pruned commit carried the untouched buckets by hard link
+    assert ("os.link" in log) == pruned and "os.replace" in log
+
+
+def test_commit_survives_a_crash_at_every_call(tmp_path, monkeypatch):
+    """The commit is pure filesystem work, so every call index of the
+    clone (``_link_untouched``) and flip (``Lakehouse._commit``) helpers
+    is failed in turn over a plain-file table: the table always holds
+    exactly its old or exactly its new files, a clean retry commits the
+    new ones, and ``vacuum`` then leaves only the live version."""
+    import os
+    import uuid
+
+    from ubeardw_databricks_lakehouse_spark.maintenance.optimize import vacuum
+    from ubeardw_databricks_lakehouse_spark.storage import lakehouse as lh
+
+    old = {"b=0/p0.parquet": "o0", "b=1/p1.parquet": "o1", "b=2/p2.parquet": "o2",
+           "_graft_meta.json": "{}"}
+    touched = {"b=1/p9.parquet": "n1", "_graft_meta.json": "{}"}
+    new = {**{k: v for k, v in old.items() if not k.startswith("b=1/")}, **touched}
+
+    def version(root, files):
+        d = os.path.join(root, f".v-t-{uuid.uuid4().hex[:8]}")
+        for rel, body in files.items():
+            os.makedirs(os.path.dirname(os.path.join(d, rel)), exist_ok=True)
+            with open(os.path.join(d, rel), "w") as f:
+                f.write(body)
+        return d
+
+    def table(lake):
+        out = {}
+        for dirpath, _d, files in os.walk(lake.path("t")):
+            for fn in files:
+                with open(os.path.join(dirpath, fn)) as f:
+                    out[os.path.relpath(os.path.join(dirpath, fn), lake.path("t"))] = f.read()
+        return out
+
+    def commit(lake, fail=None):
+        with pytest.MonkeyPatch.context() as mp:
+            log = _faulty_lakehouse_fs(mp, fail)
+            v = version(lake.root, touched)
+            lh._link_untouched(lake.path("t"), v)
+            lake._commit("t", v)
+        return log
+
+    def fresh(case):
+        lake = Lakehouse(None, str(tmp_path / case))
+        lake._commit("t", version(lake.root, old))
+        return lake
+
+    log = commit(fresh("clean"))
+    assert {"os.symlink", "os.replace", "os.link", "shutil.rmtree"} <= set(log)
+    for fn in set(log):
+        for n in range(1, log.count(fn) + 1):
+            lake = fresh(f"{fn}-{n}")
+            with pytest.raises(OSError, match="injected"):
+                commit(lake, fail=(fn, n))
+            assert table(lake) in (old, new), (fn, n)
+            commit(lake)
+            assert table(lake) == new, (fn, n)
+            vacuum(lake, retention_hours=0)
+            assert sorted(os.listdir(lake.root)) == [os.readlink(lake.path("t")), "t"]
 
 
 # ---------------------------------------------------------------------------

@@ -107,18 +107,20 @@ def analyze_table(lake: Lakehouse, table: str) -> None:
 
 
 def vacuum(lake: Lakehouse, retention_hours: float = 168.0) -> list[str]:
-    """Remove aged swap-trash directories (VACUUM parity).
+    """Remove aged table versions that no table points at (VACUUM parity).
 
-    The parquet backend's crash-safe full-table swap renames the previous
-    table directory to ``.trash-<table>-<uuid>`` before promoting the
-    new write (storage/lakehouse.py) — the analogue of Delta's
-    unreferenced files. VACUUM deletes trash older than the retention
-    window; on the delta backend it would defer to ``VACUUM table``
-    (reference: utils/optimize_tables.py maintenance job family).
+    On the parquet backend ``<root>/<name>`` is a link to the table's live
+    version directory ``.v-<name>-<uuid>`` (storage/lakehouse.py). A
+    commit that dies before its flip leaves its new version behind; one
+    that dies after the flip leaves the superseded version — the
+    analogue of Delta's unreferenced files. VACUUM deletes those
+    leftovers once they are older than the retention window; the version
+    a table link points at is never removed, whatever its age. On the
+    delta backend it defers to ``VACUUM table`` (reference:
+    utils/optimize_tables.py maintenance job family).
 
-    Returns the paths removed. Retention guards concurrent readers
-    still holding the old directory open — same contract as Delta's
-    default 7-day retention.
+    Returns the paths removed. Retention guards a commit still writing
+    its version — the same contract as Delta's default 7-day retention.
     """
     import shutil
     import time
@@ -134,11 +136,13 @@ def vacuum(lake: Lakehouse, retention_hours: float = 168.0) -> list[str]:
             removed.append(lake.path(entry))
         return removed
     cutoff = time.time() - retention_hours * 3600.0
+    entries = sorted(os.listdir(lake.root))
+    live = {os.readlink(lake.path(e)) for e in entries if os.path.islink(lake.path(e))}
     removed = []
-    for entry in sorted(os.listdir(lake.root)):
-        if not entry.startswith(".trash-"):
-            continue
+    for entry in entries:
         full = os.path.join(lake.root, entry)
+        if not entry.startswith(".v-") or entry in live:
+            continue
         if os.path.getmtime(full) <= cutoff:
             shutil.rmtree(full, ignore_errors=True)
             removed.append(full)

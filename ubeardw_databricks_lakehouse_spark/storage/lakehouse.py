@@ -8,16 +8,23 @@ API over two backends:
 - **delta** (used automatically when the ``delta-spark`` package is
   importable): native ``DeltaTable.merge`` — ACID, file-skipping,
   OPTIMIZE-able. This is the backend a real cluster runs.
-- **parquet** (fallback for this container, which has no delta-spark):
+- **parquet** (fallback when delta-spark is not installed):
   the same logical semantics computed as DataFrame joins and committed
-  by directory swap. Correctness-equivalent for a single writer, which
-  is what the tests and the bench exercise.
+  by a link flip. Correctness-equivalent for a single writer, which is
+  what the tests and the bench exercise.
 
 Every commit goes through this class: callers use ``overwrite``,
 ``append`` and ``upsert`` and never pick a backend protocol. On parquet
-every full-table rewrite is one staged write renamed into place
-(``_swap``), so a failed job or a self-reading rewrite never loses the
-live table.
+a table ``<root>/<name>`` is a symlink to its live version directory
+``<root>/.v-<name>-<uuid>``. Every rewrite, and the creation of a
+missing table, writes a complete new version and makes it live with one
+``os.replace`` of a fresh link over ``<root>/<name>`` (``_commit``);
+the superseded version is deleted after the flip. A crash before the
+flip leaves the old table, a crash after it the new one, and the only
+leftover is an unreferenced version (``maintenance.optimize.vacuum``
+removes it). A failed job or a self-reading rewrite never touches the
+live version. Appends to an existing table write into the live version
+through the link.
 
 Scale notes: ``upsert`` is a key-equi join — when the table is
 partitioned on a subset of the merge keys, the parquet fallback reads
@@ -117,28 +124,30 @@ class Lakehouse:
         partition_by: list[str] | None = None,
         meta: dict | None = None,
     ) -> None:
-        """Full-table rewrite. On parquet it commits as one swap: ``df``
-        is written into a staging directory, then the live directory is
-        renamed aside and the staged one renamed into place (Delta
-        writes in place, atomic through its log, unless sidecar
-        metadata is involved). A job that fails
-        leaves the old table intact, and ``df`` may read the table it
-        replaces. With ``meta`` set, the metadata file is written into
-        the staging directory before the rename, so table data and
-        metadata commit together — the parquet twin of Delta's
-        txnAppId/txnVersion transaction tags (the idempotent-foreachBatch
-        pattern). Without meta, existing sidecar properties carry
-        forward (auto-compact thresholds survive INSERT OVERWRITE,
-        matching Delta's table-property semantics)."""
+        """Full-table rewrite. On parquet ``df`` is written as a new
+        version and committed by the link flip. A job that fails leaves
+        the old table intact, and ``df`` may read the table it replaces.
+        With ``meta`` set, the metadata file is written into the new
+        version before the flip, so table data and metadata commit
+        together — the parquet twin of Delta's txnAppId/txnVersion
+        transaction tags (the idempotent-foreachBatch pattern). Without
+        meta, existing sidecar properties carry forward (auto-compact
+        thresholds survive INSERT OVERWRITE, matching Delta's
+        table-property semantics).
+
+        Delta writes in place, atomic through its log; ``meta`` is
+        replaced in the table directory after that commit, so a crash
+        between the two leaves new data under the old metadata."""
         if self.fmt == "delta":  # pragma: no cover - delta not in container
-            if meta is None and not self.read_table_meta(name):
-                writer = df.write.format(self.fmt).mode("overwrite")
-                if partition_by:
-                    writer = writer.partitionBy(*partition_by)
-                    self._partitioning[name] = partition_by
-                writer.save(self.path(name))
-                return
-        self._swap(name, df, partition_by, meta=meta)
+            writer = df.write.format(self.fmt).mode("overwrite")
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+                self._partitioning[name] = partition_by
+            writer.save(self.path(name))
+            if meta is not None:
+                _write_meta(self.path(name), meta)
+            return
+        self._rewrite(name, df, partition_by, meta=meta)
 
     def append(
         self,
@@ -159,34 +168,35 @@ class Lakehouse:
         Cost note: the check reads ONE file footer (delta: the log) —
         never a mergeSchema scan of every file; only when that sample
         lacks a column (a pre-evolution file) does it fall back to the
-        merged-schema read to confirm."""
-        if self.exists(name):
-            sampled = {
-                f.name: f.dataType for f in self.read(name).schema.fields
-            }
-            new_fields = {f.name: f.dataType for f in df.schema.fields}
-            clash = sorted(
-                c
-                for c, t in new_fields.items()
-                if c in sampled and sampled[c] != t
+        merged-schema read to confirm.
+
+        A missing table is created by ``overwrite``, so on parquet it
+        goes through the commit like any rewrite and ``path(name)`` is
+        always the table link."""
+        if not self.exists(name):
+            self.overwrite(name, df, partition_by)
+            return
+        sampled = {f.name: f.dataType for f in self.read(name).schema.fields}
+        new_fields = {f.name: f.dataType for f in df.schema.fields}
+        clash = sorted(
+            c for c, t in new_fields.items() if c in sampled and sampled[c] != t
+        )
+        if clash:
+            raise ValueError(
+                f"append to {name!r} changes column types for "
+                f"{clash}; rewrite the table instead"
             )
-            if clash:
-                raise ValueError(
-                    f"append to {name!r} changes column types for "
-                    f"{clash}; rewrite the table instead"
-                )
-            extra = set(new_fields) - set(sampled)
-            if extra:
-                merged = {
-                    f.name
-                    for f in self.read(name, merge_schema=True).schema.fields
-                }
-                extra = set(new_fields) - merged
-            if extra and not merge_schema:
-                raise ValueError(
-                    f"append to {name!r} adds columns {sorted(extra)}; "
-                    "schema evolution requires merge_schema=True"
-                )
+        extra = set(new_fields) - set(sampled)
+        if extra:
+            merged = {
+                f.name for f in self.read(name, merge_schema=True).schema.fields
+            }
+            extra = set(new_fields) - merged
+        if extra and not merge_schema:
+            raise ValueError(
+                f"append to {name!r} adds columns {sorted(extra)}; "
+                "schema evolution requires merge_schema=True"
+            )
         partition_by = partition_by or self.partitioning(name)
         df = self._maybe_optimize_write(name, df, partition_by)
         writer = df.write.format(self.fmt).mode("append")
@@ -243,9 +253,7 @@ class Lakehouse:
     def _update_meta(self, name: str, **props) -> None:
         """Read-modify-write of the sidecar meta: set ``props``, keep
         every other key."""
-        meta = {**self.read_table_meta(name), **props}
-        with open(os.path.join(self.path(name), "_graft_meta.json"), "w") as f:
-            json.dump(meta, f)
+        _write_meta(self.path(name), {**self.read_table_meta(name), **props})
 
     def _maybe_optimize_write(
         self, name: str, df: DataFrame, partition_by: list[str] | None
@@ -334,9 +342,9 @@ class Lakehouse:
         partitioned and every partition column is also a merge KEY
         (``pcols <= keys`` — e.g. a ``pmod(xxhash64(key), B)`` bucket
         column carried in both source and keys), the parquet fallback
-        reads ONLY the partitions the source touches, merges, and swaps
-        ONLY those directories: the per-batch MERGE term is O(touched
-        partitions), not O(table) — the twin of Delta MERGE's
+        reads ONLY the partitions the source touches, merges, and writes
+        ONLY those directories: the bytes a batch reads and writes are
+        O(touched partitions), not O(table) — the twin of Delta MERGE's
         file-pruning (reference: pipelines/gold_pipeline.py:789-796 is
         the pruned MERGE being twinned). The ``pcols <= keys`` gate is
         what makes pruning SAFE: a matched target row necessarily lives
@@ -345,14 +353,15 @@ class Lakehouse:
         hashed rows touch ``B*(1-(1-1/B)^delta_rows)`` of ``B`` buckets
         — real wins need ``delta_rows`` below ``B`` (at 100 TB, B is
         sized to ~128 MB buckets, i.e. large). An unpartitioned table
-        (or one failing the gate) takes the full-table rewrite. Crash
-        note: the pruned swap promotes per-partition (each directory
-        individually trash-aside-renamed), so a mid-swap crash leaves a
-        mix of old/new partitions — safe under this module's MERGE
-        contract (replayed MERGEs are idempotent), unlike a torn
-        ARBITRARY write; schema evolution always falls back to the full
-        rewrite (untouched partitions must be rewritten to carry new
-        columns).
+        (or one failing the gate) takes the full-table rewrite. The
+        pruned rewrite commits like any other: the new version is the
+        touched partitions Spark wrote plus a hard link (``os.link``)
+        to every file of the untouched partitions, so bytes written stay
+        O(touched) while the filesystem metadata calls (a directory
+        walk, one link per untouched file, one unlink per file when the
+        superseded version is deleted) are O(table files).
+        Schema evolution always falls back to the full rewrite
+        (untouched partitions must be rewritten to carry new columns).
 
         **Insert-only fast path.** Within the pruned path, if NO source
         key matches a row in the touched partitions (one semi-join
@@ -487,10 +496,7 @@ class Lakehouse:
                     .alias(c)
                 )
         merged = joined.select(*out_cols)
-        if pruned:
-            self._swap_partitions(name, merged, pcols)
-        else:
-            self._swap(name, merged, partition_by)
+        self._rewrite(name, merged, pcols if pruned else partition_by, pruned=pruned)
 
     def update_where(
         self, name: str, condition: str, set_map: dict[str, str]
@@ -513,101 +519,105 @@ class Lakehouse:
                 for c in df.columns
             ]
         )
-        self._swap(name, out)
+        self._rewrite(name, out)
 
     def delete_where(self, name: str, condition: str) -> None:
+        """DELETE FROM t WHERE cond."""
+        if self.fmt == "delta":  # pragma: no cover
+            from delta.tables import DeltaTable
+
+            DeltaTable.forPath(self.spark, self.path(name)).delete(condition)
+            return
         df = self.read(name).where(~F.expr(condition))
-        self._swap(name, df)
+        self._rewrite(name, df)
 
-    def _swap_partitions(
-        self, name: str, df: DataFrame, pcols: list[str]
-    ) -> None:
-        """Commit a rewrite of ONLY the partitions present in ``df``.
-
-        ``df`` is written partitioned into a staging directory; each
-        leaf partition directory it produced is then trash-aside
-        renamed over the live table's same directory (created if new).
-        Partitions absent from ``df`` are never read or touched — the
-        O(touched) half of the pruned-MERGE contract. Leaf directory
-        names come from Spark's own partitioned write (value escaping
-        included), never re-derived by hand. Root sidecar meta and
-        untouched partitions are left as-is. Each directory promote is
-        atomic; the set of promotes is not — see ``upsert``'s crash
-        note (idempotent-MERGE replay contract)."""
-        tmp = os.path.join(self.root, f".tmp-{name}-{uuid.uuid4().hex[:8]}")
-        # one file per partition directory (optimizeWrite shape): a
-        # plain partitioned write would emit one file per (task x dir)
-        df.repartition(*pcols).write.format(self.fmt).mode(
-            "overwrite"
-        ).partitionBy(*pcols).save(tmp)
-        final = self.path(name)
-        trashes: list[str] = []
-        # leaf partition dirs, relative to tmp (depth == len(pcols))
-        def leaves(d: str, depth: int) -> list[str]:
-            if depth == 0:
-                return [d]
-            out: list[str] = []
-            for sub in os.listdir(d):
-                p = os.path.join(d, sub)
-                if "=" in sub and os.path.isdir(p):
-                    out.extend(leaves(p, depth - 1))
-            return out
-        for leaf in leaves(tmp, len(pcols)):
-            rel = os.path.relpath(leaf, tmp)
-            dst = os.path.join(final, rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            if os.path.isdir(dst):
-                trash = os.path.join(
-                    self.root, f".trash-{name}-{uuid.uuid4().hex[:8]}"
-                )
-                os.rename(dst, trash)
-                trashes.append(trash)
-            os.rename(leaf, dst)
-        shutil.rmtree(tmp)
-        for trash in trashes:
-            shutil.rmtree(trash)
-
-    def _swap(
+    def _rewrite(
         self,
         name: str,
         df: DataFrame,
         partition_by: list[str] | None = None,
         meta: dict | None = None,
+        pruned: bool = False,
     ) -> None:
-        """Commit a full-table rewrite atomically-enough for local use.
+        """Write ``df`` as a complete new version of ``name`` and commit it.
 
         With ``meta=None`` the EXISTING sidecar metadata is carried
         forward — table properties (auto-compact thresholds, refresh
         watermarks) survive maintenance rewrites; pass a dict to
-        replace it."""
+        replace it. ``pruned=True`` means ``df`` holds only the
+        partitions it rewrites: each lands as one file per directory
+        (the optimizeWrite shape) and the live version's other
+        partitions are hard-linked in. Parquet only: a delta table is
+        a real directory committed through its own log."""
+        assert self.fmt != "delta"
         if meta is None:
             meta = self.read_table_meta(name) or None
-        tmp = os.path.join(self.root, f".tmp-{name}-{uuid.uuid4().hex[:8]}")
         if partition_by:
             self._partitioning[name] = partition_by
         partition_by = partition_by or self.partitioning(name)
-        df = self._maybe_optimize_write(name, df, partition_by)
+        if pruned:
+            df = df.repartition(*partition_by)
+        else:
+            df = self._maybe_optimize_write(name, df, partition_by)
         writer = df.write.format(self.fmt).mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
+        version = os.path.join(self.root, f".v-{name}-{uuid.uuid4().hex[:8]}")
         try:
-            writer.save(tmp)
+            writer.save(version)
+            if meta is not None:
+                _write_meta(version, meta)
+            if pruned:
+                _link_untouched(self.path(name), version)
         except BaseException:
-            shutil.rmtree(tmp, ignore_errors=True)
+            shutil.rmtree(version, ignore_errors=True)
             raise
-        if meta is not None:
-            with open(os.path.join(tmp, "_graft_meta.json"), "w") as f:
-                json.dump(meta, f)
+        self._commit(name, version)
+
+    def _commit(self, name: str, version: str) -> None:
+        """Make the version directory ``version`` the live ``name``: one
+        ``os.replace`` of a fresh relative symlink over ``path(name)``,
+        then delete the version it superseded. The link is made inside
+        ``version``, so a crash before the replace leaves the old table
+        and one unreferenced version, and a crash after it the new table
+        and possibly the old version; ``vacuum`` removes either."""
+        link = os.path.join(version, "_link")
+        os.symlink(os.path.basename(version), link)
         final = self.path(name)
-        # rename the live table aside before promoting the new write, so
-        # a crash between the two renames never leaves the table absent;
-        # the trash directory is removed last
-        trash = os.path.join(self.root, f".trash-{name}-{uuid.uuid4().hex[:8]}")
-        if os.path.isdir(final):
-            os.rename(final, trash)
-        os.rename(tmp, final)
-        if os.path.isdir(trash):
-            shutil.rmtree(trash)
+        old = os.readlink(final) if os.path.islink(final) else None
+        os.replace(link, final)
+        if old is not None:
+            shutil.rmtree(os.path.join(self.root, old))
+
+
+def _write_meta(table_dir: str, meta: dict) -> None:
+    """Replace ``table_dir``'s sidecar meta atomically: a temp file in the
+    same directory, then ``os.replace``, so a failed write never leaves a
+    truncated ``_graft_meta.json``."""
+    p = os.path.join(table_dir, "_graft_meta.json")
+    tmp = f"{p}.{uuid.uuid4().hex[:8]}"
+    try:
+        with open(tmp, "w") as f:
+            json.dump(meta, f)
+        os.replace(tmp, p)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
+
+
+def _link_untouched(live: str, version: str) -> None:
+    """Hard-link into ``version`` every file of the live table whose
+    partition directory ``version`` does not have: the partitions a
+    pruned rewrite left alone, with their inode and mtime. Root-level
+    files (``_SUCCESS``, the sidecar meta) belong to the new write."""
+    for dirpath, _dirs, files in os.walk(live):
+        dst = os.path.join(version, os.path.relpath(dirpath, live))
+        if os.path.isdir(dst):  # the root and every touched partition
+            continue
+        os.makedirs(dst)
+        for f in files:
+            os.link(os.path.join(dirpath, f), os.path.join(dst, f))
 
 
 def upsert_with_cdf(

@@ -43,8 +43,9 @@ def stream_metric_view(
     re-applying signed deltas is NOT a no-op — it double-counts. The
     fold is made exactly-once the way Delta's txnAppId/txnVersion
     pattern does it: the last applied batch_id is committed atomically
-    WITH the view (sidecar meta in the same directory swap), and a
-    replayed batch_id <= that ledger is skipped.
+    WITH the view (sidecar meta in the same version commit), and a
+    replayed batch_id <= that ledger is skipped. On the delta backend
+    the meta lands just after the data commit (``Lakehouse.overwrite``).
     """
     cdf_path = lake.path(f"{base_name}__cdf")
     schema = spark.read.parquet(cdf_path).schema
